@@ -27,6 +27,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfdc_cdc_aws_spark.materialize import materialize
 from sfdc_cdc_aws_spark.registry import query
 from sfdc_cdc_aws_spark.operators.text import (
     DUCK_HASH64,
@@ -193,30 +194,23 @@ def minhash_sig_agg_df(d: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_minhash_sigs"
-) -> DataFrame:
+def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus MinHash signatures (see minhash_sig_df), MATERIALIZED
     per source content — the signature fold is the shared expensive
     prefix of the probe / banding / pair / cluster queries, and a
     production dedup pipeline computes signatures once per corpus
-    version, not once per consumer (same fingerprint discipline as
+    version, not once per consumer (materialize.py, like
     ensure_ivf_index and the streaming band index). The fingerprinted
     name makes a corpus refresh rebuild instead of serving stale
     signatures; streaming arrivals still compute theirs inline
     (minhash_sig_df works on unbounded inputs)."""
-    from sfdc_cdc_aws_spark.sources.tables import table_path
 
-    st = os.stat(table_path(sf_dir, "documents"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_v1"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def build(out: str) -> None:
         minhash_sig_agg_df(
             load_table(spark, sf_dir, "documents", widen=True)
-        ).write.mode("overwrite").parquet(out)
+        ).write.parquet(out)
+
+    out = materialize("minhash_sigs", sf_dir, ("documents",), build)
     sigs = spark.read.parquet(out)
     # a small cache lands as one file, and file packing
     # (maxPartitionBytes/openCost) keeps even a multi-file cache in

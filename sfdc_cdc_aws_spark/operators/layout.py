@@ -20,12 +20,10 @@ is far below a single-column-sorted layout's.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sfdc_cdc_aws_spark.operators.sinks import _src_fingerprint
+from sfdc_cdc_aws_spark.materialize import materialize
 from sfdc_cdc_aws_spark.registry import query
 from sfdc_cdc_aws_spark.sources import load_table
 
@@ -62,13 +60,9 @@ def _day(col: str) -> Column:
     return F.datediff(F.col(col), F.lit(EPOCH))
 
 
-def ensure_zorder_layout(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_zorder"
-) -> str:
-    """Materialize the z-ordered copy of orders (idempotent per
-    source content, same fingerprint discipline as the bucketed
-    tables): normalize BOTH dimensions to equal-width rank buckets
-    (raw values interleave badly when the dims have unequal bit
+def ensure_zorder_layout(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the z-ordered copy of orders: normalize BOTH
+    dimensions to equal-width rank buckets (raw values interleave badly when the dims have unequal bit
     widths — the wider dim's high bits dominate the code and the
     layout degenerates to a single-column sort; rank-bucketing is
     what Delta's OPTIMIZE ZORDER does with range_partition_id), take
@@ -82,9 +76,7 @@ def ensure_zorder_layout(
     rank."""
     from pyspark.sql import Window
 
-    tag = f"{os.path.basename(sf_dir.rstrip('/'))}_{_src_fingerprint(sf_dir, ('orders',))}"
-    out = os.path.join(base, tag)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def build(out: str) -> None:
         o = load_table(spark, sf_dir, "orders")
         hi = (1 << Z_BITS) - 1
         xb = F.least(
@@ -104,10 +96,10 @@ def ensure_zorder_layout(
             .repartitionByRange(Z_FILES, "z")
             .sortWithinPartitions("z")
             .drop("z")
-            .write.mode("overwrite")
-            .parquet(out)
+            .write.parquet(out)
         )
-    return out
+
+    return materialize("zorder", sf_dir, ("orders",), build)
 
 
 @query(
@@ -150,11 +142,9 @@ RANGE_FILES = 32
 SHIP_LO, SHIP_HI = "1998-06-01", "1998-09-01"
 
 
-def ensure_range_sorted_layout(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_rangesort"
-) -> str:
-    """Materialize the shipdate-sorted copy of lineitem (idempotent
-    per source content): ``repartitionByRange`` draws file boundaries
+def ensure_range_sorted_layout(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the shipdate-sorted copy of lineitem:
+    ``repartitionByRange`` draws file boundaries
     from a reservoir sample of l_shipdate — the exact mechanism a
     1000-executor job uses, no global window — and
     ``sortWithinPartitions`` makes every file a contiguous date run.
@@ -163,17 +153,16 @@ def ensure_range_sorted_layout(
     bread-and-butter lake layout for event/time-series data; the
     z-order layout above generalizes it to two dimensions at the cost
     of per-dimension precision."""
-    tag = f"{os.path.basename(sf_dir.rstrip('/'))}_{_src_fingerprint(sf_dir, ('lineitem',))}"
-    out = os.path.join(base, tag)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+
+    def build(out: str) -> None:
         (
             load_table(spark, sf_dir, "lineitem")
             .repartitionByRange(RANGE_FILES, "l_shipdate")
             .sortWithinPartitions("l_shipdate")
-            .write.mode("overwrite")
-            .parquet(out)
+            .write.parquet(out)
         )
-    return out
+
+    return materialize("rangesort", sf_dir, ("lineitem",), build)
 
 
 @query(

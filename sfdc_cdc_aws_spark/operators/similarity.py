@@ -26,6 +26,7 @@ from sfdc_cdc_aws_spark.functions.vector import (
     cosine_prenorm,
     norm,
 )
+from sfdc_cdc_aws_spark.materialize import materialize
 from sfdc_cdc_aws_spark.operators.text import BM25_ORACLE
 from sfdc_cdc_aws_spark.registry import QUERIES, query
 from sfdc_cdc_aws_spark.session import truncate_lineage
@@ -124,30 +125,20 @@ assign AS (
 """.strip()
 
 
-def ensure_ivf_index(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_ivf_index"
-) -> DataFrame:
-    """The IVF index as a MATERIALIZED table (idempotent per source
-    content, same fingerprint discipline as the minhash band index,
-    streaming/ingest_dedup.py::ensure_band_index): an IVF index is
-    built once and probed by every subsequent search — recomputing
+def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The IVF index as a MATERIALIZED table (materialize.py, like the
+    minhash band index): an IVF index is built once and probed by
+    every subsequent search — recomputing
     the n×C assignment folds inside each query bills index
     construction to every lookup. At 100 TB the materialized form is
     additionally bucketed on cent_id so probes join without
     shuffling the index; the fingerprinted name makes a corpus
     refresh rebuild it instead of serving stale cells."""
-    import os
 
-    from sfdc_cdc_aws_spark.sources.tables import table_path
+    def build(out: str) -> None:
+        ivf_assignments(spark, sf_dir).write.parquet(out)
 
-    st = os.stat(table_path(sf_dir, "embeddings"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_v1"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        ivf_assignments(spark, sf_dir).write.mode("overwrite").parquet(out)
+    out = materialize("ivf_index", sf_dir, ("embeddings",), build)
     return spark.read.parquet(out)
 
 
@@ -984,36 +975,25 @@ def pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQ_SHORTLIST = 256
 
 
-def ensure_ivfpq_index(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_ivfpq_index"
-) -> DataFrame:
+def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF-PQ index as a MATERIALIZED table: the IVF cell
-    assignment joined with the PQ codes, written once per source
-    fingerprint (same idempotence discipline as
-    :func:`ensure_ivf_index`). This is the posting-list layout a
-    100 TB vector store actually serves — each posting carries the
+    assignment joined with the PQ codes, written once per fixture
+    fingerprint (like :func:`ensure_ivf_index`). This is the
+    posting-list layout a 100 TB vector store actually serves — each
+    posting carries the
     cell id, the 8 fine codes the ADC scan reads, and the raw vector
     the refinement stage re-scores (stored beside the codes here;
     production splits them into scan tier and fetch tier, same plan).
     The corpus-sized assignment⋈codes shuffle is paid at BUILD time,
     never per query."""
-    import os
 
-    from sfdc_cdc_aws_spark.sources.tables import table_path
-
-    st = os.stat(table_path(sf_dir, "embeddings"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_v1"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def build(out: str) -> None:
         codes = pq_assign(spark, sf_dir).select(
             "vec_id", *[f"code{m}" for m in range(PQ_M)]
         )
-        ivf_assignments(spark, sf_dir).join(codes, "vec_id").write.mode(
-            "overwrite"
-        ).parquet(out)
+        ivf_assignments(spark, sf_dir).join(codes, "vec_id").write.parquet(out)
+
+    out = materialize("ivfpq_index", sf_dir, ("embeddings",), build)
     return spark.read.parquet(out)
 
 

@@ -14,11 +14,14 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfdc_cdc_aws_spark.materialize import catalog_fixture, materialize
 from sfdc_cdc_aws_spark.registry import query
+from sfdc_cdc_aws_spark.session import scoped_conf
 from sfdc_cdc_aws_spark.sources import load_table
 from sfdc_cdc_aws_spark.sources.cdc_feed import CHANGES_CTE, changes
 
@@ -71,57 +74,36 @@ def partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BUCKETS = 8
 
 
-def _src_fingerprint(sf_dir: str, names: tuple[str, ...]) -> str:
-    """mtime+size fingerprint of the source parquet files, so a
-    regenerated source gets a NEW bucketed table instead of silently
-    serving the stale copy (round-2 VERDICT item 7: idempotency keyed
-    on tableExists alone + a persistent metastore was a latent
-    stale-read)."""
-    import hashlib
-
-    from sfdc_cdc_aws_spark.sources.tables import table_path
-
-    h = hashlib.md5()
-    for n in names:
-        p = table_path(sf_dir, n)
-        st = os.stat(p)
-        h.update(f"{p}:{st.st_mtime_ns}:{st.st_size};".encode())
-    return h.hexdigest()[:8]
-
-
 def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize orders and customer as bucketed tables on their join
-    key, idempotent per (session, source-content): the source
-    fingerprint is part of the table name, so the cache key IS the
-    data version. ``repartition(_BUCKETS, key)`` before the write uses
-    the same murmur3 hash as the bucket assignment, so every task
-    holds exactly one bucket and each bucket lands as ONE sorted
-    file — which lets the reader honor sortBy metadata too. Stale
-    fingerprint variants are dropped (table + files) as new ones
-    appear."""
-    from sfdc_cdc_aws_spark.sources import load_table
-
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    tag = f"{base}_{_src_fingerprint(sf_dir, ('orders', 'customer'))}"
-    to, tc = f"orders_bkt_{tag}", f"customer_bkt_{tag}"
-    for tbl, src, key in ((to, "orders", "o_custkey"), (tc, "customer", "c_custkey")):
-        prefix = tbl.rsplit("_", 1)[0] + "_"  # e.g. orders_bkt_sf0_001_
-        for t in spark.catalog.listTables():
-            if t.name.startswith(prefix) and t.name != tbl:
-                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-        if not spark.catalog.tableExists(tbl):
-            (
-                load_table(spark, sf_dir, src)
-                .repartition(_BUCKETS, F.col(key))
-                .write.bucketBy(_BUCKETS, key)
-                .sortBy(key)
-                .option("path", f"/tmp/sfdc_bucketed/{tag}/{tbl}")
-                .mode("overwrite")
-                .saveAsTable(tbl)
-            )
-    for d in os.listdir("/tmp/sfdc_bucketed") if os.path.isdir("/tmp/sfdc_bucketed") else []:
-        if d.startswith(base + "_") and d != tag:
-            shutil.rmtree(os.path.join("/tmp/sfdc_bucketed", d), ignore_errors=True)
+    key, idempotent per (session, fixture tag): the source fingerprint
+    is part of the table name, so the cache key IS the data version.
+    ``repartition(_BUCKETS, key)`` before the write uses the same
+    murmur3 hash as the bucket assignment, so every task holds exactly
+    one bucket and each bucket lands as ONE sorted file — which lets
+    the reader honor sortBy metadata too."""
+    with catalog_fixture(
+        spark,
+        "bucketed",
+        sf_dir,
+        ("orders", "customer"),
+        ("orders_bkt", "customer_bkt"),
+    ) as (tag, root):
+        to, tc = f"orders_bkt_{tag}", f"customer_bkt_{tag}"
+        for tbl, src, key in (
+            (to, "orders", "o_custkey"),
+            (tc, "customer", "c_custkey"),
+        ):
+            if not spark.catalog.tableExists(tbl):
+                (
+                    load_table(spark, sf_dir, src)
+                    .repartition(_BUCKETS, F.col(key))
+                    .write.bucketBy(_BUCKETS, key)
+                    .sortBy(key)
+                    .option("path", os.path.join(root, tbl))
+                    .mode("overwrite")
+                    .saveAsTable(tbl)
+                )
     return to, tc
 
 
@@ -200,7 +182,7 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench/test harness builds plans sequentially, which is the
     assumed contract; if concurrent plan building is ever introduced,
     scope this via ``spark.newSession()`` (confs are per-session)
-    instead of the save/restore window."""
+    instead of the ``scoped_conf`` window."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").where(
         F.col("o_totalprice") > BLOOM_PRICE_MIN
@@ -211,10 +193,7 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
     }
-    saved = {k: spark.conf.get(k) for k in scoped}
-    try:
-        for k, v in scoped.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, scoped):
         df = (
             li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
             .groupBy("l_returnflag")
@@ -229,64 +208,33 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # subquery) while the conf window is open; QueryExecution
         # caches this, so later execution reuses it
         df._jdf.queryExecution().optimizedPlan()
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     return df
 
 
 _FMT_COLS = ["event_id", "user_id", "event_type", "value"]
 
 
-def _format_copies_base() -> str:
-    """Per-user scratch root for engine-written format copies.
-
-    Keyed by uid so two users on one machine never contend for the
-    same path (a root-owned /tmp/sfdc_format_copies would fail every
-    other user's write with EACCES)."""
-    import tempfile
-
+def _ensure_format_copies(spark: SparkSession, sf_dir: str) -> dict[str, str]:
+    """Materialize CSV and ORC copies of the events slice: the fixture
+    ships parquet only, so the non-parquet read paths need
+    engine-written copies to read back. The kind is keyed by uid so
+    two users on one machine never contend for the same path (a
+    root-owned dir would fail every other user's write with
+    EACCES)."""
     uid = os.getuid() if hasattr(os, "getuid") else 0
-    return os.path.join(tempfile.gettempdir(), f"sfdc_format_copies_{uid}")
 
+    def build(fmt: str, path: str) -> None:
+        w = load_table(spark, sf_dir, "events").select(*_FMT_COLS).write
+        if fmt == "csv":
+            w = w.option("header", "true")
+        getattr(w, fmt)(path)
 
-def _ensure_format_copies(
-    spark: SparkSession, sf_dir: str, base: str | None = None
-) -> dict[str, str]:
-    """Materialize CSV and ORC copies of the events slice once per
-    source content (same fingerprint discipline as the bucketed
-    tables and landing dir): the fixture ships parquet only, so the
-    non-parquet read paths need engine-written copies to read back.
-    Stale copies of OTHER fingerprints are pruned on write so the
-    scratch dir holds at most one copy per (format, fixture name)
-    instead of growing unbounded across fixture regenerations."""
-    import shutil
-
-    from sfdc_cdc_aws_spark.sources.tables import table_path
-
-    if base is None:
-        base = _format_copies_base()
-    st = os.stat(table_path(sf_dir, "events"))
-    prefix = f"{os.path.basename(sf_dir.rstrip('/'))}_v1"
-    name = f"{prefix}_{st.st_mtime_ns}_{st.st_size}"
-    out = {}
-    src = load_table(spark, sf_dir, "events").select(*_FMT_COLS)
-    for fmt in ("csv", "orc"):
-        fmt_dir = os.path.join(base, fmt)
-        path = os.path.join(fmt_dir, name)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            if os.path.isdir(fmt_dir):
-                for stale in os.listdir(fmt_dir):
-                    if stale.startswith(prefix) and stale != name:
-                        shutil.rmtree(
-                            os.path.join(fmt_dir, stale), ignore_errors=True
-                        )
-            w = src.write.mode("overwrite")
-            if fmt == "csv":
-                w = w.option("header", "true")
-            getattr(w, fmt)(path)
-        out[fmt] = path
-    return out
+    return {
+        fmt: materialize(
+            f"format_copies_{uid}/{fmt}", sf_dir, ("events",), partial(build, fmt)
+        )
+        for fmt in ("csv", "orc")
+    }
 
 
 @query(

@@ -11,6 +11,8 @@ timezone so results are oracle-comparable.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -62,6 +64,24 @@ def get_session(app_name: str = "sfdc_cdc_aws_spark", cpus: int | None = None) -
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session SQL confs for the body of a ``with`` block. On exit
+    — the failure path too — each key gets back its prior value, or is
+    unset again if it was unset before."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def truncate_lineage(df):

@@ -25,13 +25,11 @@ cell index on cent_id (at 100 TB: a bucketed index table, probes
 shuffle-free; the per-batch side is small).
 
 Reference parity: stream plumbing mirrors the CDC landing pattern
-(streaming/job.py:55-78); the reference has no vector surface — §2.9
+(streaming/job.py:ensure_landing); the reference has no vector surface — §2.9
 extension composed with S5 streaming machinery.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +39,7 @@ from sfdc_cdc_aws_spark.functions.vector import (
     cosine_prenorm,
     norm,
 )
+from sfdc_cdc_aws_spark.materialize import materialize
 from sfdc_cdc_aws_spark.operators.similarity import (
     N_CENTROIDS,
     N_PROBE,
@@ -49,40 +48,28 @@ from sfdc_cdc_aws_spark.operators.similarity import (
 )
 from sfdc_cdc_aws_spark.registry import query
 from sfdc_cdc_aws_spark.sources import load_table
-from sfdc_cdc_aws_spark.sources.tables import table_path
 from sfdc_cdc_aws_spark.streaming.job import run_available_now
 
 # deterministic corpus/arrival split, same discipline as ingest_dedup:
 # every 4th vector "arrives", the rest are the standing corpus.
 VEC_ARRIVAL_MOD = 4
 
-_LANDING_REV = "v1"
+def ensure_vec_landing(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the arriving-vectors landing dir: the arrival slice
+    as 4 parquet files so maxFilesPerTrigger chops the drain into
+    micro-batches like a real shard feed."""
 
-
-def ensure_vec_landing(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_vec_landing"
-) -> str:
-    """Materialize the arriving-vectors landing dir (idempotent per
-    source content): the arrival slice as 4 parquet files so
-    maxFilesPerTrigger chops the drain into micro-batches like a real
-    shard feed."""
-    st = os.stat(table_path(sf_dir, "embeddings"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_LANDING_REV}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def build(out: str) -> None:
         (
             load_table(spark, sf_dir, "embeddings")
             .where(F.col("vec_id") % VEC_ARRIVAL_MOD == 0)
             .select("vec_id", "embedding")
             .repartitionByRange(4, "vec_id")
             .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .parquet(out)
+            .write.parquet(out)
         )
-    return out
+
+    return materialize("vec_landing", sf_dir, ("embeddings",), build)
 
 
 def _probe_cells_expr(emb: F.Column, nrm: F.Column, cents) -> F.Column:

@@ -14,7 +14,7 @@ back into the index, the labels, and the survivor manifest, so the
 corpus the NEXT batch probes is never stale.
 
 Reference parity: the stream-side plumbing mirrors the CDC landing
-pattern (streaming/job.py:55-78); the reference itself has no dedup —
+pattern (streaming/job.py:ensure_landing); the reference itself has no dedup —
 this is §2.9 extension surface composed with S1/S5 streaming
 machinery (EmpConnector.java:89-120's subscribe loop is the arrival
 analog).
@@ -27,6 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfdc_cdc_aws_spark.materialize import catalog_fixture, kind_dir, materialize
 from sfdc_cdc_aws_spark.operators.dedup import (
     _DUCK_LSH_PAIRS_CTE,
     _DUCK_SIG_CTE,
@@ -40,6 +41,7 @@ from sfdc_cdc_aws_spark.operators.dedup import (
 )
 from sfdc_cdc_aws_spark.operators.text import DUCK_HASH64, shared_hash64
 from sfdc_cdc_aws_spark.registry import query
+from sfdc_cdc_aws_spark.session import scoped_conf, truncate_lineage
 from sfdc_cdc_aws_spark.sources import load_table
 from sfdc_cdc_aws_spark.sources.tables import table_path
 from sfdc_cdc_aws_spark.streaming.job import run_available_now
@@ -100,35 +102,15 @@ def drain_bands(
     )
 
 
-# Per-artifact cache-rev constants (round-13 verdict item 6): each
-# ensure_* family owns its rev so a signature or election change bumps
-# exactly the caches it invalidates — a shared constant let a change
-# to one family silently reuse a stale sibling cache. Values stay
-# "v1": the split itself must not orphan existing fixture dirs.
-_BAND_INDEX_REV = "v1"
-_DOC_LANDING_REV = "v1"
-_BAND_DELTA_REV = "v1"
-_CC_STATE_REV = "v1"
-_KEEP_BEST_REV = "v1"
+def ensure_band_index(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the corpus MinHash band index as a parquet table.
+    A stream-static join re-evaluates its static side EVERY
+    micro-batch — recomputing the corpus signatures per batch is the
+    naive cost; the production shape is this materialized index (at
+    scale: bucketed on (band_id, bucket) so batch probes join without
+    shuffling the index), refreshed when the corpus version changes."""
 
-
-def ensure_band_index(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_band_index"
-) -> str:
-    """Materialize the corpus MinHash band index as a parquet table
-    (idempotent per source content). A stream-static join re-evaluates
-    its static side EVERY micro-batch — recomputing the corpus
-    signatures per batch is the naive cost; the production shape is
-    this materialized index (at scale: bucketed on (band_id, bucket)
-    so batch probes join without shuffling the index), refreshed when
-    the corpus version changes."""
-    st = os.stat(table_path(sf_dir, "documents"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_BAND_INDEX_REV}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def build(out: str) -> None:
         sig_bands(
             minhash_sig_agg_df(
                 load_table(spark, sf_dir, "documents", widen=True).where(
@@ -137,35 +119,27 @@ def ensure_band_index(
             )
         ).select(
             F.col("doc_id").alias("corpus_doc"), "band_id", "bucket"
-        ).write.mode("overwrite").parquet(out)
-    return out
+        ).write.parquet(out)
+
+    return materialize("band_index", sf_dir, ("documents",), build)
 
 
-def ensure_doc_landing(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_doc_landing"
-) -> str:
-    """Materialize the arriving-documents landing dir (idempotent per
-    (revision, source content) — same cache-key discipline as the CDC
-    wire landing, streaming/job.py:55-78): the arrival slice written
-    as 4 parquet files so maxFilesPerTrigger chops the drain into
-    multiple micro-batches like a real shard feed."""
-    st = os.stat(table_path(sf_dir, "documents"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_DOC_LANDING_REV}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+def ensure_doc_landing(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the arriving-documents landing dir: the arrival
+    slice written as 4 parquet files so maxFilesPerTrigger chops the
+    drain into multiple micro-batches like a real shard feed."""
+
+    def build(out: str) -> None:
         (
             load_table(spark, sf_dir, "documents")
             .where(F.col("doc_id") % ARRIVAL_MOD == 0)
             .select("doc_id", "text")
             .repartitionByRange(4, "doc_id")
             .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(out)
+            .write.parquet(out)
         )
-    return out
+
+    return materialize("doc_landing", sf_dir, ("documents",), build)
 
 
 @query(
@@ -249,25 +223,18 @@ def stream_minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         no_data_batch=False,
     )
 
-def ensure_band_delta(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_band_delta"
-) -> str:
+def ensure_band_delta(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the ARRIVAL slice's band rows as an append-only
-    delta next to the corpus index (idempotent per source content).
-    Index maintenance never rewrites the corpus's files: the arrival
-    batch lands as new parquet files under its own fingerprinted dir,
-    and the maintained row-level index is the multi-dir read
-    {ensure_band_index, ensure_band_delta} — exactly how a lake table
-    absorbs an appended partition. The expensive work (shingling +
-    md5 signature fold over arrival TEXT) happens here once; the
-    merge query below never touches document text again."""
-    st = os.stat(table_path(sf_dir, "documents"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_BAND_DELTA_REV}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    delta next to the corpus index. Index maintenance never rewrites
+    the corpus's files: the arrival batch lands as new parquet files
+    under its own fingerprinted dir, and the maintained row-level
+    index is the multi-dir read {ensure_band_index, ensure_band_delta}
+    — exactly how a lake table absorbs an appended partition. The
+    expensive work (shingling + md5 signature fold over arrival TEXT)
+    happens here once; the merge query below never touches document
+    text again."""
+
+    def build(out: str) -> None:
         sig_bands(
             minhash_sig_agg_df(
                 load_table(spark, sf_dir, "documents", widen=True).where(
@@ -276,8 +243,9 @@ def ensure_band_delta(
             )
         ).select(
             F.col("doc_id").alias("corpus_doc"), "band_id", "bucket"
-        ).write.mode("overwrite").parquet(out)
-    return out
+        ).write.parquet(out)
+
+    return materialize("band_delta", sf_dir, ("documents",), build)
 
 
 def _bucket_partial(rows: DataFrame) -> DataFrame:
@@ -371,21 +339,13 @@ def minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: replay the exact same admission order without knowing file layout
 N_ADMIT_BATCHES = 4
 
-# a2: rev bump forces hosts carrying pre-stamping "a1" fixtures to
-# regenerate (round-12 ADVICE — stale fixtures kept write-latency
-# batch order); stamping below is additionally unconditional
-_ADMIT_REV = "a2"
-
-
 def stamp_batch_mtimes(out: str, base_mtime: float, n_batches: int) -> None:
     """Batch order must NEVER depend on write latency: N small
     sequential writes can land in the same mtime tick, and
     FileStreamSource's tie ordering is not a documented contract.
     Stamp each batch dir's files with explicitly increasing
     timestamps (1 s apart) so mtime order == batch order by
-    construction. Called UNCONDITIONALLY on every ensure_* call —
-    a fixture written by an older revision (or a copied/restored
-    /tmp) must not keep latency-dependent order (round-12 ADVICE)."""
+    construction."""
     for b in range(n_batches):
         bdir = os.path.join(out, f"b{b}")
         ts = base_mtime + 10 + b
@@ -393,20 +353,13 @@ def stamp_batch_mtimes(out: str, base_mtime: float, n_batches: int) -> None:
             os.utime(os.path.join(bdir, fn), (ts, ts))
 
 
-def ensure_admit_landing(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_admit_landing"
-) -> str:
+def ensure_admit_landing(spark: SparkSession, sf_dir: str) -> str:
     """Arrival landing for the admit loop: one parquet FILE per
-    admission batch, written sequentially in batch order so the file
+    admission batch, mtimes stamped in batch order so the file
     source's mtime ordering replays batches 0..N-1 deterministically
     (maxFilesPerTrigger=1 → one micro-batch per file)."""
-    st = os.stat(table_path(sf_dir, "documents"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_ADMIT_REV}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS_ALL")):
+
+    def build(out: str) -> None:
         arr = (
             load_table(spark, sf_dir, "documents")
             .where(F.col("doc_id") % ARRIVAL_MOD == 0)
@@ -419,18 +372,14 @@ def ensure_admit_landing(
             )
         )
         for b in range(N_ADMIT_BATCHES):
-            bdir = os.path.join(out, f"b{b}")
-            (
-                arr.where(F.col("batch_id") == b)
-                .select("doc_id", "text")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(bdir)
-            )
-        with open(os.path.join(out, "_SUCCESS_ALL"), "w") as f:
-            f.write("ok")
-    stamp_batch_mtimes(out, st.st_mtime, N_ADMIT_BATCHES)
-    return out
+            arr.where(F.col("batch_id") == b).select(
+                "doc_id", "text"
+            ).coalesce(1).write.parquet(os.path.join(out, f"b{b}"))
+        stamp_batch_mtimes(
+            out, os.path.getmtime(table_path(sf_dir, "documents")), N_ADMIT_BATCHES
+        )
+
+    return materialize("admit_landing", sf_dir, ("documents",), build)
 
 
 def _admit_oracle() -> str:
@@ -497,7 +446,7 @@ def admit_state_base(landing: str) -> str:
     """Deterministic per-fixture state root for the admit loop: the
     checkpoint, per-batch delta dirs, and per-batch verdict dirs all
     live under a path keyed to the landing fixture (which is itself
-    keyed to (revision, source content)) — so a restarted drain finds
+    keyed to (code digest, source content)) — so a restarted drain finds
     the SAME checkpoint and the SAME deltas a killed run left behind,
     which is what makes resume meaningful. A uuid here would make the
     docstring's restart claim untestable (round-11 verdict item 2)."""
@@ -687,22 +636,13 @@ def stream_dedup_admit_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def ensure_cc_state(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_cc_state"
-) -> str:
+def ensure_cc_state(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the standing CC labels over the CORPUS-only LSH
-    pair graph (idempotent per source content — the same cache-key
-    discipline as ensure_band_index). This is the state the admit
-    loop maintains: at scale it is a lake table written once and then
-    only PATCHED by cc_label_merge, never recomputed from the full
-    edge relation."""
-    st = os.stat(table_path(sf_dir, "documents"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_CC_STATE_REV}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    pair graph. This is the state the admit loop maintains: at scale
+    it is a lake table written once and then only PATCHED by
+    cc_label_merge, never recomputed from the full edge relation."""
+
+    def build(out: str) -> None:
         corpus_bands = spark.read.parquet(
             ensure_band_index(spark, sf_dir)
         ).select(F.col("corpus_doc").alias("doc_id"), "band_id", "bucket")
@@ -711,16 +651,15 @@ def ensure_cc_state(
             .select("doc_a", "doc_b")
             .distinct()
         )
-        from sfdc_cdc_aws_spark.session import truncate_lineage
-
         edges = truncate_lineage(
             pairs.union(pairs.select("doc_b", "doc_a")).toDF("src", "dst")
         )
         labels, _rounds = _connected_components(edges)
         labels.select(
             F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-        ).write.mode("overwrite").parquet(out)
-    return out
+        ).write.parquet(out)
+
+    return materialize("cc_state", sf_dir, ("documents",), build)
 
 
 @query(
@@ -872,45 +811,24 @@ def ensure_band_index_table(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the corpus band index as a BUCKETED table on
     (band_id, bucket) — the physical layout under the index-merge
     aggregation: bucket-key aggregations (the index-merge partials)
-    run exchange-free. Idempotent per source content via the
-    fingerprint-in-name discipline of
-    operators/sinks.py:_ensure_bucketed (stale variants dropped).
-    Read-only — the admit loop's mutating twin is the PARTITIONED
-    bucketed table (ensure_admit_bkt_table)."""
-    import shutil
-
-    from sfdc_cdc_aws_spark.operators.sinks import _src_fingerprint
-
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    tag = f"{base}_{_src_fingerprint(sf_dir, ('documents',))}"
-    tbl = f"band_idx_bkt_{tag}"
-    # stale-variant cleanup is keyed to THIS fixture's basename only
-    # (round-12 ADVICE): alternating between two fixtures (sf0.001
-    # tests, then sf0.1 bench) must not thrash the other fixture's
-    # index build — one live table per fixture, stale fingerprints of
-    # the same fixture dropped.
-    for t in spark.catalog.listTables():
-        if t.name.startswith(f"band_idx_bkt_{base}_") and t.name != tbl:
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-    if os.path.isdir("/tmp/sfdc_bucketed_idx"):
-        for d in os.listdir("/tmp/sfdc_bucketed_idx"):
-            if d.startswith(f"{base}_") and d != tag:
-                shutil.rmtree(
-                    os.path.join("/tmp/sfdc_bucketed_idx", d),
-                    ignore_errors=True,
-                )
-    if not spark.catalog.tableExists(tbl):
-        (
-            spark.read.parquet(ensure_band_index(spark, sf_dir))
-            # same murmur3 hash as the bucket assignment: one task per
-            # bucket, one sorted file per bucket
-            .repartition(INDEX_BUCKETS, "band_id", "bucket")
-            .write.bucketBy(INDEX_BUCKETS, "band_id", "bucket")
-            .sortBy("band_id", "bucket")
-            .option("path", f"/tmp/sfdc_bucketed_idx/{tag}/{tbl}")
-            .mode("overwrite")
-            .saveAsTable(tbl)
-        )
+    run exchange-free. Read-only — the admit loop's mutating twin is
+    the PARTITIONED bucketed table (ensure_admit_bkt_table)."""
+    with catalog_fixture(
+        spark, "bucketed_idx", sf_dir, ("documents",), ("band_idx_bkt",)
+    ) as (tag, root):
+        tbl = f"band_idx_bkt_{tag}"
+        if not spark.catalog.tableExists(tbl):
+            (
+                spark.read.parquet(ensure_band_index(spark, sf_dir))
+                # same murmur3 hash as the bucket assignment: one task
+                # per bucket, one sorted file per bucket
+                .repartition(INDEX_BUCKETS, "band_id", "bucket")
+                .write.bucketBy(INDEX_BUCKETS, "band_id", "bucket")
+                .sortBy("band_id", "bucket")
+                .option("path", os.path.join(root, tbl))
+                .mode("overwrite")
+                .saveAsTable(tbl)
+            )
     return tbl
 
 
@@ -989,12 +907,14 @@ def minhash_index_merge_bucketed(
     )
 
 
-_ADMIT_BKT_BASE = "/tmp/sfdc_admit_bkt_tbl"
+_ADMIT_BKT_KIND = "admit_bkt_tbl"
+
+_POM = "spark.sql.sources.partitionOverwriteMode"
 
 
 def _admit_bkt_path(tbl: str) -> str:
     tag = tbl[len("admit_bkt_") :]
-    return os.path.join(_ADMIT_BKT_BASE, tag, tbl)
+    return os.path.join(kind_dir(_ADMIT_BKT_KIND), tag, tbl)
 
 
 def ensure_admit_bkt_table(spark: SparkSession, sf_dir: str) -> str:
@@ -1008,32 +928,18 @@ def ensure_admit_bkt_table(spark: SparkSession, sf_dir: str) -> str:
     re-executed batch overwrites exactly its own partition) while
     every partition keeps the bucketed layout, so probes sort-merge
     against bucket files with zero exchange on the index side and
-    partition pruning gives each batch the index "as of" its commit.
-    Stale-fingerprint cleanup is keyed to this fixture's basename
-    only (one live table per fixture, round-12 ADVICE)."""
-    import shutil
-
-    from sfdc_cdc_aws_spark.operators.sinks import _src_fingerprint
-
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    tag = f"{base}_{_src_fingerprint(sf_dir, ('documents',))}"
-    tbl = f"admit_bkt_{tag}"
-    for t in spark.catalog.listTables():
-        if t.name.startswith(f"admit_bkt_{base}_") and t.name != tbl:
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-    if os.path.isdir(_ADMIT_BKT_BASE):
-        for d in os.listdir(_ADMIT_BKT_BASE):
-            if d.startswith(f"{base}_") and d != tag:
-                shutil.rmtree(
-                    os.path.join(_ADMIT_BKT_BASE, d), ignore_errors=True
-                )
-    _ensure_corpus_partition(
-        spark,
-        tbl,
-        _admit_bkt_path(tbl),
-        lambda: spark.read.parquet(ensure_band_index(spark, sf_dir)),
-        ("band_id", "bucket"),
-    )
+    partition pruning gives each batch the index "as of" its commit."""
+    with catalog_fixture(
+        spark, _ADMIT_BKT_KIND, sf_dir, ("documents",), ("admit_bkt",)
+    ) as (tag, root):
+        tbl = f"admit_bkt_{tag}"
+        _ensure_corpus_partition(
+            spark,
+            tbl,
+            os.path.join(root, tbl),
+            lambda: spark.read.parquet(ensure_band_index(spark, sf_dir)),
+            ("band_id", "bucket"),
+        )
     return tbl
 
 
@@ -1216,16 +1122,6 @@ def _admit_drain_bucketed_locked(
     t0 = time.monotonic()
     bands_all = drain_bands(spark, landing)
     prof["pre_bands_s"] = round(time.monotonic() - t0, 3)
-    # the per-batch insertInto resolves its conf through the session
-    # of the DataFrame being written — which, with the hoisted
-    # drain-wide relations, is THIS session, not the foreachBatch
-    # clone. Static mode would overwrite the WHOLE table (corpus
-    # included) instead of exactly partition commit_batch=b. Scoped
-    # to the drain: restored in the finally below so the session-
-    # global overwrite semantics don't leak into later queries.
-    _POM = "spark.sql.sources.partitionOverwriteMode"
-    old_pom = spark.conf.get(_POM, "static")
-    spark.conf.set(_POM, "dynamic")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch runs in a CLONED session whose catalog relation
@@ -1235,7 +1131,7 @@ def _admit_drain_bucketed_locked(
         # committed
         s = batch_df.sparkSession
         t0 = time.monotonic()
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        s.conf.set(_POM, "dynamic")
         s.catalog.refreshTable(tbl)
         prof["refresh_s"] += time.monotonic() - t0
         t0 = time.monotonic()
@@ -1325,13 +1221,20 @@ def _admit_drain_bucketed_locked(
         .parquet(landing + "/b*")
     )
     try:
-        q = (
-            arrivals.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        # the per-batch insertInto resolves its conf through the
+        # session of the DataFrame being written — which, with the
+        # hoisted drain-wide relations, is THIS session, not the
+        # foreachBatch clone. Static mode would overwrite the WHOLE
+        # table (corpus included) instead of exactly partition
+        # commit_batch=b.
+        with scoped_conf(spark, {_POM: "dynamic"}):
+            q = (
+                arrivals.writeStream.foreachBatch(fold)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
         result = (
             spark.read.parquet(f"{verdict_base}/b*")
             .select(
@@ -1348,7 +1251,6 @@ def _admit_drain_bucketed_locked(
         # the killed run's checkpoint, verdicts, and committed
         # partitions persist and the next invocation resumes (the
         # caller's finally closes the flock fd)
-        spark.conf.set(_POM, old_pom)
         if not keep_state:
             shutil.rmtree(state, ignore_errors=True)
             reset_admit_partitions(spark, tbl)
@@ -1383,26 +1285,18 @@ from sfdc_cdc_aws_spark.operators.dedup import (  # noqa: E402
 )
 
 
-def ensure_keep_best_state(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_keepbest_state"
-) -> str:
+def ensure_keep_best_state(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the STANDING survivor manifest — keep_best_election
-    over the corpus-only CC labels (ensure_cc_state) — idempotent per
-    source content. This is the state the incremental election
-    patches: at scale it is a lake table written once and then only
-    amended for clusters an arrival batch touches."""
-    st = os.stat(table_path(sf_dir, "documents"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_KEEP_BEST_REV}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    over the corpus-only CC labels (ensure_cc_state). This is the
+    state the incremental election patches: at scale it is a lake
+    table written once and then only amended for clusters an arrival
+    batch touches."""
+
+    def build(out: str) -> None:
         labels = spark.read.parquet(ensure_cc_state(spark, sf_dir))
-        keep_best_election(spark, sf_dir, labels).write.mode(
-            "overwrite"
-        ).parquet(out)
-    return out
+        keep_best_election(spark, sf_dir, labels).write.parquet(out)
+
+    return materialize("keepbest_state", sf_dir, ("documents",), build)
 
 
 @query("dedup_keep_best_merge", oracle=DUCK_KEEP_BEST_SQL)

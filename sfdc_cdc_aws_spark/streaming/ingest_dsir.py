@@ -17,11 +17,10 @@ micro-batch; a 1024-row parquet table makes that free).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfdc_cdc_aws_spark.materialize import materialize
 from sfdc_cdc_aws_spark.operators.curation2 import (
     _DUCK_FEATS,
     DSIR_ALPHA,
@@ -31,31 +30,20 @@ from sfdc_cdc_aws_spark.operators.curation2 import (
 from sfdc_cdc_aws_spark.operators.text import _DUCK_TOKENS, DUCK_HASH64, shared_hash64
 from sfdc_cdc_aws_spark.registry import query
 from sfdc_cdc_aws_spark.sources import load_table
-from sfdc_cdc_aws_spark.sources.tables import table_path
 from sfdc_cdc_aws_spark.streaming.ingest_dedup import (
     ARRIVAL_MOD,
     ensure_doc_landing,
 )
 from sfdc_cdc_aws_spark.streaming.job import run_available_now
 
-_MODEL_REV = "m1"
 
-
-def ensure_dsir_model(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_dsir_model"
-) -> str:
-    """Materialize the corpus importance model (idempotent per
-    (revision, source content)): bucket → DECIMAL(18,9) log-ratio for
-    ALL {DSIR_BUCKETS} buckets — observed buckets carry their
-    smoothed target/raw log-ratio, never-observed buckets the
+def ensure_dsir_model(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the corpus importance model: bucket → DECIMAL(18,9)
+    log-ratio for ALL {DSIR_BUCKETS} buckets — observed buckets carry
+    their smoothed target/raw log-ratio, never-observed buckets the
     all-zero smoothing constant, so arrival features always join."""
-    st = os.stat(table_path(sf_dir, "documents"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_MODEL_REV}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+
+    def build(out: str) -> None:
         d = load_table(spark, sf_dir, "documents").where(
             F.col("doc_id") % ARRIVAL_MOD != 0
         )
@@ -94,10 +82,9 @@ def ensure_dsir_model(
             ),
             9,
         ).cast("decimal(18,9)")
-        full.select("bucket", c.alias("c")).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(out)
-    return out
+        full.select("bucket", c.alias("c")).coalesce(1).write.parquet(out)
+
+    return materialize("dsir_model", sf_dir, ("documents",), build)
 
 
 @query(

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sfdc_cdc_aws_spark.functions.vector import DUCK_COSINE, cosine_prenorm, norm
+from sfdc_cdc_aws_spark.materialize import catalog_fixture, kind_dir, materialize
 from sfdc_cdc_aws_spark.operators.curation2 import (
     _DUCK_FEATS,
     DSIR_BUCKETS,
@@ -49,6 +50,7 @@ from sfdc_cdc_aws_spark.operators.similarity import (
 )
 from sfdc_cdc_aws_spark.operators.text import _DUCK_TOKENS, shared_hash64
 from sfdc_cdc_aws_spark.registry import query
+from sfdc_cdc_aws_spark.session import scoped_conf
 from sfdc_cdc_aws_spark.sources import load_table
 from sfdc_cdc_aws_spark.sources.tables import table_path
 from sfdc_cdc_aws_spark.streaming.ingest_ann import _probe_cells_expr
@@ -70,25 +72,13 @@ from sfdc_cdc_aws_spark.streaming.quality_gate import (
     _gate_pass,
 )
 
-# q2: rev bump regenerates pre-stamping "q1" fixtures (round-12
-# ADVICE); stamping below is additionally unconditional
-_LANDING_REV = "q2"
-
-
-def ensure_quartet_landing(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_quartet_landing"
-) -> str:
+def ensure_quartet_landing(spark: SparkSession, sf_dir: str) -> str:
     """Arrival landing with FULL screen columns (doc_id, text, lang,
     n_chars) — one parquet file per admission batch, mtimes stamped
     strictly increasing so the file source replays batch order
     deterministically (the ensure_admit_landing discipline)."""
-    st = os.stat(table_path(sf_dir, "documents"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_LANDING_REV}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS_ALL")):
+
+    def build(out: str) -> None:
         arr = (
             load_table(spark, sf_dir, "documents")
             .where(F.col("doc_id") % ARRIVAL_MOD == 0)
@@ -103,32 +93,19 @@ def ensure_quartet_landing(
             )
         )
         for b in range(N_ADMIT_BATCHES):
-            bdir = os.path.join(out, f"b{b}")
-            (
-                arr.where(F.col("batch_id") == b)
-                .select("doc_id", "text", "lang", "n_chars")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(bdir)
-            )
-        with open(os.path.join(out, "_SUCCESS_ALL"), "w") as f:
-            f.write("ok")
-    stamp_batch_mtimes(out, st.st_mtime, N_ADMIT_BATCHES)
-    return out
+            arr.where(F.col("batch_id") == b).select(
+                "doc_id", "text", "lang", "n_chars"
+            ).coalesce(1).write.parquet(os.path.join(out, f"b{b}"))
+        stamp_batch_mtimes(
+            out, os.path.getmtime(table_path(sf_dir, "documents")), N_ADMIT_BATCHES
+        )
+
+    return materialize("quartet_landing", sf_dir, ("documents",), build)
 
 
-_QUARTET_BKT_BASE = "/tmp/sfdc_quartet_bkt_tbl"
+_QUARTET_BKT_KIND = "quartet_bkt_tbl"
 
-
-def _quartet_bkt_paths(tag: str) -> tuple[str, str, str, str]:
-    tbl = f"quartet_bkt_{tag}"
-    vtbl = f"quartet_vbkt_{tag}"
-    return (
-        tbl,
-        os.path.join(_QUARTET_BKT_BASE, tag, tbl),
-        vtbl,
-        os.path.join(_QUARTET_BKT_BASE, tag, vtbl),
-    )
+_POM = "spark.sql.sources.partitionOverwriteMode"
 
 
 def ensure_quartet_bkt_tables(
@@ -149,47 +126,35 @@ def ensure_quartet_bkt_tables(
     dynamic-partition-overwrite insertInto (idempotent under
     micro-batch replay); probes prune partitions < batch_id and
     sort-merge off the bucket files with zero exchange on the index
-    side. Corpus partitions build once per fixture fingerprint;
-    stale-fingerprint cleanup is keyed to this fixture's basename."""
-    import shutil
-
-    from sfdc_cdc_aws_spark.operators.sinks import _src_fingerprint
-
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    tag = f"{base}_{_src_fingerprint(sf_dir, ('documents', 'embeddings'))}"
-    tbl, path, vtbl, vpath = _quartet_bkt_paths(tag)
-    for t in spark.catalog.listTables():
-        if (
-            t.name.startswith(f"quartet_bkt_{base}_")
-            or t.name.startswith(f"quartet_vbkt_{base}_")
-        ) and t.name not in (tbl, vtbl):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-    if os.path.isdir(_QUARTET_BKT_BASE):
-        for d in os.listdir(_QUARTET_BKT_BASE):
-            if d.startswith(f"{base}_") and d != tag:
-                shutil.rmtree(
-                    os.path.join(_QUARTET_BKT_BASE, d), ignore_errors=True
-                )
-    _ensure_corpus_partition(
+    side. Corpus partitions build once per fixture fingerprint."""
+    with catalog_fixture(
         spark,
-        tbl,
-        path,
-        lambda: spark.read.parquet(ensure_band_index(spark, sf_dir)),
-        ("band_id", "bucket"),
-    )
-    _ensure_corpus_partition(
-        spark,
-        vtbl,
-        vpath,
-        lambda: ensure_ivf_index(spark, sf_dir)
-        .where(F.col("vec_id") % ARRIVAL_MOD != 0)
-        .select(
-            "cent_id",
-            F.col("embedding").alias("c_embedding"),
-            F.col("nrm").alias("c_nrm"),
-        ),
-        ("cent_id",),
-    )
+        _QUARTET_BKT_KIND,
+        sf_dir,
+        ("documents", "embeddings"),
+        ("quartet_bkt", "quartet_vbkt"),
+    ) as (tag, root):
+        tbl, vtbl = f"quartet_bkt_{tag}", f"quartet_vbkt_{tag}"
+        _ensure_corpus_partition(
+            spark,
+            tbl,
+            os.path.join(root, tbl),
+            lambda: spark.read.parquet(ensure_band_index(spark, sf_dir)),
+            ("band_id", "bucket"),
+        )
+        _ensure_corpus_partition(
+            spark,
+            vtbl,
+            os.path.join(root, vtbl),
+            lambda: ensure_ivf_index(spark, sf_dir)
+            .where(F.col("vec_id") % ARRIVAL_MOD != 0)
+            .select(
+                "cent_id",
+                F.col("embedding").alias("c_embedding"),
+                F.col("nrm").alias("c_nrm"),
+            ),
+            ("cent_id",),
+        )
     return tbl, vtbl
 
 
@@ -635,16 +600,6 @@ def _quartet_drain_locked(
         F.col("embedding").alias("c_embedding"),
         F.col("nrm").alias("c_nrm"),
     )
-    # the per-batch insertInto resolves its conf through the session
-    # of the DataFrame being written — which, with the hoisted
-    # drain-wide relations, is THIS session, not the foreachBatch
-    # clone. Static mode would overwrite the WHOLE table (corpus
-    # included) instead of exactly partition commit_batch=b. Scoped
-    # to the drain: restored in the finally below so the session-
-    # global overwrite semantics don't leak into later queries.
-    _POM = "spark.sql.sources.partitionOverwriteMode"
-    old_pom = spark.conf.get(_POM, "static")
-    spark.conf.set(_POM, "dynamic")
     verdict_base = f"{state}/verdicts"
     ckpt = f"{state}/ckpt"
     if not os.path.isdir(ckpt):
@@ -678,7 +633,7 @@ def _quartet_drain_locked(
         # sees the partitions batch b-1 committed
         s = batch_df.sparkSession
         t0 = time.monotonic()
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        s.conf.set(_POM, "dynamic")
         s.catalog.refreshTable(tbl)
         s.catalog.refreshTable(vtbl)
         prof["refresh_s"] += time.monotonic() - t0
@@ -820,15 +775,22 @@ def _quartet_drain_locked(
         .parquet(landing + "/b*")
     )
     try:
-        q = (
-            arrivals.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        t_stream = time.monotonic()
-        q.awaitTermination()
-        prof["stream_s"] = time.monotonic() - t_stream
+        # the per-batch insertInto resolves its conf through the
+        # session of the DataFrame being written — which, with the
+        # hoisted drain-wide relations, is THIS session, not the
+        # foreachBatch clone. Static mode would overwrite the WHOLE
+        # table (corpus included) instead of exactly partition
+        # commit_batch=b.
+        with scoped_conf(spark, {_POM: "dynamic"}):
+            q = (
+                arrivals.writeStream.foreachBatch(fold)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            t_stream = time.monotonic()
+            q.awaitTermination()
+            prof["stream_s"] = time.monotonic() - t_stream
         t_res = time.monotonic()
         result = (
             spark.read.parquet(f"{verdict_base}/b*")
@@ -851,7 +813,6 @@ def _quartet_drain_locked(
         # the killed run's checkpoint, verdicts, and committed
         # partitions persist and the next invocation resumes (the
         # caller's finally closes the flock fd)
-        spark.conf.set(_POM, old_pom)
         if not keep_state:
             t_cl = time.monotonic()
             shutil.rmtree(state, ignore_errors=True)
@@ -865,12 +826,11 @@ def _quartet_drain_locked(
 
 
 def _quartet_tbl_path(tbl: str) -> str:
-    """Storage dir of a quartet index table (the naming scheme of
-    _quartet_bkt_paths, inverted — the ingest_dedup._admit_bkt_path
-    discipline)."""
+    """Storage dir of a quartet index table: ``<kind dir>/<tag>/<tbl>``
+    (the ingest_dedup._admit_bkt_path discipline)."""
     prefix = "quartet_vbkt_" if tbl.startswith("quartet_vbkt_") else "quartet_bkt_"
     tag = tbl[len(prefix):]
-    return os.path.join(_QUARTET_BKT_BASE, tag, tbl)
+    return os.path.join(kind_dir(_QUARTET_BKT_KIND), tag, tbl)
 
 
 @query("stream_screen_quartet", oracle=_quartet_oracle())

@@ -33,7 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sfdc_cdc_aws_spark.materialize import materialize
 from sfdc_cdc_aws_spark.registry import QUERIES, query
+from sfdc_cdc_aws_spark.session import scoped_conf
 from sfdc_cdc_aws_spark.sources import load_table
 from sfdc_cdc_aws_spark.sources.cdc_feed import ENVELOPE_SCHEMA, envelopes
 
@@ -45,37 +47,25 @@ WIRE_SCHEMA = T.StructType(
 )
 
 
-# bump when the envelope derivation changes (e.g. v2: UNDELETE added
-# to the changeType mapping) — the landing cache key includes it plus
-# the source parquet's mtime+size, so neither a code change nor a
-# regenerated source can serve a stale wire feed
-_FEED_REV = "v2"
+_NDB = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
-def ensure_landing(spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_cdc_landing") -> str:
-    """Materialize the wire-format landing dir for a scale factor
-    (idempotent per (feed revision, source content)): one JSON line
-    per CDC event, shaped like a Kinesis record."""
-    from sfdc_cdc_aws_spark.sources.tables import table_path
+def ensure_landing(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the wire-format landing dir for a scale factor: one
+    JSON line per CDC event, shaped like a Kinesis record."""
 
-    st = os.stat(table_path(sf_dir, "events"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_FEED_REV}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        env = envelopes(spark, sf_dir)
+    def build(out: str) -> None:
         # range-partition by replayId into a fixed file count: files
         # arrive in roughly commit order (like a Kinesis shard) and the
         # epoch layout under maxFilesPerTrigger is deterministic
         # instead of tracking whatever the session's parallelism was
-        env.repartitionByRange(
+        envelopes(spark, sf_dir).repartitionByRange(
             16, F.col("envelope.event.replayId")
         ).sortWithinPartitions(F.col("envelope.event.replayId")).select(
             F.col("partition_key").alias("partitionKey"), F.col("wire").alias("data")
-        ).write.mode("overwrite").json(out)
-    return out
+        ).write.json(out)
+
+    return materialize("cdc_landing", sf_dir, ("events",), build)
 
 
 def parse_wire(df: DataFrame) -> DataFrame:
@@ -336,13 +326,11 @@ def run_available_now(
     spark = stream_df.sparkSession
     qname = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
     ckpt = f"/tmp/sfdc_cdc_ckpt/{qname}"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    confs = {}
     if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    _NDB = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old_ndb = spark.conf.get(_NDB)
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if not no_data_batch:
-        spark.conf.set(_NDB, "false")
+        confs[_NDB] = "false"
 
     obs_by_batch: dict[int, dict] = {}
 
@@ -364,72 +352,69 @@ def run_available_now(
         def onQueryTerminated(self, event):
             pass
 
-    listener = _ObsListener()
-    spark.streams.addListener(listener)
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _capture_state_metrics(q, name_prefix)
-        for p in q.recentProgress:
-            _harvest(p if isinstance(p, dict) else _json.loads(p.json))
-        # detach the listener BEFORE iterating: its async delivery
-        # thread can still insert a late onQueryProgress event after
-        # awaitTermination returns, which would mutate obs_by_batch
-        # mid-iteration (the finally's removeListener stays as the
-        # failure-path guard; removing twice is a harmless no-op on
-        # the JVM listener bus)
-        spark.streams.removeListener(listener)
-        snapshot = list(obs_by_batch.values())
-        totals: dict[str, float] = {}
-        for om in snapshot:
-            for oname, fields in om.items():
-                # recentProgress dicts carry Row values; the
-                # listener's JSON path carries plain dicts
-                if hasattr(fields, "asDict"):
-                    fields = fields.asDict()
-                for fname, v in fields.items():
-                    if isinstance(v, (int, float)):
-                        totals[f"{oname}.{fname}"] = (
-                            totals.get(f"{oname}.{fname}", 0) + v
-                        )
-        # ALWAYS assign, even on a zero-progress drain: leaving the
-        # previous drain's totals in place would let readers (e.g.
-        # stream_quality_gate's LAST_GATE_METRICS) report stale
-        # n_in/n_pass as the current run's numbers
-        LAST_DRAIN_OBSERVED[name_prefix] = {
-            "n_batches": len(snapshot),
-            **totals,
-        }
-        # detach the result from the memory sink so repeated drains
-        # don't accumulate sink state/views in the session:
-        # materialize once (eager localCheckpoint) before the finally
-        # drops the sink's temp view and checkpoint dir
-        result = spark.table(qname).localCheckpoint()
-    finally:
-        # cleanup must run on the failure path too: a failed drain
-        # would otherwise leak the memory-sink temp view and the
-        # checkpoint directory (round-9 advice, generalized here from
-        # quality_gate so every drained screen gets the guarantee)
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        if not no_data_batch:
-            spark.conf.set(_NDB, old_ndb)
+    with scoped_conf(spark, confs):
+        listener = _ObsListener()
+        spark.streams.addListener(listener)
         try:
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(qname)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            _capture_state_metrics(q, name_prefix)
+            for p in q.recentProgress:
+                _harvest(p if isinstance(p, dict) else _json.loads(p.json))
+            # detach the listener BEFORE iterating: its async delivery
+            # thread can still insert a late onQueryProgress event after
+            # awaitTermination returns, which would mutate obs_by_batch
+            # mid-iteration (the finally's removeListener stays as the
+            # failure-path guard; removing twice is a harmless no-op on
+            # the JVM listener bus)
             spark.streams.removeListener(listener)
-        except Exception:
-            pass
-        try:
-            spark.catalog.dropTempView(qname)
-        except Exception:
-            pass
-        shutil.rmtree(ckpt, ignore_errors=True)
+            snapshot = list(obs_by_batch.values())
+            totals: dict[str, float] = {}
+            for om in snapshot:
+                for oname, fields in om.items():
+                    # recentProgress dicts carry Row values; the
+                    # listener's JSON path carries plain dicts
+                    if hasattr(fields, "asDict"):
+                        fields = fields.asDict()
+                    for fname, v in fields.items():
+                        if isinstance(v, (int, float)):
+                            totals[f"{oname}.{fname}"] = (
+                                totals.get(f"{oname}.{fname}", 0) + v
+                            )
+            # ALWAYS assign, even on a zero-progress drain: leaving the
+            # previous drain's totals in place would let readers (e.g.
+            # stream_quality_gate's LAST_GATE_METRICS) report stale
+            # n_in/n_pass as the current run's numbers
+            LAST_DRAIN_OBSERVED[name_prefix] = {
+                "n_batches": len(snapshot),
+                **totals,
+            }
+            # detach the result from the memory sink so repeated drains
+            # don't accumulate sink state/views in the session:
+            # materialize once (eager localCheckpoint) before the finally
+            # drops the sink's temp view and checkpoint dir
+            result = spark.table(qname).localCheckpoint()
+        finally:
+            # cleanup must run on the failure path too: a failed drain
+            # would otherwise leak the memory-sink temp view and the
+            # checkpoint directory (round-9 advice, generalized here from
+            # quality_gate so every drained screen gets the guarantee)
+            try:
+                spark.streams.removeListener(listener)
+            except Exception:
+                pass
+            try:
+                spark.catalog.dropTempView(qname)
+            except Exception:
+                pass
+            shutil.rmtree(ckpt, ignore_errors=True)
     return result
 
 
@@ -829,23 +814,19 @@ def cdc_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the dedup inside changes_stream keeps per-partition state stores
     # alive across every micro-batch — scope the shuffle-partition
     # count to the drain (state overhead tracks state volume, not
-    # scan parallelism; fresh checkpoint per call makes this free)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(drain_state_width(spark, landing))
-    )
-    # suppress the trailing zero-row micro-batch: it would invoke
-    # foreachBatch with an empty delta and pay a whole write-audit-
-    # publish epoch (measured ~1.4 s) to republish an identical state
-    _ndb = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old_ndb = spark.conf.get(_ndb)
-    spark.conf.set(_ndb, "false")
-    try:
-        q = snap.attach(ch, f"/tmp/sfdc_cdc_merge/{run_id}/ckpt")
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set(_ndb, old_ndb)
+    # scan parallelism; fresh checkpoint per call makes this free).
+    # _NDB=false suppresses the trailing zero-row micro-batch: it would
+    # invoke foreachBatch with an empty delta and pay a whole write-
+    # audit-publish epoch (measured ~1.4 s) to republish an identical
+    # state
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(drain_state_width(spark, landing)),
+            _NDB: "false",
+        },
+    ):
+        snap.attach(ch, f"/tmp/sfdc_cdc_merge/{run_id}/ckpt").awaitTermination()
     result = snap.current().select(
         "entity_name",
         "record_id",
@@ -930,21 +911,18 @@ def cdc_drift_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.col("fields")),
         )
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(drain_state_width(spark, landing))
-    )
-    # same trailing-empty-batch suppression as cdc_incremental_merge:
-    # an empty delta would still pay a full write-audit-publish epoch
-    _ndb = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old_ndb = spark.conf.get(_ndb)
-    spark.conf.set(_ndb, "false")
-    try:
+    # same drain width and trailing-empty-batch suppression as
+    # cdc_incremental_merge: an empty delta would still pay a full
+    # write-audit-publish epoch
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(drain_state_width(spark, landing)),
+            _NDB: "false",
+        },
+    ):
         q = attach_with_drift(snap, st, f"/tmp/sfdc_cdc_drift/{run_id}/ckpt")
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set(_ndb, old_ndb)
     result = snap.current().select(
         "entity_name",
         "record_id",

@@ -72,10 +72,11 @@ import json
 import os
 import shutil
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sfdc_cdc_aws_spark.materialize import file_lock, fsync_path, fsync_tree
 
 _KEY = ("entity_name", "uid")
 _ORDER = ("commit_ts_ms", "replay_id")
@@ -186,26 +187,6 @@ class IncrementalSnapshot:
             )
         return {"rows": n}
 
-    @staticmethod
-    def _fsync_dir_files(staged: str) -> None:
-        """fsync every staged data file + the epoch dir: the manifest
-        fsync alone is not durability — a power loss after a durable
-        MANIFEST but before the kernel flushes the parquet pages would
-        pin a torn epoch forever. (On HDFS/S3 the store's close/commit
-        semantics replace this; the local-FS path must do it itself.)"""
-        for root, _dirs, files in os.walk(staged):
-            for f in files:
-                fd = os.open(os.path.join(root, f), os.O_RDONLY)
-                try:
-                    os.fsync(fd)
-                finally:
-                    os.close(fd)
-        dfd = os.open(staged, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-
     def _publish(self, epoch: int, audit: dict) -> None:
         """Atomically flip MANIFEST to the audited epoch (fsync'd temp
         file + os.replace; directory fsync for rename durability).
@@ -225,32 +206,15 @@ class IncrementalSnapshot:
             finally:
                 os.close(fd)
             os.replace(tmp, self._manifest_path)
-            dfd = os.open(self.state_dir, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
+            fsync_path(self.state_dir)
 
-    @contextmanager
     def _state_lock(self):
-        """Short exclusive critical section over the state dir (flock:
-        released by the kernel on crash — no stale-lock recovery
-        needed). Held only around metadata mutations (rename, manifest
-        flip, torn-slot sweep), NEVER around data writes — writers
-        spend the long write/audit phase lock-free; that is what makes
-        the concurrency optimistic."""
-        import fcntl
-
-        fd = os.open(
-            os.path.join(self.state_dir, ".manifest.lock"),
-            os.O_WRONLY | os.O_CREAT,
-            0o644,
-        )
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            yield
-        finally:
-            os.close(fd)
+        """Short exclusive critical section over the state dir. Held
+        only around metadata mutations (rename, manifest flip,
+        torn-slot sweep), NEVER around data writes — writers spend the
+        long write/audit phase lock-free; that is what makes the
+        concurrency optimistic."""
+        return file_lock(os.path.join(self.state_dir, ".manifest.lock"))
 
     def _commit(self, staged: str, next_epoch: int) -> None:
         """Validate-and-swap: atomically claim ``epoch_<next>`` by
@@ -381,7 +345,7 @@ class IncrementalSnapshot:
         staged = os.path.join(self.state_dir, f"stage_{uuid.uuid4().hex[:12]}")
         try:
             merged.coalesce(4).write.mode("overwrite").parquet(staged)
-            self._fsync_dir_files(staged)  # data durable BEFORE commit
+            fsync_tree(staged)  # data durable BEFORE commit
             audit = self._audit(staged)  # AUDIT: raises → nothing published
         except Exception as e:
             shutil.rmtree(staged, ignore_errors=True)

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfdc_cdc_aws_spark.materialize import materialize
 from sfdc_cdc_aws_spark.operators.text import _DUCK_TOKENS, tokens_col
 from sfdc_cdc_aws_spark.registry import query
 
@@ -41,38 +42,22 @@ def _gate_pass() -> F.Column:
     )
 
 
-_LANDING_REV = "g1"
-
-
-def ensure_corpus_landing(
-    spark: SparkSession, sf_dir: str, base: str = "/tmp/sfdc_gate_landing"
-) -> str:
-    """Materialize the FULL document corpus as a 4-file landing dir
-    (idempotent per (revision, source content) — the cache-key
-    discipline of streaming/job.py:58-78) so maxFilesPerTrigger chops
-    the drain into multiple micro-batches; unlike ingest_dedup's
-    arrival slice, the gate feeds on every document with its full
-    metadata columns."""
-    import os
-
+def ensure_corpus_landing(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the FULL document corpus as a 4-file landing dir so
+    maxFilesPerTrigger chops the drain into multiple micro-batches;
+    unlike ingest_dedup's arrival slice, the gate feeds on every
+    document with its full metadata columns."""
     from sfdc_cdc_aws_spark.sources import load_table
-    from sfdc_cdc_aws_spark.sources.tables import table_path
 
-    st = os.stat(table_path(sf_dir, "documents"))
-    name = (
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{_LANDING_REV}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = os.path.join(base, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def build(out: str) -> None:
         (
             load_table(spark, sf_dir, "documents")
             .repartitionByRange(4, "doc_id")
             .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(out)
+            .write.parquet(out)
         )
-    return out
+
+    return materialize("gate_landing", sf_dir, ("documents",), build)
 
 
 @query(

@@ -52,17 +52,29 @@ def test_headline_queries_lead_the_line():
 
 
 def test_every_ensure_builder_is_prewarmed():
-    """Every ``def ensure_*`` in the package must be listed in
-    prewarm.PREWARMERS — a new fixture builder that dodges the
-    prewarm reintroduces first-call rebuild pollution into whichever
-    bench key touches it first (round-13 verdict item 5)."""
+    """Every package function that calls ``materialize`` or
+    ``catalog_fixture`` (a fixture builder, whatever its name) must be
+    listed in prewarm.PREWARMERS — a new fixture builder that dodges
+    the prewarm reintroduces first-call rebuild pollution into
+    whichever bench key touches it first (round-13 verdict item 5)."""
     import ast
     import os
 
     import sfdc_cdc_aws_spark
     from sfdc_cdc_aws_spark.prewarm import PREWARMERS
 
-    listed = {spec.rsplit(":", 1)[1] for spec in PREWARMERS}
+    primitives = {"materialize", "catalog_fixture"}
+
+    def calls_primitive(fn: ast.FunctionDef) -> bool:
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in primitives:
+                    return True
+        return False
+
+    listed = set(PREWARMERS)
     pkg_root = os.path.dirname(sfdc_cdc_aws_spark.__file__)
     found = set()
     for dirpath, _dirs, files in os.walk(pkg_root):
@@ -70,13 +82,14 @@ def test_every_ensure_builder_is_prewarmed():
             if not fname.endswith(".py"):
                 continue
             path = os.path.join(dirpath, fname)
+            mod = "sfdc_cdc_aws_spark." + os.path.relpath(path, pkg_root)[
+                : -len(".py")
+            ].replace(os.sep, ".")
             tree = ast.parse(open(path).read(), filename=path)
-            for node in ast.walk(tree):
-                if isinstance(node, ast.FunctionDef) and node.name.startswith(
-                    "ensure_"
-                ):
-                    found.add(node.name)
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and calls_primitive(node):
+                    found.add(f"{mod}:{node.name}")
     missing = found - listed
-    assert not missing, f"ensure_* builders not prewarmed: {sorted(missing)}"
-    stale = listed - found - {"_ensure_bucketed"}
+    assert not missing, f"fixture builders not prewarmed: {sorted(missing)}"
+    stale = listed - found
     assert not stale, f"PREWARMERS lists unknown builders: {sorted(stale)}"

@@ -29,39 +29,22 @@ EVDIR = "/tmp/sfdc_profile_eventlog"
 
 
 def build_session(cpus: int):
-    """session.py's exact confs + event logging (the event-log conf is
-    context-creation-time, so get_session can't add it post hoc)."""
-    from sfdc_cdc_aws_spark import session as S
-    from pyspark.sql import SparkSession
+    """The engine's session (``get_session``) with the event log on.
+    Event-log confs are read at context creation, so they go into
+    PYSPARK_SUBMIT_ARGS before the JVM starts."""
+    from sfdc_cdc_aws_spark.session import get_session
 
-    for k, v in S._BLAS_ENV.items():
-        os.environ.setdefault(k, v)
     os.makedirs(EVDIR, exist_ok=True)
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.warehouse.dir", "/tmp/sfdc_warehouse")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
+    confs = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": EVDIR,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        " ".join(f"--conf {k}={v}" for k, v in confs.items()) + " pyspark-shell"
     )
-    for k, v in S._BLAS_ENV.items():
-        builder = builder.config(f"spark.executorEnv.{k}", v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return get_session("profile", cpus)
 
 
 def parse_eventlog(path: str, t_lo_ms: float, t_hi_ms: float) -> None:
