@@ -106,9 +106,5 @@ def attach_with_drift(snap, change_stream: DataFrame, checkpoint: str):
         known.update(discovered_field_keys(batch_df))
         snap.upsert(widen_payload(batch_df, sorted(known)), epoch_id)
 
-    return (
-        change_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    # the snapshot's own start site: same drain discipline as attach
+    return snap._start_drain(change_stream, checkpoint, write_batch)

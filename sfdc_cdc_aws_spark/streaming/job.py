@@ -811,22 +811,7 @@ def cdc_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ch = changes_stream(spark, landing, max_files_per_trigger=8).select(
         "entity_name", "uid", "record_id", "change_type", "commit_ts_ms", "replay_id"
     )
-    # the dedup inside changes_stream keeps per-partition state stores
-    # alive across every micro-batch — scope the shuffle-partition
-    # count to the drain (state overhead tracks state volume, not
-    # scan parallelism; fresh checkpoint per call makes this free).
-    # _NDB=false suppresses the trailing zero-row micro-batch: it would
-    # invoke foreachBatch with an empty delta and pay a whole write-
-    # audit-publish epoch (measured ~1.4 s) to republish an identical
-    # state
-    with scoped_conf(
-        spark,
-        {
-            "spark.sql.shuffle.partitions": str(drain_state_width(spark, landing)),
-            _NDB: "false",
-        },
-    ):
-        snap.attach(ch, f"/tmp/sfdc_cdc_merge/{run_id}/ckpt").awaitTermination()
+    snap.attach(ch, f"/tmp/sfdc_cdc_merge/{run_id}/ckpt").awaitTermination()
     result = snap.current().select(
         "entity_name",
         "record_id",
@@ -911,18 +896,8 @@ def cdc_drift_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.col("fields")),
         )
     )
-    # same drain width and trailing-empty-batch suppression as
-    # cdc_incremental_merge: an empty delta would still pay a full
-    # write-audit-publish epoch
-    with scoped_conf(
-        spark,
-        {
-            "spark.sql.shuffle.partitions": str(drain_state_width(spark, landing)),
-            _NDB: "false",
-        },
-    ):
-        q = attach_with_drift(snap, st, f"/tmp/sfdc_cdc_drift/{run_id}/ckpt")
-        q.awaitTermination()
+    q = attach_with_drift(snap, st, f"/tmp/sfdc_cdc_drift/{run_id}/ckpt")
+    q.awaitTermination()
     result = snap.current().select(
         "entity_name",
         "record_id",

@@ -60,6 +60,28 @@ leaves the manifest on the prior epoch and the batch replays —
 re-merging is idempotent (``_latest_per_key`` is a max, and replayed
 rows lose to themselves).
 
+Drain discipline (``attach``, and ``drift.attach_with_drift`` through
+the same start site): a drain pays only for batches that carry data.
+
+- No trailing zero-row micro-batch
+  (``spark.sql.streaming.noDataMicroBatches.enabled=false``). A
+  stateful availableNow drain otherwise runs one extra batch after the
+  last data batch so watermark-gated output can emit. ``upsert`` merges
+  only the rows a batch delivers, and the stream's ``dropDuplicates``
+  emits each row on first sight, never on state eviction, so that
+  batch can carry no output. It would still pay a whole
+  write-audit-publish epoch that rewrites the full state unchanged.
+  Eviction of expired dedup state just moves to the next data batch,
+  under the same watermark.
+- A byte-derived stateful width (``drain_state_width`` over the
+  landing). It is set only when the checkpoint is new, i.e. has no
+  ``offsets`` dir yet; from then on Spark restores the width from the
+  offset log on every restart (state stores cannot be re-partitioned),
+  so a resume does not walk the landing. The landing is the ``path``
+  option of the stream's own file-source leaf
+  (``StreamingRelation``); a stream without one keeps the session
+  width.
+
 With Delta/Iceberg on the classpath this class collapses to
 ``MERGE INTO ... WHEN MATCHED UPDATE`` and file-level pruning
 replaces the full-state rewrite; the streaming side (checkpoint,
@@ -77,6 +99,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sfdc_cdc_aws_spark.materialize import file_lock, fsync_path, fsync_tree
+from sfdc_cdc_aws_spark.session import scoped_conf
+from sfdc_cdc_aws_spark.streaming.job import _NDB, drain_state_width
 
 _KEY = ("entity_name", "uid")
 _ORDER = ("commit_ts_ms", "replay_id")
@@ -366,12 +390,54 @@ class IncrementalSnapshot:
         self._gc(next_epoch)
 
     def attach(self, change_stream: DataFrame, checkpoint: str):
-        """Maintain the snapshot from a streaming change feed."""
-        return (
-            change_stream.writeStream.foreachBatch(
-                lambda df, epoch: self.upsert(df, epoch)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        """Maintain the snapshot from a streaming change feed: an
+        availableNow drain whose every micro-batch is one ``upsert``.
+
+        Drain discipline (module docstring): the trailing zero-row
+        micro-batch is skipped, because ``upsert`` only merges rows a
+        batch delivers and ``dropDuplicates`` emits on first sight, so
+        that batch could only republish an identical state. The
+        stateful width is ``drain_state_width`` over the landing named
+        by the stream's file-source leaf, set when ``checkpoint`` has
+        no offsets yet and restored from the offset log on restart."""
+        return self._start_drain(
+            change_stream, checkpoint, lambda df, epoch: self.upsert(df, epoch)
         )
+
+    def _start_drain(self, change_stream: DataFrame, checkpoint: str, write_batch):
+        """The one ``writeStream...start()`` site for snapshot drains
+        (``attach`` and ``drift.attach_with_drift``). The confs are
+        scoped around ``start()`` only: the query clones the session
+        when it is constructed, so both are pinned by the time
+        ``start()`` returns and the caller's session is restored at
+        once, on the failure path too."""
+        spark = change_stream.sparkSession
+        confs = {_NDB: "false"}
+        if not os.path.isdir(os.path.join(checkpoint, "offsets")):
+            landing = _stream_landing(change_stream)
+            if landing is not None:
+                confs["spark.sql.shuffle.partitions"] = str(
+                    drain_state_width(spark, landing)
+                )
+        with scoped_conf(spark, confs):
+            return (
+                change_stream.writeStream.foreachBatch(write_batch)
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+
+
+def _stream_landing(stream: DataFrame) -> str | None:
+    """The directory a file-source stream reads: the ``path`` option
+    of the first ``StreamingRelation`` leaf of its logical plan, or
+    None when no leaf is a file source with a path."""
+    leaves = stream._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            continue
+        path = leaf.dataSource().options().get("path")
+        if path.isDefined():
+            return path.get()
+    return None

@@ -17,7 +17,10 @@ def test_warm_drain_resumes_and_matches_batch(spark, sf_dir):
     assert r["prefix_files"] == 14 and r["delta_files"] == 2
     assert r["prefix_changes"] > 0 and r["delta_changes"] > 0
     # cold drained only the prefix in multiple epochs
-    # (maxFilesPerTrigger=8 over 14 files -> 2 micro-batches)
+    # (maxFilesPerTrigger=8 over 14 files -> 2 micro-batches) and
+    # published exactly one epoch per data batch: no trailing
+    # zero-row batch republished the state (epochs_cold counts
+    # published epochs from the manifest, not retained ones)
     assert r["epochs_cold"] == 2
     # parity is asserted inside run() (it raises otherwise) — restate
     # the contract here so a refactor that drops the check fails loud
