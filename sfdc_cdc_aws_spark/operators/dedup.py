@@ -18,6 +18,13 @@ Scale design notes, since dedup is the classic 100 TB trap:
 * Cross-engine determinism: all hashing goes through
   ``text.shared_hash64`` (md5-derived 60-bit int) because Spark and
   DuckDB ``hash()`` are different algorithms.
+* Tokenize once per document: a lambda must reference a bound token
+  attribute, because Catalyst does not CSE inside lambda bodies. Every
+  shingle and signature site projects ``tokens_col()`` in a child
+  projection and builds its grams over that column
+  (``text.word_ngrams``); with the tokenizer inlined, each document
+  was re-split once per ``element_at`` per gram position.
+  tests/test_plan_shapes.py pins that no lambda body holds ``split(``.
 """
 
 from __future__ import annotations
@@ -34,6 +41,7 @@ from sfdc_cdc_aws_spark.operators.text import (
     _DUCK_TOKENS,
     shared_hash64,
     tokens_col,
+    word_ngrams,
 )
 from sfdc_cdc_aws_spark.sources import load_table
 
@@ -99,19 +107,27 @@ def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def _word_shingles(n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the tokenized text (narrow)."""
-    t = tokens_col()
-    grams = F.when(
-        F.size(t) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(t, i + j) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
+def _word_shingles(t: Column, n: int) -> Column:
+    """Distinct word n-gram shingles of the bound token array ``t``
+    (narrow). A lambda must reference a bound token attribute, because
+    Catalyst does not CSE inside lambda bodies — see
+    :func:`~sfdc_cdc_aws_spark.operators.text.word_ngrams`."""
+    return F.array_distinct(word_ngrams(t, n))
+
+
+def _shingle_hashes(d: DataFrame, *keys: str) -> DataFrame:
+    """(keys..., h): one row per distinct word-4-gram shingle of each
+    document, hashed by ``shared_hash64``. The token array is bound in
+    a child projection, so each document is tokenized once; a
+    document with fewer than 4 tokens has no shingles and so no row."""
+    return d.select(*keys, tokens_col().alias("_t")).select(
+        *keys,
+        F.explode(
+            F.transform(
+                _word_shingles(F.col("_t"), 4), lambda g: shared_hash64(g)
+            )
+        ).alias("h"),
+    )
 
 
 _DUCK_SHINGLES3 = (
@@ -126,7 +142,9 @@ def minhash_sig_df(d: DataFrame) -> DataFrame:
     expressions). (doc_id, sig: array<bigint> of N_HASHES minhashes);
     sig[i] = min over shingles of the i-th universal hash
     (a_i*x + b_i) mod P of the shingle's 31-bit content hash."""
-    hashed = F.transform(_word_shingles(3), lambda s: _spark_hash31(s))
+    hashed = F.transform(
+        _word_shingles(F.col("_t"), 3), lambda s: _spark_hash31(s)
+    )
     # One fold over the hashed shingles, updating all N_HASHES mins
     # per element. The naive formulation — transform(sequence(0,15),
     # i -> array_min(transform(hashed, affine_i))) — re-evaluates the
@@ -148,7 +166,8 @@ def minhash_sig_df(d: DataFrame) -> DataFrame:
         ),
     )
     return (
-        d.where(F.size(tokens_col()) >= 3)
+        d.select("doc_id", tokens_col().alias("_t"))
+        .where(F.size("_t") >= 3)
         .select("doc_id", sig.alias("sig"))
     )
 
@@ -156,26 +175,30 @@ def minhash_sig_df(d: DataFrame) -> DataFrame:
 def minhash_sig_agg_df(d: DataFrame) -> DataFrame:
     """BATCH twin of minhash_sig_df — identical signature VALUES
     (same shingle hash, same affine family, same mins; the two are
-    pinned byte-equal by tests/test_dedup_blocking.py), ~10× faster.
+    pinned byte-equal by tests/test_dedup_blocking.py). Measured at
+    sf0.1 (4-core VM, one session, 6 interleaved runs each, noop
+    write): 0.58 s median vs the fold's 0.69 s. Before the token array
+    was bound both took ~2.8-3.0 s: re-tokenizing inside the shingle
+    lambda, not the fold, was the cost.
 
     The expression fold above runs through Catalyst's interpreted
     higher-order functions: every shingle allocates a fresh
     16-element accumulator array and evaluates a nested
-    transform/zip_with lambda tree outside whole-stage codegen —
-    measured ~14 ms/doc, 97% of the bucketed admit drain's x100 wall
-    (BENCH_SCALE100 x100_profile.bands_s). This formulation stays
-    entirely inside codegen: explode the hashed shingles once, derive
-    the N_HASHES affine images as flat integer columns, and take
-    per-doc mins with a hash aggregate. Map-side partial aggregation
-    collapses the exploded rows before the (doc_id-keyed) exchange,
-    so the shuffle carries one 16-column row per doc — at 100 TB the
-    explode never materializes off-core.
+    transform/zip_with lambda tree outside whole-stage codegen. This
+    formulation stays entirely inside codegen: explode the hashed
+    shingles once, derive the N_HASHES affine images as flat integer
+    columns, and take per-doc mins with a hash aggregate. Map-side
+    partial aggregation collapses the exploded rows before the
+    (doc_id-keyed) exchange, so the shuffle carries one 16-column row
+    per doc — at 100 TB the explode never materializes off-core.
 
     Batch-only: the groupBy makes it a streaming AGGREGATION on an
     unbounded input (breaking downstream stream-static joins), so
     readStream paths (stream_minhash_ingest) keep the expression
     fold; foreachBatch folds and materializers use this."""
-    hashed = F.transform(_word_shingles(3), lambda s: _spark_hash31(s))
+    hashed = F.transform(
+        _word_shingles(F.col("_t"), 3), lambda s: _spark_hash31(s)
+    )
     mins = [
         F.min(((i * 31 + 17) * F.col("_x") + i * 7919 + 3) % P31).alias(
             f"_s{i}"
@@ -183,7 +206,7 @@ def minhash_sig_agg_df(d: DataFrame) -> DataFrame:
         for i in range(N_HASHES)
     ]
     return (
-        d.where(F.size(tokens_col()) >= 3)
+        d.select("doc_id", tokens_col().alias("_t"))
         .select("doc_id", F.explode(hashed).alias("_x"))
         .groupBy("doc_id")
         .agg(*mins)
@@ -510,14 +533,20 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # nested higher-order aggregate with a per-bit shift: the Python
     # shiftright/shiftleft wrappers require literal shift amounts, so
-    # the expression is written in SQL where lambda vars are allowed
+    # the expression is written in SQL where lambda vars are allowed.
+    # All N_SIMHASH_BITS vote sums come from ONE fold over hs, which
+    # stays outside every lambda body: CollapseProject inlines the
+    # single reference to hs, and inside a per-bit lambda that re-ran
+    # the tokenizer and every token's md5 once per bit.
     simhash_sql = f"""
     aggregate(
-      transform(sequence(0, {N_SIMHASH_BITS - 1}),
-        j -> CASE WHEN aggregate(hs, 0L,
-                       (acc, x) -> acc + ((shiftright(x, j) & 1) * 2 - 1)) > 0
-             THEN shiftleft(1L, j) ELSE 0L END),
-      0L, (acc, v) -> acc + v) AS simhash
+      zip_with(
+        aggregate(hs, array_repeat(0L, {N_SIMHASH_BITS}),
+          (acc, x) -> zip_with(acc, sequence(0, {N_SIMHASH_BITS - 1}),
+                       (v, j) -> v + ((shiftright(x, j) & 1) * 2 - 1))),
+        sequence(0, {N_SIMHASH_BITS - 1}),
+        (v, j) -> CASE WHEN v > 0 THEN shiftleft(1L, j) ELSE 0L END),
+      0L, (acc, b) -> acc + b) AS simhash
     """
     sims = (
         d.where(F.size(t) > 0)
@@ -606,15 +635,7 @@ def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-hashes the corpus (profiled: 3 stages x ~20 s executor run at
     # sf0.1, ~the whole key). The narrow (doc_id, lang, h) rows are
     # the cheap proxy the heavy work reduces to (guide §8).
-    sh = truncate_lineage(
-        d.where(F.size(tokens_col()) >= 4).select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.transform(_word_shingles(4), lambda g: shared_hash64(g))
-            ).alias("h"),
-        )
-    )
+    sh = truncate_lineage(_shingle_hashes(d, "doc_id", "lang"))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     inter = (
         salted_bucket_pairs(
@@ -727,17 +748,7 @@ def allpairs_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arrays), and without the checkpoint each re-runs the
     # tokenize+md5 pipeline — measured 5x the whole key's wall at
     # sf0.1 (the lsh_eval_pr discipline: audit inputs run once)
-    sh = (
-        d.where(F.size(tokens_col()) >= 4)
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.transform(_word_shingles(4), lambda g: shared_hash64(g))
-            ).alias("h"),
-        )
-        .localCheckpoint()
-    )
+    sh = _shingle_hashes(d, "doc_id", "lang").localCheckpoint()
     dfreq = sh.groupBy("lang", "h").agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "h")
     ranked = (
@@ -1070,15 +1081,8 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically). At 100 TB the corpus shingles never shuffle, only
     the per-doc hit counts do. Documents with any overlap are the
     candidates a pretrain pipeline quarantines before training."""
-    from sfdc_cdc_aws_spark.operators.text import shared_hash64
-
     d = load_table(spark, sf_dir, "documents", widen=True)
-    sh = d.where(F.size(tokens_col()) >= 4).select(
-        "doc_id",
-        F.explode(
-            F.transform(_word_shingles(4), lambda g: shared_hash64(g))
-        ).alias("h"),
-    )
+    sh = _shingle_hashes(d, "doc_id")
     bench = F.broadcast(
         sh.where(F.col("doc_id") < BENCH_DOC_MAX).select("h").distinct()
     )
@@ -1124,15 +1128,8 @@ def decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     final anti-join broadcasts; the shingle side reuses the same
     narrow hashed-shingle plan — at 100 TB nothing but 8-byte hashes
     and doc ids ever shuffles."""
-    from sfdc_cdc_aws_spark.operators.text import shared_hash64
-
     d = load_table(spark, sf_dir, "documents", widen=True)
-    sh = d.where(F.size(tokens_col()) >= 4).select(
-        "doc_id",
-        F.explode(
-            F.transform(_word_shingles(4), lambda g: shared_hash64(g))
-        ).alias("h"),
-    )
+    sh = _shingle_hashes(d, "doc_id")
     bench = F.broadcast(
         sh.where(F.col("doc_id") < BENCH_DOC_MAX).select("h").distinct()
     )
@@ -1550,22 +1547,8 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").join(
         PF.broadcast(cand_docs), "doc_id", "left_semi"
     )
-    t = tokens_col()
-    sh = (
-        d.where(PF.size(t) >= 3)
-        .select(
-            "doc_id",
-            PF.explode(
-                PF.array_distinct(
-                    PF.expr(
-                        "transform(sequence(1, size(filter(split(lower(text),"
-                        " '\\\\W+'), x -> x != '')) - 2), i -> concat_ws(' ',"
-                        " slice(filter(split(lower(text), '\\\\W+'),"
-                        " x -> x != ''), i, 3)))"
-                    )
-                )
-            ).alias("g"),
-        )
+    sh = d.select("doc_id", tokens_col().alias("_t")).select(
+        "doc_id", PF.explode(_word_shingles(PF.col("_t"), 3)).alias("g")
     )
     sizes = sh.groupBy("doc_id").agg(PF.count("*").alias("n"))
     a = sh.select(PF.col("doc_id").alias("doc_a"), "g")
@@ -1905,12 +1888,15 @@ def neardup_ensemble_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation consumed by two sides of a join runs twice)
     d = load_table(spark, sf_dir, "documents", widen=True)
     shs = (
-        d.where(F.size(tokens_col()) >= 4)
+        d.select("doc_id", "lang", tokens_col().alias("_t"))
+        .where(F.size("_t") >= 4)
         .select(
             "doc_id",
             "lang",
             F.array_distinct(
-                F.transform(_word_shingles(4), lambda g: shared_hash64(g))
+                F.transform(
+                    _word_shingles(F.col("_t"), 4), lambda g: shared_hash64(g)
+                )
             ).alias("hs"),
         )
         .withColumn("n", F.size("hs"))

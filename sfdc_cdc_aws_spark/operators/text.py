@@ -31,6 +31,26 @@ def tokens_col(text: Column = None) -> Column:
     return F.filter(F.split(F.lower(text), TOKEN_SPLIT), lambda x: x != F.lit(""))
 
 
+def word_ngrams(t: Column, n: int) -> Column:
+    """Word n-grams of the token array ``t``, in document order, each
+    joined by single spaces; empty when ``t`` has fewer than n tokens.
+
+    ``t`` must be a column reference to a token array bound in a child
+    projection (``tokens_col().alias(...)``), never ``tokens_col()``
+    itself: a lambda must reference a bound token attribute, because
+    Catalyst does not CSE inside lambda bodies. Inlined, the tokenizer
+    re-splits the document once per ``element_at``, n times per gram;
+    bound, it runs once per row (CollapseProject keeps the child
+    projection because the attribute is referenced more than once)."""
+    return F.when(
+        F.size(t) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(t) - (n - 1)),
+            lambda i: F.concat_ws(" ", *[F.element_at(t, i + j) for j in range(n)]),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def shared_hash64(col: Column) -> Column:
     """Deterministic 60-bit hash computable identically in Spark and
     DuckDB: first 15 hex chars of md5. (Spark ``hash()`` and DuckDB
@@ -81,16 +101,9 @@ def ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform over the token array) — the n-gram machinery that also
     feeds the MinHash shingles in operators/dedup.py."""
     d = load_table(spark, sf_dir, "documents", widen=True)
-    t = tokens_col()
-    bigrams = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(t, i), F.element_at(t, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
-        d.select(F.explode(bigrams).alias("bigram"))
+        d.select(tokens_col().alias("t"))
+        .select(F.explode(word_ngrams(F.col("t"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("n"))
     )
@@ -472,14 +485,9 @@ def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed aggregations, both map-side combinable; nothing but (doc_id,
     bigram, count) ever shuffles."""
     d = load_table(spark, sf_dir, "documents", widen=True)
-    t = tokens_col()
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 1),
-        lambda i: F.concat_ws(" ", F.element_at(t, i), F.element_at(t, i + 1)),
-    )
     per_bigram = (
-        d.where(F.size(t) >= 2)
-        .select("doc_id", F.explode(bigrams).alias("g"))
+        d.select("doc_id", tokens_col().alias("t"))
+        .select("doc_id", F.explode(word_ngrams(F.col("t"), 2)).alias("g"))
         .groupBy("doc_id", "g")
         .agg(F.count("*").alias("n"))
     )

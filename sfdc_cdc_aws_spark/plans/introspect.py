@@ -101,3 +101,27 @@ def has_partial_aggregate(df: DataFrame) -> bool:
     (``partial_...`` function markers) feeding a final aggregate —
     i.e. the shuffle carries combined state, not raw rows."""
     return bool(re.search(r"\bpartial_", plan_string(df)))
+
+
+def lambda_bodies(df: DataFrame) -> list[str]:
+    """Every ``lambdafunction(...)`` body in the optimized logical
+    plan, cut out by balanced parentheses (nested lambdas appear both
+    inside their parent's body and on their own). Catalyst does not
+    eliminate common subexpressions inside lambda bodies, so whatever
+    a body contains runs once per array element. The plan prints one
+    operator per line, so a body never crosses a newline; a line cut
+    short (a truncated cached-relation plan) ends its open bodies."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    opener = "lambdafunction("
+    bodies: list[str] = []
+    for line in plan.splitlines():
+        start = line.find(opener)
+        while start >= 0:
+            i = j = start + len(opener)
+            depth = 1
+            while depth and j < len(line):
+                depth += {"(": 1, ")": -1}.get(line[j], 0)
+                j += 1
+            bodies.append(line[i : j - 1] if depth == 0 else line[i:])
+            start = line.find(opener, i)
+    return bodies

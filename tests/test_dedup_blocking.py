@@ -419,10 +419,9 @@ def test_allpairs_prefix_actually_prunes(spark):
 
     from sfdc_cdc_aws_spark.operators.dedup import (
         PREFIX_JACCARD_MIN,
-        _word_shingles,
+        _shingle_hashes,
         allpairs_prefix_jaccard,
     )
-    from sfdc_cdc_aws_spark.operators.text import shared_hash64, tokens_col
     from sfdc_cdc_aws_spark.sources import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -434,13 +433,7 @@ def test_allpairs_prefix_actually_prunes(spark):
     # brute-force answer over the same shingle relation must equal
     # the prefix-filtered answer pair-for-pair
     d = load_table(spark, sf, "documents", widen=True)
-    sh = d.where(F.size(tokens_col()) >= 4).select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.transform(_word_shingles(4), lambda g: shared_hash64(g))
-        ).alias("h"),
-    )
+    sh = _shingle_hashes(d, "doc_id", "lang")
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     inter = (
         sh.alias("a")

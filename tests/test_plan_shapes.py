@@ -9,11 +9,14 @@ product or an extra shuffle.
 
 from __future__ import annotations
 
+import pytest
+
 from sfdc_cdc_aws_spark.plans.introspect import (
     codegen_stage_count,
     exchange_count,
     has_partial_aggregate,
     join_kinds,
+    lambda_bodies,
     pushed_filters,
     read_schemas,
 )
@@ -823,3 +826,37 @@ def test_quartet_ann_probe_only_batch_side_shuffles(spark):
     assert "commit_batch" in plan and "PartitionFilters" in plan
     idx_scan = [ln for ln in plan.splitlines() if "quartet_vbkt_" in ln]
     assert idx_scan and all("Exchange" not in ln for ln in idx_scan)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "contamination_check",
+        "decontaminate_anti",
+        "ngram_counts",
+        "repetition_score",
+        "simhash_dedup",
+        "minhash_estimate_accuracy",
+        "minhash_sig_df",
+        "minhash_sig_agg_df",
+    ],
+)
+def test_no_tokenizer_inside_lambda_bodies(spark, name):
+    """The n-gram and signature keys tokenize each document ONCE: no
+    lambda body in the optimized plan may contain the tokenizer's
+    ``split(``. Catalyst does not CSE inside lambda bodies, so a
+    tokenizer inlined into a per-gram (or per-bit) lambda re-splits
+    the whole document once per array element. ``tokens_col``'s own
+    ``filter`` lambda (``x != ''``) holds no split and passes."""
+    if name.startswith("minhash_sig"):
+        from sfdc_cdc_aws_spark.operators import dedup
+        from sfdc_cdc_aws_spark.sources import load_table
+
+        docs = load_table(spark, SF, "documents", widen=True)
+        df = getattr(dedup, name)(docs)
+    else:
+        df = _df(spark, name)
+    bodies = lambda_bodies(df)
+    assert bodies, "expected higher-order functions in the plan"
+    offenders = [b[:160] for b in bodies if "split(" in b]
+    assert not offenders, offenders
