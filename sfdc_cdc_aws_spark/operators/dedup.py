@@ -58,11 +58,8 @@ MINHASH_BUCKET_CAP = 512
 # signature-cache read (minhash_signatures): the consumer-side band
 # explode is cheap integer/array work, so a partition per ~4 MB keeps
 # tasks meaningful instead of scheduling 32 crumbs (round-14's
-# unconditional spread — see minhash_signatures). Env-overridable so a
-# cluster deployment can tune bytes-per-task without a code change.
-_SIG_SPREAD_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SIG_SPREAD_BYTES", str(4 << 20))
-)
+# unconditional spread — see minhash_signatures).
+_SIG_SPREAD_BYTES = 4 << 20
 
 
 def _spark_hash31(col: Column) -> Column:

@@ -112,13 +112,10 @@ def stream_backfill_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dedup emits on first arrival — the trailing zero-row batch only
     # evicts state, so skip it
-    from sfdc_cdc_aws_spark.streaming.job import drain_state_width
-
     live = _partial(
         run_available_now(
             tail,
             "backfill_live",
-            shuffle_partitions=drain_state_width(spark, landing),
             no_data_batch=False,
         ),
         "live",

@@ -219,13 +219,10 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # every observed row is new, so the cross-batch sum is exact)
         .observe("flagged", F.count(F.lit(1)).alias("n_pairs"))
     )
-    from sfdc_cdc_aws_spark.streaming.job import drain_state_width
-
     return run_available_now(
         matches,
         "ann_ingest",
         output_mode="append",
-        shuffle_partitions=drain_state_width(spark, landing),
     )
 
 

@@ -18,16 +18,62 @@ pattern (streaming/job.py:ensure_landing); the reference itself has no dedup —
 this is §2.9 extension surface composed with S1/S5 streaming
 machinery (EmpConnector.java:89-120's subscribe loop is the arrival
 analog).
+
+Verdict drains
+--------------
+The admit loop (``run_admit_drain``), its bucketed twin
+(``run_admit_drain_bucketed``) and the composed screen
+(``ingest_quartet.run_quartet_drain``) are three folds over ONE
+skeleton, ``run_verdict_drain``. It implements the Structured
+Streaming exactly-once contract: idempotent per-batch sink writes,
+then the checkpoint commit.
+
+- **Lock.** A non-blocking ``flock`` on ``<state>.lock`` next to the
+  drain's deterministic state root (``*_state_base``). A second drain
+  of the same fixture raises at once and touches nothing. Everything
+  after the lock — precompute, reset, stream, read-back — runs inside
+  it, so a raise anywhere releases it.
+- **Resume.** No checkpoint under the root means a fresh drain: the
+  BatchIndex tables go back to their corpus partition. A checkpoint
+  means a resume: the committed partitions and dirs ARE the state, the
+  file source (``maxFilesPerTrigger=1`` over ``landing/b*``, one batch
+  per file in stamped mtime order) replays only the uncommitted batch,
+  and its probe sees the index "as of" commits < b only.
+- **Idempotent commits.** Each fold checkpoints its verdict relation
+  (``localCheckpoint``) and overlaps its writes: the verdict dir
+  ``verdicts/b<b>`` plus the drain's own commits (a delta dir, or a
+  BatchIndex partition via dynamic-partition-overwrite ``insertInto``,
+  scoped by ``scoped_conf`` around the stream). Every write overwrites
+  exactly batch b's target, so a replayed batch rewrites it.
+- **Kill drill.** ``kill_after_batch=N`` SIGKILLs the process group
+  after batch N's writes land but before its checkpoint commits — the
+  torn window a real crash exposes. ``keep_state=True`` leaves the
+  state root (and index partitions) for the resume to find; otherwise
+  both are cleaned up on success and failure alike.
+- **Profile.** ``job.LAST_DRAIN_PROFILE[<registry key>]`` holds the
+  batch count, the skeleton's sequential ``phases`` (reset,
+  precompute, stream, result, cleanup; they sum to at most the drain's
+  wall) and the per-batch ``fold`` phases summed over batches (refresh,
+  verdict, and one ``write_<label>_s`` per overlapped write).
 """
 
 from __future__ import annotations
 
+import fcntl
 import os
+import shutil
+import signal
+import time
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from dataclasses import dataclass
+from operator import attrgetter
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sfdc_cdc_aws_spark.materialize import catalog_fixture, kind_dir, materialize
+from sfdc_cdc_aws_spark.materialize import catalog_fixture, materialize
 from sfdc_cdc_aws_spark.operators.dedup import (
     _DUCK_LSH_PAIRS_CTE,
     _DUCK_SIG_CTE,
@@ -44,7 +90,7 @@ from sfdc_cdc_aws_spark.registry import query
 from sfdc_cdc_aws_spark.session import scoped_conf, truncate_lineage
 from sfdc_cdc_aws_spark.sources import load_table
 from sfdc_cdc_aws_spark.sources.tables import table_path
-from sfdc_cdc_aws_spark.streaming.job import run_available_now
+from sfdc_cdc_aws_spark.streaming.job import LAST_DRAIN_PROFILE, run_available_now
 
 # deterministic corpus/arrival split: every 4th doc "arrives", the
 # rest are the standing corpus. Scale-independent and replayable.
@@ -74,11 +120,7 @@ def spread_batch(df: DataFrame) -> DataFrame:
     return df.repartition(par, "doc_id")
 
 
-def drain_bands(
-    spark: SparkSession,
-    landing: str,
-    schema: str = "doc_id long, text string",
-) -> DataFrame:
+def drain_bands(spark: SparkSession, landing: str) -> DataFrame:
     """Band rows of EVERY arrival in a landing, computed ONCE per
     drain (guide §2.4: remove duplicated work). A doc's MinHash bands
     are a pure function of its text — nothing about them depends on
@@ -94,7 +136,7 @@ def drain_bands(
     identical relation; recomputed fresh inside every invocation (no
     cross-run cache). localCheckpoint pins one execution for the
     N-batch fan-out."""
-    arr = spark.read.schema(schema).parquet(landing + "/b*")
+    arr = spark.read.schema("doc_id long, text string").parquet(landing + "/b*")
     return (
         sig_bands(minhash_sig_agg_df(spread_batch(arr.select("doc_id", "text"))))
         .select("doc_id", "band_id", "bucket")
@@ -213,13 +255,10 @@ def stream_minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_shared_bands"))
     )
     # complete mode: the last data batch already emitted the full state
-    from sfdc_cdc_aws_spark.streaming.job import drain_state_width
-
     return run_available_now(
         matches,
         "minhash_ingest",
         output_mode="complete",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )
 
@@ -453,27 +492,252 @@ def admit_state_base(landing: str) -> str:
     return f"/tmp/sfdc_admit_state/{os.path.basename(landing)}"
 
 
-def acquire_state_lock(state: str) -> int:
-    """Exclusive advisory lock on a drain's deterministic state root
-    (round-12 ADVICE): two concurrent drains of the same fixture
-    (pytest-xdist, parallel bench lanes) would share one streaming
-    checkpoint and overwrite each other's delta dirs. flock releases
-    automatically when the holder dies — including SIGKILL — so the
-    kill-and-resume drill is unaffected. Returns the fd to close when
-    the drain finishes; raises if another drain holds the root."""
-    import fcntl
+@dataclass(frozen=True)
+class BatchIndex:
+    """A commit_batch-partitioned index table, bucketed on
+    ``bucket_cols``, whose files live under ``path``: the corpus is
+    partition -1 (built once per fixture fingerprint), and batch b's
+    admissions land as partition b via dynamic-partition-overwrite
+    ``insertInto`` — idempotent under micro-batch replay, every
+    partition keeps the bucketed layout, and partition pruning gives
+    batch b the index "as of" its commit."""
 
-    os.makedirs(os.path.dirname(state) or "/", exist_ok=True)
+    name: str
+    path: str
+    bucket_cols: tuple[str, ...]
+
+    def ensure_corpus(self, spark: SparkSession, build_corpus) -> BatchIndex:
+        """Create the table with the corpus in partition -1 unless a
+        previous build finished (marker AND corpus partition dir — a
+        misconfigured static-mode insert overwrite deletes sibling
+        partition dirs but leaves root files)."""
+        marker = os.path.join(self.path, "_CORPUS_OK")
+        if not (
+            spark.catalog.tableExists(self.name)
+            and os.path.exists(marker)
+            and os.path.isdir(os.path.join(self.path, "commit_batch=-1"))
+        ):
+            spark.sql(f"DROP TABLE IF EXISTS {self.name}")
+            shutil.rmtree(self.path, ignore_errors=True)
+            (
+                build_corpus()
+                .withColumn("commit_batch", F.lit(-1))
+                # same murmur3 hash as the bucket assignment: one task
+                # per bucket, one sorted file per bucket
+                .repartition(INDEX_BUCKETS, *self.bucket_cols)
+                .write.partitionBy("commit_batch")
+                .bucketBy(INDEX_BUCKETS, *self.bucket_cols)
+                .sortBy(*self.bucket_cols)
+                .option("path", self.path)
+                .mode("overwrite")
+                .saveAsTable(self.name)
+            )
+            with open(marker, "w") as f:
+                f.write("ok")
+        return self
+
+    def refresh(self, s: SparkSession) -> None:
+        """foreachBatch runs in a CLONED session whose catalog relation
+        cache is separate from the outer session's: refresh through
+        the batch's session so batch b sees the partition b-1
+        committed."""
+        s.catalog.refreshTable(self.name)
+
+    def as_of(self, s: SparkSession, batch_id: int) -> DataFrame:
+        """The index as of batch b: corpus ∪ commits < b. On
+        crash-resume the torn batch's own partition (written,
+        checkpoint not committed) is pruned away, so its re-execution
+        cannot flag a doc as a dup of itself."""
+        return s.table(self.name).where(F.col("commit_batch") < batch_id)
+
+    def commit(self, rows: DataFrame, batch_id: int) -> None:
+        """Overwrite exactly partition ``commit_batch=batch_id``
+        (the drain scopes partitionOverwriteMode=dynamic; static mode
+        would overwrite the corpus too)."""
+        (
+            rows.withColumn("commit_batch", F.lit(batch_id))
+            .repartition(INDEX_BUCKETS, *self.bucket_cols)
+            .write.mode("overwrite")
+            .insertInto(self.name)
+        )
+
+    def reset(self, spark: SparkSession) -> None:
+        """Back to the pristine corpus without touching its build:
+        admission partitions are dropped THROUGH THE CATALOG (ALTER
+        TABLE ... DROP PARTITION removes metadata and directory, so
+        catalog and filesystem cannot diverge — round-13 ADVICE), and
+        a directory a crash left without catalog metadata is swept."""
+        if os.path.isdir(self.path):
+            for d in sorted(os.listdir(self.path)):
+                if d.startswith("commit_batch=") and d != "commit_batch=-1":
+                    spark.sql(
+                        f"ALTER TABLE {self.name} DROP IF EXISTS "
+                        f"PARTITION (commit_batch={d.split('=', 1)[1]})"
+                    )
+                    shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        spark.catalog.refreshTable(self.name)
+
+
+#: an index table's storage dir (the resume drills list its partitions)
+_admit_bkt_path = attrgetter("path")
+
+
+@contextmanager
+def _timed(phases: dict, key: str) -> Iterator[None]:
+    t0 = time.monotonic()
+    try:
+        yield
+    finally:
+        phases[key] = phases.get(key, 0.0) + time.monotonic() - t0
+
+
+@contextmanager
+def _state_lock(state: str) -> Iterator[None]:
+    """Exclusive advisory lock on a drain's state root (round-12
+    ADVICE): two concurrent drains of one fixture would share a
+    checkpoint and overwrite each other's outputs. flock is released
+    by the kernel when the holder dies — SIGKILL included — so the
+    kill drill's resume can take it again."""
+    os.makedirs(os.path.dirname(state), exist_ok=True)
     fd = os.open(f"{state}.lock", os.O_CREAT | os.O_RDWR)
     try:
-        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    except BlockingIOError:
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            raise RuntimeError(
+                f"another drain holds {state}.lock — one drain at a time "
+                "per fixture state root"
+            ) from None
+        yield
+    finally:
         os.close(fd)
-        raise RuntimeError(
-            f"another drain holds {state}.lock — one drain at a time "
-            "per fixture state root"
-        ) from None
-    return fd
+
+
+def _screen(ids: DataFrame, hits: DataFrame, col: str) -> DataFrame:
+    """(doc_id, ``col``) for a batch: True unless the doc is in
+    ``hits`` (distinct doc_ids an index probe flagged)."""
+    return ids.join(hits.withColumn("hit", F.lit(True)), "doc_id", "left").select(
+        "doc_id", F.coalesce(~F.col("hit"), F.lit(True)).alias(col)
+    )
+
+
+def _admitted_bands(bands_all: DataFrame, admitted: DataFrame) -> DataFrame:
+    """The band rows an admitted batch folds back into a dup index."""
+    return bands_all.join(F.broadcast(admitted), "doc_id").select(
+        F.col("doc_id").alias("corpus_doc"), "band_id", "bucket"
+    )
+
+
+def run_verdict_drain(
+    spark: SparkSession,
+    name: str,
+    landing: str,
+    state: str,
+    precompute,
+    verdicts,
+    commits,
+    indexes: tuple[BatchIndex, ...] = (),
+    keep_state: bool = False,
+    kill_after_batch: int | None = None,
+) -> DataFrame:
+    """The one resumable verdict drain (module docstring, "Verdict
+    drains"). A drain passes what differs:
+
+    - ``precompute()`` — drain-wide relations, run once under the lock;
+    - ``verdicts(pre, ids, batch_id)`` — batch b's (doc_id, ...,
+      admitted) relation over the batch's doc_ids;
+    - ``commits(pre, admitted, batch_id)`` — ``{label: write}``, the
+      batch's idempotent writes besides its verdict dir;
+    - ``indexes`` — the BatchIndex tables the folds probe and commit.
+
+    Returns (doc_id, batch_id, verdict columns...) read back from the
+    per-batch verdict dirs under ``state``."""
+    verdict_dir, ckpt = f"{state}/verdicts", f"{state}/ckpt"
+    phases: dict[str, float] = {}
+    fold_phases: dict[str, float] = {}
+    LAST_DRAIN_PROFILE[name] = profile = {
+        "batches": 0,
+        "phases": phases,
+        "fold": fold_phases,
+    }
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        with _timed(fold_phases, "refresh_s"):
+            for idx in indexes:
+                idx.refresh(batch_df.sparkSession)
+        with _timed(fold_phases, "verdict_s"):
+            # checkpointed: the commits below reuse one execution, and
+            # an index scan must not sit inside an insertInto source
+            # plan (Spark rejects overwrite-while-reading)
+            v = verdicts(pre, batch_df.select("doc_id"), batch_id).localCheckpoint()
+        writes = {
+            "verdicts": lambda: v.write.mode("overwrite").parquet(
+                f"{verdict_dir}/b{batch_id}"
+            ),
+            **commits(pre, v.where("admitted").select("doc_id"), batch_id),
+        }
+
+        def write(label: str) -> None:
+            with _timed(fold_phases, f"write_{label}_s"):
+                writes[label]()
+
+        # independent jobs over one checkpointed relation, each to its
+        # own target: overlap them (guide §2.6)
+        with ThreadPoolExecutor(len(writes)) as pool:
+            list(pool.map(write, writes))
+        profile["batches"] += 1
+        if kill_after_batch is not None and batch_id >= kill_after_batch:
+            # die with the batch's outputs written but its checkpoint
+            # NOT committed — no unwinding, the JVM goes with us
+            os.killpg(os.getpgid(0), signal.SIGKILL)
+
+    with _state_lock(state):
+        try:
+            if not os.path.isdir(ckpt):
+                # fresh drain: start from the pristine corpus. A
+                # RESUMING drain keeps its committed partitions — they
+                # ARE the state it resumes into.
+                with _timed(phases, "reset_s"):
+                    for idx in indexes:
+                        idx.reset(spark)
+            with _timed(phases, "precompute_s"):
+                pre = precompute()
+            arrivals = (
+                spark.readStream.schema("doc_id long")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(landing + "/b*")
+            )
+            # the commits' sources are drain-wide relations of THIS
+            # session, so their insertInto resolves the overwrite mode
+            # here, not in the foreachBatch clone
+            with _timed(phases, "stream_s"), scoped_conf(
+                spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+            ):
+                (
+                    arrivals.writeStream.foreachBatch(fold)
+                    .option("checkpointLocation", ckpt)
+                    .trigger(availableNow=True)
+                    .start()
+                    .awaitTermination()
+                )
+            with _timed(phases, "result_s"):
+                v = spark.read.parquet(f"{verdict_dir}/b*")
+                batch = F.expr(f"doc_id div {ARRIVAL_MOD}") % N_ADMIT_BATCHES
+                result = v.select(
+                    "doc_id",
+                    batch.cast("int").alias("batch_id"),
+                    *[c for c in v.columns if c != "doc_id"],
+                ).localCheckpoint()
+        finally:
+            # in-process only: a SIGKILL never gets here, so a killed
+            # run's checkpoint, outputs and partitions persist for the
+            # resume
+            if not keep_state:
+                with _timed(phases, "cleanup_s"):
+                    shutil.rmtree(state, ignore_errors=True)
+                    for idx in indexes:
+                        idx.reset(spark)
+    return result
 
 
 def run_admit_drain(
@@ -491,103 +755,41 @@ def run_admit_drain(
     written but BEFORE the checkpoint commits — the torn window a
     real crash exposes (test_admit_resume.py drives this in a
     subprocess, the bcc900f live-drill pattern)."""
-    import shutil
-
     landing = ensure_admit_landing(spark, sf_dir)
     corpus_dir = ensure_band_index(spark, sf_dir)
     state = admit_state_base(landing)
-    lock_fd = acquire_state_lock(state)
-    delta_base = f"{state}/delta"
-    verdict_base = f"{state}/verdicts"
-    ckpt = f"{state}/ckpt"
-    # batch-invariant: every arrival's band rows, folded ONCE per
-    # drain (see drain_bands) — each micro-batch semi-joins its slice
-    bands_all = drain_bands(spark, landing)
+    delta = f"{state}/delta"
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        bands_b = bands_all.join(
-            F.broadcast(batch_df.select("doc_id")), "doc_id"
-        )
-        # index as of batch b = corpus ∪ deltas of batches < b. Derived
-        # from batch_id + what exists ON DISK (not a driver-side list):
-        # on resume after a crash, prior committed batches' deltas are
-        # found again, and a torn batch's own delta (written, ckpt not
-        # committed) is EXCLUDED from its re-execution's probe — the
-        # re-run must not flag a doc as a dup of itself.
+    def verdicts(bands_all: DataFrame, ids: DataFrame, batch_id: int) -> DataFrame:
+        # index as of batch b = corpus ∪ deltas of batches < b, found
+        # ON DISK: a resume finds the committed deltas again, and a
+        # torn batch's own delta is excluded from its re-execution
         index_dirs = [corpus_dir] + [
             d
-            for d in (f"{delta_base}/b{i}" for i in range(batch_id))
+            for d in (f"{delta}/b{i}" for i in range(batch_id))
             if os.path.exists(os.path.join(d, "_SUCCESS"))
         ]
         idx = spark.read.parquet(*index_dirs).select("band_id", "bucket")
-        flagged = (
-            bands_b.join(idx, ["band_id", "bucket"])
-            .select("doc_id")
-            .distinct()
-        )
-        # REBIND to the checkpointed relation so the delta fold-back
-        # below reuses one execution instead of re-running the probe
-        verdicts = (
-            batch_df.select("doc_id")
-            .join(flagged.withColumn("hit", F.lit(True)), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce(~F.col("hit"), F.lit(True)).alias("admitted"),
-            )
-            .localCheckpoint()
-        )
-        # per-batch dir + overwrite = idempotent on micro-batch
-        # re-execution (a plain append would double rows if the batch
-        # replays from the checkpoint — round-11 ADVICE)
-        verdicts.write.mode("overwrite").parquet(
-            f"{verdict_base}/b{batch_id}"
-        )
-        adm_bands = bands_b.join(
-            verdicts.where("admitted").select("doc_id"), "doc_id"
-        ).select(F.col("doc_id").alias("corpus_doc"), "band_id", "bucket")
-        adm_bands.write.mode("overwrite").parquet(f"{delta_base}/b{batch_id}")
-        if kill_after_batch is not None and batch_id >= kill_after_batch:
-            # die with outputs written but the checkpoint NOT committed
-            # — no Python unwinding, no finally blocks, the JVM goes
-            # with us (process group)
-            import signal
+        bands_b = bands_all.join(F.broadcast(ids), "doc_id")
+        hits = bands_b.join(idx, ["band_id", "bucket"]).select("doc_id").distinct()
+        return _screen(ids, hits, "admitted")
 
-            os.killpg(os.getpgid(0), signal.SIGKILL)
+    def commits(bands_all: DataFrame, admitted: DataFrame, batch_id: int) -> dict:
+        rows = _admitted_bands(bands_all, admitted)
+        # per-batch dir + overwrite: idempotent under batch replay
+        return {"delta": lambda: rows.write.mode("overwrite").parquet(f"{delta}/b{batch_id}")}
 
-    arrivals = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing + "/b*")
+    return run_verdict_drain(
+        spark,
+        "stream_dedup_admit_merge",
+        landing,
+        state,
+        lambda: drain_bands(spark, landing),
+        verdicts,
+        commits,
+        keep_state=keep_state,
+        kill_after_batch=kill_after_batch,
     )
-    try:
-        q = (
-            arrivals.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        result = (
-            spark.read.parquet(f"{verdict_base}/b*")
-            .select(
-                "doc_id",
-                (F.expr(f"doc_id div {ARRIVAL_MOD}") % N_ADMIT_BATCHES)
-                .cast("int")
-                .alias("batch_id"),
-                "admitted",
-            )
-            .localCheckpoint()
-        )
-    finally:
-        # cleanup runs on the in-process failure path too (a failed
-        # drain must not leak /tmp state — round-11 ADVICE). A SIGKILL
-        # never reaches this finally, which is exactly the point: the
-        # killed run's state persists on disk (and the kernel releases
-        # its flock) so the next invocation resumes from it.
-        if not keep_state:
-            shutil.rmtree(state, ignore_errors=True)
-        os.close(lock_fd)
-    return result
 
 
 @query("stream_dedup_admit_merge", oracle=_admit_oracle())
@@ -907,121 +1109,22 @@ def minhash_index_merge_bucketed(
     )
 
 
-_ADMIT_BKT_KIND = "admit_bkt_tbl"
-
-_POM = "spark.sql.sources.partitionOverwriteMode"
-
-
-def _admit_bkt_path(tbl: str) -> str:
-    tag = tbl[len("admit_bkt_") :]
-    return os.path.join(kind_dir(_ADMIT_BKT_KIND), tag, tbl)
-
-
-def ensure_admit_bkt_table(spark: SparkSession, sf_dir: str) -> str:
-    """The admit loop's index as the full 100 TB lake layout: a table
-    PARTITIONED by ``commit_batch`` and BUCKETED on (band_id, bucket).
-    The corpus index is the one-time partition ``commit_batch=-1``
-    (built ONCE per fixture fingerprint — never rebuilt per drain,
-    round-12 verdict item 2); each micro-batch's admitted band rows
-    land as their own partition via dynamic-partition-overwrite
-    ``insertInto``, which is IDEMPOTENT under micro-batch replay (a
-    re-executed batch overwrites exactly its own partition) while
-    every partition keeps the bucketed layout, so probes sort-merge
-    against bucket files with zero exchange on the index side and
-    partition pruning gives each batch the index "as of" its commit."""
+def ensure_admit_bkt_table(spark: SparkSession, sf_dir: str) -> BatchIndex:
+    """The admit loop's index as the full 100 TB lake layout: a
+    BatchIndex PARTITIONED by ``commit_batch`` and BUCKETED on
+    (band_id, bucket). The corpus index is the one-time partition
+    ``commit_batch=-1`` (built ONCE per fixture fingerprint — never
+    rebuilt per drain, round-12 verdict item 2); each micro-batch's
+    admitted band rows land as their own partition, so probes
+    sort-merge against bucket files with zero exchange on the index
+    side."""
     with catalog_fixture(
-        spark, _ADMIT_BKT_KIND, sf_dir, ("documents",), ("admit_bkt",)
+        spark, "admit_bkt_tbl", sf_dir, ("documents",), ("admit_bkt",)
     ) as (tag, root):
         tbl = f"admit_bkt_{tag}"
-        _ensure_corpus_partition(
-            spark,
-            tbl,
-            os.path.join(root, tbl),
-            lambda: spark.read.parquet(ensure_band_index(spark, sf_dir)),
-            ("band_id", "bucket"),
+        return BatchIndex(tbl, os.path.join(root, tbl), ("band_id", "bucket")).ensure_corpus(
+            spark, lambda: spark.read.parquet(ensure_band_index(spark, sf_dir))
         )
-    return tbl
-
-
-def _ensure_corpus_partition(
-    spark: SparkSession,
-    tbl: str,
-    path: str,
-    build_corpus,
-    bucket_cols: tuple[str, ...],
-) -> None:
-    """Create a commit_batch-partitioned, bucketed index table whose
-    corpus lives in partition commit_batch=-1 — built ONCE per table
-    name (the name carries the fixture fingerprint); per-batch
-    admission partitions land later via dynamic-partition-overwrite
-    insertInto. Shared by the admit loop and the quartet's two
-    stateful screens."""
-    import shutil
-
-    marker = os.path.join(path, "_CORPUS_OK")
-    # the marker alone is not proof: a misconfigured static-mode
-    # insert overwrite deletes sibling PARTITION DIRS but leaves root
-    # files — require the corpus partition directory itself too
-    corpus_dir = os.path.join(path, "commit_batch=-1")
-    if not (
-        spark.catalog.tableExists(tbl)
-        and os.path.exists(marker)
-        and os.path.isdir(corpus_dir)
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(path, ignore_errors=True)
-        (
-            build_corpus()
-            .withColumn("commit_batch", F.lit(-1))
-            # same murmur3 hash as the bucket assignment: one task per
-            # bucket, one sorted file per bucket
-            .repartition(INDEX_BUCKETS, *bucket_cols)
-            .write.partitionBy("commit_batch")
-            .bucketBy(INDEX_BUCKETS, *bucket_cols)
-            .sortBy(*bucket_cols)
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(tbl)
-        )
-        with open(marker, "w") as f:
-            f.write("ok")
-
-
-def reset_admit_partitions(spark: SparkSession, tbl: str) -> None:
-    """Return the admit table to the pristine corpus — see
-    reset_batch_partitions."""
-    reset_batch_partitions(spark, tbl, _admit_bkt_path(tbl))
-
-
-def reset_batch_partitions(spark: SparkSession, tbl: str, path: str) -> None:
-    """Return a commit_batch-partitioned index table to the pristine
-    corpus WITHOUT touching the corpus build: admission partitions are
-    dropped THROUGH THE CATALOG (ALTER TABLE ... DROP PARTITION
-    removes both the metadata and the directory) so catalog state and
-    the filesystem cannot diverge across Spark versions (round-13
-    ADVICE — a bare rmtree left dangling partition metadata for
-    refreshTable to tolerate). The corpus partition (commit_batch=-1)
-    is never touched. Any directory a torn run left WITHOUT catalog
-    metadata (crash between file write and commit) is still swept by
-    the rmtree fallback."""
-    import shutil
-
-    if os.path.isdir(path):
-        batches = sorted(
-            d.split("=", 1)[1]
-            for d in os.listdir(path)
-            if d.startswith("commit_batch=") and d != "commit_batch=-1"
-        )
-        for b in batches:
-            spark.sql(
-                f"ALTER TABLE {tbl} DROP IF EXISTS PARTITION (commit_batch={b})"
-            )
-        # a crashed insertInto can leave the directory without its
-        # catalog entry; DROP PARTITION won't see it — sweep the files
-        for d in os.listdir(path):
-            if d.startswith("commit_batch=") and d != "commit_batch=-1":
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    spark.catalog.refreshTable(tbl)
 
 
 def bkt_admit_state_base(landing: str) -> str:
@@ -1033,20 +1136,18 @@ def bkt_admit_state_base(landing: str) -> str:
 
 
 def admit_bkt_probe_plan(
-    spark: SparkSession, bands_b: DataFrame, tbl: str, batch_id: int
+    spark: SparkSession, bands_b: DataFrame, idx: BatchIndex, batch_id: int
 ) -> DataFrame:
-    """Batch b's probe of the partitioned+bucketed admit table,
-    exposed as a plan builder so tests can pin its physical shape:
-    partition pruning keeps only commits < b, the index FileScan
-    feeds the sort-merge join straight off its bucket files, and the
-    ONLY exchange is the (small) batch side's band rows. Takes the
-    batch's band rows (in production a semi-join slice of the
-    drain-wide drain_bands relation — the signature fold is
-    batch-invariant and hoisted out of the per-batch path), matching
-    quartet_dup_probe_plan's contract."""
-    idx = spark.table(tbl).where(F.col("commit_batch") < batch_id)
+    """Batch b's probe of a partitioned+bucketed band index, exposed
+    as a plan builder so tests can pin its physical shape: partition
+    pruning keeps only commits < b, the index FileScan feeds the
+    sort-merge join straight off its bucket files, and the ONLY
+    exchange is the (small) batch side's band rows. Takes the batch's
+    band rows (in production a semi-join slice of the drain-wide
+    drain_bands relation — the signature fold is batch-invariant and
+    hoisted out of the per-batch path)."""
     return bands_b.hint("merge").join(
-        idx.select("band_id", "bucket"), ["band_id", "bucket"]
+        idx.as_of(spark, batch_id).select("band_id", "bucket"), ["band_id", "bucket"]
     )
 
 
@@ -1061,200 +1162,30 @@ def run_admit_drain_bucketed(
     keep_state / kill_after_batch drill hooks as run_admit_drain —
     tests/test_admit_resume.py runs the identical SIGKILL-mid-drain
     subprocess drill on this path."""
-    import shutil
-
     landing = ensure_admit_landing(spark, sf_dir)
-    tbl = ensure_admit_bkt_table(spark, sf_dir)
-    state = bkt_admit_state_base(landing)
-    # everything after the lock acquisition sits inside try/finally:
-    # reset_admit_partitions/refreshTable issue Spark calls that can
-    # raise, and a raise before the finally would leak the flock fd
-    # for the process lifetime (round-13 ADVICE) — every later drain
-    # of this fixture in the process would then fail "another drain
-    # holds the lock".
-    lock_fd = acquire_state_lock(state)
-    try:
-        return _admit_drain_bucketed_locked(
-            spark, landing, tbl, state, keep_state, kill_after_batch
-        )
-    finally:
-        os.close(lock_fd)
+    idx = ensure_admit_bkt_table(spark, sf_dir)
 
+    def verdicts(bands_all: DataFrame, ids: DataFrame, batch_id: int) -> DataFrame:
+        bands_b = bands_all.join(F.broadcast(ids), "doc_id")
+        probe = admit_bkt_probe_plan(ids.sparkSession, bands_b, idx, batch_id)
+        return _screen(ids, probe.select("doc_id").distinct(), "admitted")
 
-#: per-phase wall breakdown of the LAST bucketed admit drain in this
-#: process (round-13 verdict item 7): the x100 lane copies it into the
-#: artifact so "how much of the 378 s is per-batch insertInto/refresh
-#: fixed cost vs probe work" is a recorded number, not a guess.
-LAST_ADMIT_PROFILE: dict = {}
+    def commits(bands_all: DataFrame, admitted: DataFrame, batch_id: int) -> dict:
+        rows = _admitted_bands(bands_all, admitted)
+        return {"index": lambda: idx.commit(rows, batch_id)}
 
-
-def _admit_drain_bucketed_locked(
-    spark: SparkSession,
-    landing: str,
-    tbl: str,
-    state: str,
-    keep_state: bool,
-    kill_after_batch: int | None,
-) -> DataFrame:
-    import shutil
-    import time
-
-    verdict_base = f"{state}/verdicts"
-    ckpt = f"{state}/ckpt"
-    if not os.path.isdir(ckpt):
-        # fresh drain (no checkpoint to resume): start from the
-        # pristine corpus — clear admission partitions a keep_state
-        # run may have left. A RESUMING drain must NOT reset: the
-        # committed partitions ARE the state it resumes into.
-        reset_admit_partitions(spark, tbl)
-    prof = {
-        "refresh_s": 0.0,
-        "pre_bands_s": 0.0,
-        "bands_s": 0.0,
-        "probe_verdict_s": 0.0,
-        "insert_s": 0.0,
-        "batches": 0,
-    }
-    LAST_ADMIT_PROFILE.clear()
-    LAST_ADMIT_PROFILE.update(prof)
-    # batch-invariant: every arrival's band rows, folded ONCE per
-    # drain (see drain_bands) — each micro-batch semi-joins its slice
-    t0 = time.monotonic()
-    bands_all = drain_bands(spark, landing)
-    prof["pre_bands_s"] = round(time.monotonic() - t0, 3)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch runs in a CLONED session whose catalog relation
-        # cache is separate from the outer session's: resolve the
-        # table through the BATCH's session and force a listing
-        # refresh so batch b always sees the partition batch b-1
-        # committed
-        s = batch_df.sparkSession
-        t0 = time.monotonic()
-        s.conf.set(_POM, "dynamic")
-        s.catalog.refreshTable(tbl)
-        prof["refresh_s"] += time.monotonic() - t0
-        t0 = time.monotonic()
-        bands_b = bands_all.join(
-            F.broadcast(batch_df.select("doc_id")), "doc_id"
-        )
-        prof["bands_s"] += time.monotonic() - t0
-        t0 = time.monotonic()
-        # index as of batch b = partitions with commit_batch < b —
-        # partition PRUNING, the on-disk-dirs discipline of the
-        # delta-dir key expressed as a filter: on crash-resume, the
-        # torn batch's own partition (written, checkpoint not
-        # committed) is excluded from its re-execution's probe, so
-        # the re-run cannot flag a doc as a dup of itself. The fold
-        # is deterministic given those partitions, so the dynamic
-        # overwrite below rewrites identical content.
-        flagged = (
-            admit_bkt_probe_plan(s, bands_b, tbl, batch_id)
-            .select("doc_id")
-            .distinct()
-        )
-        # REBIND to the checkpointed relation: the fold-back insert
-        # below reuses `verdicts`, and an unchckpointed copy would (a)
-        # re-execute the whole probe join a second time per batch and
-        # (b) embed the index-table scan inside the insertInto source
-        # plan — which Spark rejects as overwrite-while-reading
-        verdicts = (
-            batch_df.select("doc_id")
-            .join(flagged.withColumn("hit", F.lit(True)), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce(~F.col("hit"), F.lit(True)).alias("admitted"),
-            )
-            .localCheckpoint()
-        )
-        prof["probe_verdict_s"] += time.monotonic() - t0
-        adm_bands = bands_b.join(
-            verdicts.where("admitted").select("doc_id"), "doc_id"
-        ).select(
-            F.col("doc_id").alias("corpus_doc"),
-            "band_id",
-            "bucket",
-            F.lit(batch_id).alias("commit_batch"),
-        )
-
-        # verdicts is checkpointed: its dir write and the
-        # dynamic-partition-overwrite insertInto (EXACTLY partition
-        # commit_batch=b, bucketed, idempotent under micro-batch
-        # replay) are two INDEPENDENT jobs — overlap them (guide
-        # §2.6); the kill drill still fires only after both commit
-        def _write_verdicts() -> None:
-            t0 = time.monotonic()
-            verdicts.write.mode("overwrite").parquet(
-                f"{verdict_base}/b{batch_id}"
-            )
-            prof["probe_verdict_s"] += time.monotonic() - t0
-
-        def _insert_bands() -> None:
-            t0 = time.monotonic()
-            (
-                adm_bands.repartition(INDEX_BUCKETS, "band_id", "bucket")
-                .write.mode("overwrite")
-                .insertInto(tbl)
-            )
-            prof["insert_s"] += time.monotonic() - t0
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(2) as pool:
-            for f in [pool.submit(_write_verdicts), pool.submit(_insert_bands)]:
-                f.result()
-        prof["batches"] += 1
-        LAST_ADMIT_PROFILE.update(
-            {k: round(v, 3) if isinstance(v, float) else v for k, v in prof.items()}
-        )
-        if kill_after_batch is not None and batch_id >= kill_after_batch:
-            # die with the partition + verdicts written but the
-            # checkpoint NOT committed — the torn window a real crash
-            # exposes (process group; the JVM goes with us)
-            import signal
-
-            os.killpg(os.getpgid(0), signal.SIGKILL)
-
-    arrivals = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing + "/b*")
+    return run_verdict_drain(
+        spark,
+        "stream_dedup_admit_bucketed",
+        landing,
+        bkt_admit_state_base(landing),
+        lambda: drain_bands(spark, landing),
+        verdicts,
+        commits,
+        indexes=(idx,),
+        keep_state=keep_state,
+        kill_after_batch=kill_after_batch,
     )
-    try:
-        # the per-batch insertInto resolves its conf through the
-        # session of the DataFrame being written — which, with the
-        # hoisted drain-wide relations, is THIS session, not the
-        # foreachBatch clone. Static mode would overwrite the WHOLE
-        # table (corpus included) instead of exactly partition
-        # commit_batch=b.
-        with scoped_conf(spark, {_POM: "dynamic"}):
-            q = (
-                arrivals.writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        result = (
-            spark.read.parquet(f"{verdict_base}/b*")
-            .select(
-                "doc_id",
-                (F.expr(f"doc_id div {ARRIVAL_MOD}") % N_ADMIT_BATCHES)
-                .cast("int")
-                .alias("batch_id"),
-                "admitted",
-            )
-            .localCheckpoint()
-        )
-    finally:
-        # in-process cleanup only — a SIGKILL never reaches this, so
-        # the killed run's checkpoint, verdicts, and committed
-        # partitions persist and the next invocation resumes (the
-        # caller's finally closes the flock fd)
-        if not keep_state:
-            shutil.rmtree(state, ignore_errors=True)
-            reset_admit_partitions(spark, tbl)
-    return result
 
 
 @query("stream_dedup_admit_bucketed", oracle=_admit_oracle())

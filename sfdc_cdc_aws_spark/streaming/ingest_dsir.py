@@ -169,12 +169,9 @@ def stream_dsir_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # complete mode: the last data batch already emitted the full state
-    from sfdc_cdc_aws_spark.streaming.job import drain_state_width
-
     return run_available_now(
         scored,
         "dsir_ingest",
         output_mode="complete",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )

@@ -24,12 +24,14 @@ S5 micro-batch arrival model.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from operator import attrgetter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sfdc_cdc_aws_spark.functions.vector import DUCK_COSINE, cosine_prenorm, norm
-from sfdc_cdc_aws_spark.materialize import catalog_fixture, kind_dir, materialize
+from sfdc_cdc_aws_spark.materialize import catalog_fixture, materialize
 from sfdc_cdc_aws_spark.operators.curation2 import (
     _DUCK_FEATS,
     DSIR_BUCKETS,
@@ -39,8 +41,6 @@ from sfdc_cdc_aws_spark.operators.dedup import (
     _DUCK_SIG_CTE,
     N_BANDS,
     ROWS_PER_BAND,
-    minhash_sig_agg_df,
-    sig_bands,
 )
 from sfdc_cdc_aws_spark.operators.similarity import (
     N_CENTROIDS,
@@ -50,18 +50,19 @@ from sfdc_cdc_aws_spark.operators.similarity import (
 )
 from sfdc_cdc_aws_spark.operators.text import _DUCK_TOKENS, shared_hash64
 from sfdc_cdc_aws_spark.registry import query
-from sfdc_cdc_aws_spark.session import scoped_conf
 from sfdc_cdc_aws_spark.sources import load_table
 from sfdc_cdc_aws_spark.sources.tables import table_path
 from sfdc_cdc_aws_spark.streaming.ingest_ann import _probe_cells_expr
 from sfdc_cdc_aws_spark.streaming.ingest_dedup import (
     ARRIVAL_MOD,
-    INDEX_BUCKETS,
     N_ADMIT_BATCHES,
-    acquire_state_lock,
+    BatchIndex,
+    _admitted_bands,
+    _screen,
+    admit_bkt_probe_plan,
+    drain_bands,
     ensure_band_index,
-    _ensure_corpus_partition,
-    reset_batch_partitions,
+    run_verdict_drain,
     spread_batch,
     stamp_batch_mtimes,
 )
@@ -103,14 +104,9 @@ def ensure_quartet_landing(spark: SparkSession, sf_dir: str) -> str:
     return materialize("quartet_landing", sf_dir, ("documents",), build)
 
 
-_QUARTET_BKT_KIND = "quartet_bkt_tbl"
-
-_POM = "spark.sql.sources.partitionOverwriteMode"
-
-
 def ensure_quartet_bkt_tables(
     spark: SparkSession, sf_dir: str
-) -> tuple[str, str]:
+) -> tuple[BatchIndex, BatchIndex]:
     """The quartet's two stateful indexes as the 100 TB lake layout
     (round-13 verdict item 3 — the flat per-batch delta dirs composed
     onto the partitioned+bucketed table the admit loop proved out,
@@ -129,59 +125,49 @@ def ensure_quartet_bkt_tables(
     side. Corpus partitions build once per fixture fingerprint."""
     with catalog_fixture(
         spark,
-        _QUARTET_BKT_KIND,
+        "quartet_bkt_tbl",
         sf_dir,
         ("documents", "embeddings"),
         ("quartet_bkt", "quartet_vbkt"),
     ) as (tag, root):
         tbl, vtbl = f"quartet_bkt_{tag}", f"quartet_vbkt_{tag}"
-        _ensure_corpus_partition(
-            spark,
-            tbl,
-            os.path.join(root, tbl),
-            lambda: spark.read.parquet(ensure_band_index(spark, sf_dir)),
-            ("band_id", "bucket"),
-        )
-        _ensure_corpus_partition(
-            spark,
-            vtbl,
-            os.path.join(root, vtbl),
-            lambda: ensure_ivf_index(spark, sf_dir)
-            .where(F.col("vec_id") % ARRIVAL_MOD != 0)
-            .select(
-                "cent_id",
-                F.col("embedding").alias("c_embedding"),
-                F.col("nrm").alias("c_nrm"),
+        bands = BatchIndex(tbl, os.path.join(root, tbl), ("band_id", "bucket"))
+        vecs = BatchIndex(vtbl, os.path.join(root, vtbl), ("cent_id",))
+        return (
+            bands.ensure_corpus(
+                spark, lambda: spark.read.parquet(ensure_band_index(spark, sf_dir))
             ),
-            ("cent_id",),
+            vecs.ensure_corpus(
+                spark,
+                lambda: ensure_ivf_index(spark, sf_dir)
+                .where(F.col("vec_id") % ARRIVAL_MOD != 0)
+                .select(
+                    "cent_id",
+                    F.col("embedding").alias("c_embedding"),
+                    F.col("nrm").alias("c_nrm"),
+                ),
+            ),
         )
-    return tbl, vtbl
 
 
-def quartet_dup_probe_plan(
-    spark: SparkSession, bands_b: DataFrame, tbl: str, batch_id: int
-) -> DataFrame:
-    """Batch b's dup probe of the partitioned+bucketed quartet index,
-    exposed so tests can pin the physical shape: partition pruning
-    keeps commits < b, the index FileScan feeds the sort-merge join
-    off its bucket files, and the ONLY exchange is the (small) batch
-    side's band rows."""
-    idx = spark.table(tbl).where(F.col("commit_batch") < batch_id)
-    return bands_b.hint("merge").join(
-        idx.select("band_id", "bucket"), ["band_id", "bucket"]
-    )
+#: batch b's dup probe of the quartet's band index — the admit loop's
+#: probe, so its plan-shape contract is the same: partition pruning
+#: keeps commits < b and only the (small) batch side's band rows move
+quartet_dup_probe_plan = admit_bkt_probe_plan
 
 
 def quartet_ann_probe_plan(
-    spark: SparkSession, probed: DataFrame, vtbl: str, batch_id: int
+    spark: SparkSession, probed: DataFrame, vidx: BatchIndex, batch_id: int
 ) -> DataFrame:
     """Batch b's ANN cell probe of the bucketed vector index: same
     pruning + exchange-free-index-side contract as the dup leg, keyed
     on cent_id."""
-    vidx = spark.table(vtbl).where(F.col("commit_batch") < batch_id)
     return (
         probed.hint("merge")
-        .join(vidx.select("cent_id", "c_embedding", "c_nrm"), "cent_id")
+        .join(
+            vidx.as_of(spark, batch_id).select("cent_id", "c_embedding", "c_nrm"),
+            "cent_id",
+        )
         .where(
             cosine_prenorm(
                 F.col("embedding"),
@@ -436,64 +422,22 @@ def quartet_state_base(landing: str) -> str:
     return f"/tmp/sfdc_quartet_state/{os.path.basename(landing)}"
 
 
-def run_quartet_drain(
-    spark: SparkSession,
-    sf_dir: str,
-    keep_state: bool = False,
-    kill_after_batch: int | None = None,
-) -> DataFrame:
-    """One quartet drain over the partitioned+bucketed index tables
-    against the fixture's deterministic state root; resumable. Same
-    keep_state / kill_after_batch drill hooks as
-    ingest_dedup.run_admit_drain_bucketed — tests/test_quartet.py
-    runs the identical SIGKILL-mid-drain subprocess drill on this
-    path."""
-    landing = ensure_quartet_landing(spark, sf_dir)
-    tbl, vtbl = ensure_quartet_bkt_tables(spark, sf_dir)
-    model_path = ensure_dsir_model(spark, sf_dir)
-    state = quartet_state_base(landing)
-    # the whole drain sits inside try/finally from the moment the
-    # flock is held — an exception anywhere must not leak the fd
-    # (round-13 ADVICE on the bucketed admit drain)
-    lock_fd = acquire_state_lock(state)
-    try:
-        return _quartet_drain_locked(
-            spark,
-            sf_dir,
-            landing,
-            tbl,
-            vtbl,
-            model_path,
-            state,
-            keep_state,
-            kill_after_batch,
-        )
-    finally:
-        os.close(lock_fd)
+#: an index table's storage dir (the resume drill lists its partitions)
+_quartet_tbl_path = attrgetter("path")
 
 
-#: per-phase wall breakdown of the LAST quartet drain in this process
-#: — the LAST_ADMIT_PROFILE discipline (round-13 verdict item 7)
-#: extended to the registry's most expensive key so "which screen is
-#: slow" is a recorded number, not a guess.
-LAST_QUARTET_PROFILE: dict = {}
-
-
-def _quartet_drain_locked(
-    spark: SparkSession,
-    sf_dir: str,
-    landing: str,
-    tbl: str,
-    vtbl: str,
-    model_path: str,
-    state: str,
-    keep_state: bool,
-    kill_after_batch: int | None,
-) -> DataFrame:
-    import shutil
-    import time
-
-    t_setup = time.monotonic()
+def _screen_inputs(
+    spark: SparkSession, sf_dir: str, landing: str, model_path: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The quartet's batch-invariant screen inputs, computed ONCE per
+    drain (guide §2.4): (doc_id, gate_pass, dsir_pass), MinHash band
+    rows, probe-cell rows (doc_id, embedding, nrm, cent_id) and each
+    doc's top-1 fold-back cell. All are pure per-doc functions of the
+    landing — only the two INDEX PROBES depend on drain state, and
+    those stay per batch. Each relation is localCheckpointed (one
+    execution, N-batch fan-out), recomputed fresh per invocation —
+    deterministic, so a crash-resumed drain rebuilds identical
+    values."""
     e = load_table(spark, sf_dir, "embeddings")
     cents = [
         (
@@ -505,32 +449,11 @@ def _quartet_drain_locked(
         .select("vec_id", "embedding")
         .collect()
     ]
-    arr_vecs = (
-        e.where(F.col("vec_id") % ARRIVAL_MOD == 0)
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            "embedding",
-            norm(F.col("embedding")).alias("nrm"),
-        )
-        .localCheckpoint()
+    arr_vecs = e.where(F.col("vec_id") % ARRIVAL_MOD == 0).select(
+        F.col("vec_id").alias("doc_id"),
+        "embedding",
+        norm(F.col("embedding")).alias("nrm"),
     )
-    # the centroid-scoring expression bakes N_CENTROIDS x 64 array
-    # literals into the plan — ~1 s of py4j driver work PER BUILD.
-    # Columns are reusable unresolved trees: build it once per drain
-    # instead of twice per micro-batch (measured ~8 s off the sf0.1
-    # drain wall).
-    probe_cells = _probe_cells_expr(F.col("embedding"), F.col("nrm"), cents)
-    # ---- batch-invariant screen inputs, computed ONCE per drain
-    # (guide §2.4). Gate verdicts, DSIR weights, MinHash band rows,
-    # probe-cell assignments and the top-1 fold-back cell are all pure
-    # per-doc functions of the landing — only the two INDEX PROBES
-    # (dup, ANN) depend on drain state, and those stay per batch.
-    # Recomputing the stateless legs inside every foreachBatch
-    # multiplied their cost by the batch count AND re-analyzed the
-    # 1024-literal centroid tree per batch. Each relation is
-    # localCheckpointed (one execution, N-batch fan-out), recomputed
-    # fresh per invocation — deterministic, so a crash-resumed drain
-    # rebuilds identical values.
     arr_all = spread_batch(
         spark.read.schema(
             "doc_id long, text string, lang string, n_chars long"
@@ -563,116 +486,65 @@ def _quartet_drain_locked(
             .localCheckpoint()
         )
 
-    def _build_bands() -> DataFrame:
-        return (
-            sig_bands(minhash_sig_agg_df(arr_all.select("doc_id", "text")))
-            .select("doc_id", "band_id", "bucket")
-            .localCheckpoint()
-        )
-
     def _build_cells() -> DataFrame:
-        # the ONLY evaluation of the 1024-literal centroid expression:
-        # probe cells land as DATA; the probe explode and the top-1
-        # assignment below are narrow transforms of this relation
+        # the ONLY evaluation of the centroid-scoring expression, which
+        # bakes N_CENTROIDS x 64 array literals into the plan (~1 s of
+        # py4j driver work per build): probe cells land as DATA, and
+        # the probe explode and top-1 assignment are narrow transforms
+        # of this relation
+        cells = _probe_cells_expr(F.col("embedding"), F.col("nrm"), cents)
         return arr_vecs.select(
-            "doc_id", "embedding", "nrm", probe_cells.alias("cells")
+            "doc_id", "embedding", "nrm", cells.alias("cells")
         ).localCheckpoint()
 
-    # the three precomputes are independent jobs — overlap them so the
-    # tail of one back-fills cores the others free (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
+    # independent jobs — overlap them so the tail of one back-fills
+    # cores the others free (guide §2.6)
     with ThreadPoolExecutor(3) as pool:
         f_stateless = pool.submit(_build_stateless)
-        f_bands = pool.submit(_build_bands)
+        f_bands = pool.submit(drain_bands, spark, landing)
         f_cells = pool.submit(_build_cells)
         stateless_all = f_stateless.result()
         bands_all = f_bands.result()
         cells_all = f_cells.result()
     probed_all = cells_all.select(
         "doc_id", "embedding", "nrm", F.explode("cells").alias("p")
-    ).select(
-        "doc_id", "embedding", "nrm", F.col("p.cent_id").alias("cent_id")
-    )
+    ).select("doc_id", "embedding", "nrm", F.col("p.cent_id").alias("cent_id"))
     assign_all = cells_all.select(
         "doc_id",
         F.element_at("cells", 1)["cent_id"].alias("cent_id"),
         F.col("embedding").alias("c_embedding"),
         F.col("nrm").alias("c_nrm"),
     )
-    verdict_base = f"{state}/verdicts"
-    ckpt = f"{state}/ckpt"
-    if not os.path.isdir(ckpt):
-        # fresh drain: start from the pristine corpus partitions. A
-        # RESUMING drain must NOT reset — the committed per-batch
-        # partitions ARE the state it resumes into.
-        reset_batch_partitions(spark, tbl, _quartet_tbl_path(tbl))
-        reset_batch_partitions(spark, vtbl, _quartet_tbl_path(vtbl))
+    return stateless_all, bands_all, probed_all, assign_all
 
-    prof = {
-        "setup_s": 0.0,
-        "stream_s": 0.0,
-        "result_s": 0.0,
-        "cleanup_s": 0.0,
-        "refresh_s": 0.0,
-        "batch_s": 0.0,
-        "bands_s": 0.0,
-        "verdict_s": 0.0,
-        "insert_bands_s": 0.0,
-        "insert_vecs_s": 0.0,
-        "batches": 0,
-    }
-    prof["setup_s"] = time.monotonic() - t_setup
-    LAST_QUARTET_PROFILE.clear()
-    LAST_QUARTET_PROFILE.update(prof)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch runs in a CLONED session whose catalog relation
-        # cache is separate from the outer session's: resolve through
-        # the batch's session and force a listing refresh so batch b
-        # sees the partitions batch b-1 committed
-        s = batch_df.sparkSession
-        t0 = time.monotonic()
-        s.conf.set(_POM, "dynamic")
-        s.catalog.refreshTable(tbl)
-        s.catalog.refreshTable(vtbl)
-        prof["refresh_s"] += time.monotonic() - t0
-        t0 = time.monotonic()
-        # every per-doc screen input is precomputed drain-wide (see
-        # the batch-invariant block above); the fold only slices its
-        # batch out by doc_id and runs the two STATEFUL index probes
-        ids = batch_df.select("doc_id")
-        gd = stateless_all.join(F.broadcast(ids), "doc_id")
-        prof["batch_s"] += time.monotonic() - t0
+def run_quartet_drain(
+    spark: SparkSession,
+    sf_dir: str,
+    keep_state: bool = False,
+    kill_after_batch: int | None = None,
+) -> DataFrame:
+    """One quartet drain over the partitioned+bucketed index tables
+    against the fixture's deterministic state root; resumable. Same
+    keep_state / kill_after_batch drill hooks as
+    ingest_dedup.run_admit_drain_bucketed — tests/test_quartet.py
+    runs the identical SIGKILL-mid-drain subprocess drill on this
+    path."""
+    landing = ensure_quartet_landing(spark, sf_dir)
+    tbl, vtbl = ensure_quartet_bkt_tables(spark, sf_dir)
+    model_path = ensure_dsir_model(spark, sf_dir)
+
+    def verdicts(pre, ids: DataFrame, batch_id: int) -> DataFrame:
+        stateless_all, bands_all, probed_all, _assign = pre
+        s = ids.sparkSession
         probed = probed_all.join(F.broadcast(ids), "doc_id")
-        # ANN index as of batch b = vector partitions with
-        # commit_batch < b — partition PRUNING over the bucketed
-        # cell-keyed table (round-13 verdict item 3: the flat vdelta
-        # dirs composed onto ivf_index_merge's table algebra). On
-        # crash-resume the torn batch's own partition is excluded
-        # from its re-execution's probe.
-        annhits = quartet_ann_probe_plan(s, probed, vtbl, batch_id)
-        ann = ids.join(
-            annhits.withColumn("hit", F.lit(True)), "doc_id", "left"
-        ).select(
-            "doc_id", F.coalesce(~F.col("hit"), F.lit(True)).alias("ann_pass")
-        )
-        t0 = time.monotonic()
+        ann = _screen(ids, quartet_ann_probe_plan(s, probed, vtbl, batch_id), "ann_pass")
         bands_b = bands_all.join(F.broadcast(ids), "doc_id")
-        prof["bands_s"] += time.monotonic() - t0
-        flagged = (
-            quartet_dup_probe_plan(s, bands_b, tbl, batch_id)
-            .select("doc_id")
-            .distinct()
-        )
-        dup = ids.join(
-            flagged.withColumn("hit", F.lit(True)), "doc_id", "left"
-        ).select(
-            "doc_id", F.coalesce(~F.col("hit"), F.lit(True)).alias("dup_pass")
-        )
-        t0 = time.monotonic()
-        verdicts = (
-            gd.join(ann, "doc_id")
+        dup_hits = quartet_dup_probe_plan(s, bands_b, tbl, batch_id).select("doc_id")
+        dup = _screen(ids, dup_hits.distinct(), "dup_pass")
+        return (
+            stateless_all.join(F.broadcast(ids), "doc_id")
+            .join(ann, "doc_id")
             .join(dup, "doc_id")
             .select(
                 "doc_id",
@@ -687,150 +559,33 @@ def _quartet_drain_locked(
                     & F.col("dup_pass")
                 ).alias("admitted"),
             )
-            .localCheckpoint()
         )
-        prof["verdict_s"] += time.monotonic() - t0
-        # verdicts is checkpointed: the verdict-dir write and the two
-        # dynamic-partition-overwrite insertIntos (different tables)
-        # are three INDEPENDENT jobs over it — overlap them so one
-        # job's commit tail back-fills the others (guide §2.6). Each
-        # commits EXACTLY its own target (partition commit_batch=b,
-        # bucketed), idempotent under micro-batch replay; the kill
-        # drill below still fires only after all three are durable.
-        adm_bands = bands_b.join(
-            verdicts.where("admitted").select("doc_id"), "doc_id"
-        ).select(
-            F.col("doc_id").alias("corpus_doc"),
-            "band_id",
-            "bucket",
-            F.lit(batch_id).alias("commit_batch"),
-        )
+
+    def commits(pre, admitted: DataFrame, batch_id: int) -> dict:
+        _stateless, bands_all, _probed, assign_all = pre
+        bands = _admitted_bands(bands_all, admitted)
         # admitted docs' vectors fold back at their TOP-1 IVF cell —
-        # the same rn=1 assignment the corpus index uses (assign_all,
-        # precomputed drain-wide)
-        adm_vecs = (
-            verdicts.where("admitted")
-            .select("doc_id")
-            .join(assign_all, "doc_id")
-            .select(
-                "cent_id",
-                "c_embedding",
-                "c_nrm",
-                F.lit(batch_id).alias("commit_batch"),
-            )
+        # the rn=1 assignment the corpus index uses
+        vecs = admitted.join(assign_all, "doc_id").select(
+            "cent_id", "c_embedding", "c_nrm"
         )
+        return {
+            "bands": lambda: tbl.commit(bands, batch_id),
+            "vectors": lambda: vtbl.commit(vecs, batch_id),
+        }
 
-        def _write_verdicts() -> None:
-            t0 = time.monotonic()
-            verdicts.write.mode("overwrite").parquet(
-                f"{verdict_base}/b{batch_id}"
-            )
-            prof["verdict_s"] += time.monotonic() - t0
-
-        def _insert_bands() -> None:
-            t0 = time.monotonic()
-            (
-                adm_bands.repartition(INDEX_BUCKETS, "band_id", "bucket")
-                .write.mode("overwrite")
-                .insertInto(tbl)
-            )
-            prof["insert_bands_s"] += time.monotonic() - t0
-
-        def _insert_vecs() -> None:
-            t0 = time.monotonic()
-            (
-                adm_vecs.repartition(INDEX_BUCKETS, "cent_id")
-                .write.mode("overwrite")
-                .insertInto(vtbl)
-            )
-            prof["insert_vecs_s"] += time.monotonic() - t0
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(3) as pool:
-            futs = [
-                pool.submit(_write_verdicts),
-                pool.submit(_insert_bands),
-                pool.submit(_insert_vecs),
-            ]
-            for f in futs:
-                f.result()
-        prof["batches"] += 1
-        LAST_QUARTET_PROFILE.update(
-            {k: round(v, 3) if isinstance(v, float) else v for k, v in prof.items()}
-        )
-        if kill_after_batch is not None and batch_id >= kill_after_batch:
-            # die with the partitions + verdicts written but the
-            # checkpoint NOT committed — the torn window a real crash
-            # exposes (process group; the JVM goes with us)
-            import signal
-
-            os.killpg(os.getpgid(0), signal.SIGKILL)
-
-    arrivals = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing + "/b*")
+    return run_verdict_drain(
+        spark,
+        "stream_screen_quartet",
+        landing,
+        quartet_state_base(landing),
+        lambda: _screen_inputs(spark, sf_dir, landing, model_path),
+        verdicts,
+        commits,
+        indexes=(tbl, vtbl),
+        keep_state=keep_state,
+        kill_after_batch=kill_after_batch,
     )
-    try:
-        # the per-batch insertInto resolves its conf through the
-        # session of the DataFrame being written — which, with the
-        # hoisted drain-wide relations, is THIS session, not the
-        # foreachBatch clone. Static mode would overwrite the WHOLE
-        # table (corpus included) instead of exactly partition
-        # commit_batch=b.
-        with scoped_conf(spark, {_POM: "dynamic"}):
-            q = (
-                arrivals.writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            t_stream = time.monotonic()
-            q.awaitTermination()
-            prof["stream_s"] = time.monotonic() - t_stream
-        t_res = time.monotonic()
-        result = (
-            spark.read.parquet(f"{verdict_base}/b*")
-            .select(
-                "doc_id",
-                (F.expr(f"doc_id div {ARRIVAL_MOD}") % N_ADMIT_BATCHES)
-                .cast("int")
-                .alias("batch_id"),
-                "gate_pass",
-                "dsir_pass",
-                "ann_pass",
-                "dup_pass",
-                "admitted",
-            )
-            .localCheckpoint()
-        )
-        prof["result_s"] = time.monotonic() - t_res
-    finally:
-        # in-process cleanup only — a SIGKILL never reaches this, so
-        # the killed run's checkpoint, verdicts, and committed
-        # partitions persist and the next invocation resumes (the
-        # caller's finally closes the flock fd)
-        if not keep_state:
-            t_cl = time.monotonic()
-            shutil.rmtree(state, ignore_errors=True)
-            reset_batch_partitions(spark, tbl, _quartet_tbl_path(tbl))
-            reset_batch_partitions(spark, vtbl, _quartet_tbl_path(vtbl))
-            prof["cleanup_s"] = time.monotonic() - t_cl
-        LAST_QUARTET_PROFILE.update(
-            {k: round(v, 3) if isinstance(v, float) else v for k, v in prof.items()}
-        )
-    return result
-
-
-def _quartet_tbl_path(tbl: str) -> str:
-    """Storage dir of a quartet index table: ``<kind dir>/<tag>/<tbl>``
-    (the ingest_dedup._admit_bkt_path discipline)."""
-    prefix = "quartet_vbkt_" if tbl.startswith("quartet_vbkt_") else "quartet_bkt_"
-    tag = tbl[len(prefix):]
-    return os.path.join(kind_dir(_QUARTET_BKT_KIND), tag, tbl)
 
 
 @query("stream_screen_quartet", oracle=_quartet_oracle())

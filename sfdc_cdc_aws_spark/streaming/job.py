@@ -195,18 +195,14 @@ def enriched_union(ch: DataFrame, snapshot: DataFrame) -> DataFrame:
 
 
 #: bytes of landing input per state partition when sizing a drain's
-#: stateful-shuffle width (drain_state_width). Env-overridable so a
-#: cluster deployment can tune state-store granularity without a code
-#: change; the local default keeps small replays narrow. Chosen from
-#: an interleaved best-of-3 width sweep over five drain shapes at
-#: sf0.1 (single-batch dedup, windowed aggs, stream-stream joins):
-#: the 68 MB landing → width 3 was best or tied on every shape
-#: (width 1 serializes the per-row state updates of the single-batch
-#: drains; the old fixed 8 pays 8 store commits per operator per
-#: trigger for KB-scale stores).
-_STATE_BYTES_PER_PART = int(
-    os.environ.get("SPARK_GRAFT_STATE_BYTES_PER_PART", str(32 << 20))
-)
+#: stateful-shuffle width (drain_state_width); the local value keeps
+#: small replays narrow. Chosen from an interleaved best-of-3 width
+#: sweep over five drain shapes at sf0.1 (single-batch dedup, windowed
+#: aggs, stream-stream joins): the 68 MB landing → width 3 was best or
+#: tied on every shape (width 1 serializes the per-row state updates
+#: of the single-batch drains; the old fixed 8 pays 8 store commits
+#: per operator per trigger for KB-scale stores).
+_STATE_BYTES_PER_PART = 32 << 20
 
 
 def drain_state_width(spark: SparkSession, landing: str) -> int:
@@ -239,6 +235,21 @@ def drain_state_width(spark: SparkSession, landing: str) -> int:
     return max(1, min(par, total // _STATE_BYTES_PER_PART + 1))
 
 
+def stream_landing(stream: DataFrame) -> str | None:
+    """The directory a file-source stream reads: the ``path`` option
+    of the first ``StreamingRelation`` leaf of its logical plan, or
+    None when no leaf is a file source with a path."""
+    leaves = stream._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            continue
+        path = leaf.dataSource().options().get("path")
+        if path.isDefined():
+            return path.get()
+    return None
+
+
 #: observability: stateOperators summary of the most recent drain per
 #: name_prefix (rows/bytes/batches) — what a production job exports as
 #: metrics, captured here from StreamingQuery.recentProgress so the
@@ -260,6 +271,7 @@ def _capture_state_metrics(q, name_prefix: str) -> None:
                     (
                         sum(o.get("numRowsTotal", 0) for o in ops),
                         sum(o.get("memoryUsedBytes", 0) for o in ops),
+                        max(o.get("numShufflePartitions", 0) for o in ops),
                     )
                 )
     except Exception:  # metrics are best-effort observability
@@ -267,8 +279,9 @@ def _capture_state_metrics(q, name_prefix: str) -> None:
     if per_batch:
         LAST_DRAIN_STATE[name_prefix] = {
             "batches": len(per_batch),
-            "max_state_rows": max(r for r, _ in per_batch),
-            "max_state_bytes": max(b for _, b in per_batch),
+            "max_state_rows": max(r for r, _, _ in per_batch),
+            "max_state_bytes": max(b for _, b, _ in per_batch),
+            "shuffle_partitions": max(w for _, _, w in per_batch),
         }
 
 
@@ -284,12 +297,18 @@ def _capture_state_metrics(q, name_prefix: str) -> None:
 #: (quality_gate.py), applied uniformly to every drained screen.
 LAST_DRAIN_OBSERVED: dict[str, dict] = {}
 
+#: observability: phase timings of the most recent verdict drain per
+#: registry key (ingest_dedup.run_verdict_drain): ``batches``, the
+#: drain's sequential ``phases`` (they sum to at most its wall) and the
+#: per-batch ``fold`` phases summed over batches (the overlapped
+#: writes each keep their own key, so those may sum past stream_s).
+LAST_DRAIN_PROFILE: dict[str, dict] = {}
+
 
 def run_available_now(
     stream_df: DataFrame,
     name_prefix: str,
     output_mode: str = "append",
-    shuffle_partitions: int | None = 8,
     no_data_batch: bool = True,
 ) -> DataFrame:
     """Drain a streaming DataFrame to a memory sink with the
@@ -298,14 +317,13 @@ def run_available_now(
     ``output_mode="complete"`` for windowed aggregations whose final
     windows would otherwise sit unemitted behind the watermark.
 
-    ``shuffle_partitions`` scopes the stateful-shuffle width for the
-    drain: every stateful operator (dropDuplicates, windowed agg,
-    stream-stream join) keeps one state store per shuffle partition
-    per micro-batch, so the right width tracks state-key cardinality,
-    not the session's scan parallelism. The fresh checkpoint per call
-    makes the number free to vary; pass None to keep the session
-    setting (a long-lived production job with many keys wants the
-    larger width).
+    The stateful-shuffle width is ``drain_state_width`` over the
+    landing the stream reads (``stream_landing``): every stateful
+    operator (dropDuplicates, windowed agg, stream-stream join) keeps
+    one state store per shuffle partition per micro-batch, so the
+    width tracks state volume, not the session's scan parallelism.
+    The fresh checkpoint per call makes the width free to vary; a
+    stream without a file-source landing keeps the session setting.
 
     ``no_data_batch`` scopes ``spark.sql.streaming.noDataMicroBatches``
     for the drain. After the last data batch a stateful availableNow
@@ -327,8 +345,9 @@ def run_available_now(
     qname = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
     ckpt = f"/tmp/sfdc_cdc_ckpt/{qname}"
     confs = {}
-    if shuffle_partitions is not None:
-        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    landing = stream_landing(stream_df)
+    if landing is not None:
+        confs["spark.sql.shuffle.partitions"] = str(drain_state_width(spark, landing))
     if not no_data_batch:
         confs[_NDB] = "false"
 
@@ -484,7 +503,6 @@ def cdc_stream_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained = run_available_now(
         changes_stream(spark, landing),
         "cdc_changes",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )
     return (
@@ -521,7 +539,6 @@ def cdc_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         stream,
         "cdc_pipeline",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )
 
@@ -556,7 +573,6 @@ def cdc_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg,
         "cdc_tumbling",
         output_mode="complete",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )
 
@@ -610,7 +626,6 @@ def cdc_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         joined,
         "cdc_ss_outer",
-        shuffle_partitions=drain_state_width(spark, landing),
     )
 
 
@@ -647,7 +662,6 @@ def cdc_stream_dedup_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg,
         "cdc_dedup_tumbling",
         output_mode="complete",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )
 
@@ -688,7 +702,6 @@ def cdc_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg,
         "cdc_sliding",
         output_mode="complete",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )
 
@@ -725,7 +738,6 @@ def cdc_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg,
         "cdc_session",
         output_mode="complete",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )
 
@@ -773,7 +785,6 @@ def stateful_entity_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained = run_available_now(
         updates,
         "cdc_state_counter",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )
     return drained.groupBy("entity_name").agg(
@@ -954,7 +965,6 @@ def cdc_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         joined,
         "cdc_ss_join",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )
 
@@ -1130,7 +1140,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     drained = run_available_now(
         deduped,
         "dedup_wm",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )
     return drained.select(

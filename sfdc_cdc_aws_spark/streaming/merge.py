@@ -100,7 +100,7 @@ from pyspark.sql import functions as F
 
 from sfdc_cdc_aws_spark.materialize import file_lock, fsync_path, fsync_tree
 from sfdc_cdc_aws_spark.session import scoped_conf
-from sfdc_cdc_aws_spark.streaming.job import _NDB, drain_state_width
+from sfdc_cdc_aws_spark.streaming.job import _NDB, drain_state_width, stream_landing
 
 _KEY = ("entity_name", "uid")
 _ORDER = ("commit_ts_ms", "replay_id")
@@ -414,7 +414,7 @@ class IncrementalSnapshot:
         spark = change_stream.sparkSession
         confs = {_NDB: "false"}
         if not os.path.isdir(os.path.join(checkpoint, "offsets")):
-            landing = _stream_landing(change_stream)
+            landing = stream_landing(change_stream)
             if landing is not None:
                 confs["spark.sql.shuffle.partitions"] = str(
                     drain_state_width(spark, landing)
@@ -426,18 +426,3 @@ class IncrementalSnapshot:
                 .trigger(availableNow=True)
                 .start()
             )
-
-
-def _stream_landing(stream: DataFrame) -> str | None:
-    """The directory a file-source stream reads: the ``path`` option
-    of the first ``StreamingRelation`` leaf of its logical plan, or
-    None when no leaf is a file source with a path."""
-    leaves = stream._jdf.queryExecution().logical().collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() != "StreamingRelation":
-            continue
-        path = leaf.dataSource().options().get("path")
-        if path.isDefined():
-            return path.get()
-    return None

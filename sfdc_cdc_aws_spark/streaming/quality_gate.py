@@ -115,7 +115,6 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over that harvest.
     from sfdc_cdc_aws_spark.streaming.job import (
         LAST_DRAIN_OBSERVED,
-        drain_state_width,
         run_available_now,
     )
 
@@ -124,7 +123,6 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         gated,
         "quality_gate",
         output_mode="complete",
-        shuffle_partitions=drain_state_width(spark, landing),
         no_data_batch=False,
     )
     obs = LAST_DRAIN_OBSERVED.get("quality_gate", {})

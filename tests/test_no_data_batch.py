@@ -19,7 +19,9 @@ from pyspark.sql import functions as F
 
 from sfdc_cdc_aws_spark.streaming.job import (
     LAST_DRAIN_OBSERVED,
+    LAST_DRAIN_STATE,
     changes_stream,
+    drain_state_width,
     ensure_landing,
     run_available_now,
 )
@@ -66,3 +68,17 @@ def test_conf_restored_on_failure(spark, sf_dir):
     with pytest.raises(Exception):
         run_available_now(bad, "ndb_fail", no_data_batch=False)
     assert spark.conf.get(_NDB) == "true"
+
+
+def test_stateful_drain_runs_at_landing_derived_width(spark, sf_dir):
+    """run_available_now sizes the state stores itself: a stateful
+    drain over a file-source landing runs at drain_state_width of that
+    landing, not the session's shuffle width, and the session width is
+    back afterwards."""
+    landing = ensure_landing(spark, sf_dir)
+    width = drain_state_width(spark, landing)
+    session_width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert str(width) != session_width  # else the check proves nothing
+    _drain(spark, landing, "ndb_width", no_data_batch=False)
+    assert LAST_DRAIN_STATE["ndb_width"]["shuffle_partitions"] == width
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_width
