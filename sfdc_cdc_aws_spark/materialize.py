@@ -52,12 +52,14 @@ _FP_LEN = 12
 
 
 @contextmanager
-def file_lock(path: str) -> Iterator[None]:
+def file_lock(path: str, blocking: bool = True) -> Iterator[None]:
     """Exclusive ``flock`` on ``path`` (created if missing), released
-    by the kernel if the holder dies — no stale-lock recovery."""
+    by the kernel if the holder dies — no stale-lock recovery. With
+    ``blocking=False`` a lock held elsewhere raises BlockingIOError
+    instead of waiting."""
     fd = os.open(path, os.O_WRONLY | os.O_CREAT, 0o644)
     try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
+        fcntl.flock(fd, fcntl.LOCK_EX if blocking else fcntl.LOCK_EX | fcntl.LOCK_NB)
         yield
     finally:
         os.close(fd)

@@ -59,13 +59,13 @@ then the checkpoint commit.
 
 from __future__ import annotations
 
-import fcntl
 import os
+import re
 import shutil
 import signal
 import time
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 from operator import attrgetter
 from typing import Iterator
@@ -73,7 +73,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sfdc_cdc_aws_spark.materialize import catalog_fixture, materialize
+from sfdc_cdc_aws_spark.materialize import catalog_fixture, file_lock, materialize
 from sfdc_cdc_aws_spark.operators.dedup import (
     _DUCK_LSH_PAIRS_CTE,
     _DUCK_SIG_CTE,
@@ -136,7 +136,7 @@ def drain_bands(spark: SparkSession, landing: str) -> DataFrame:
     identical relation; recomputed fresh inside every invocation (no
     cross-run cache). localCheckpoint pins one execution for the
     N-batch fan-out."""
-    arr = spark.read.schema("doc_id long, text string").parquet(landing + "/b*")
+    arr = spark.read.schema("doc_id long, text string").parquet(*batch_dirs(landing))
     return (
         sig_bands(minhash_sig_agg_df(spread_batch(arr.select("doc_id", "text"))))
         .select("doc_id", "band_id", "bucket")
@@ -378,6 +378,18 @@ def minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: replay the exact same admission order without knowing file layout
 N_ADMIT_BATCHES = 4
 
+
+def batch_dirs(root: str) -> list[str]:
+    """The ``b<k>`` batch dirs under ``root``, as explicit paths for a
+    batch read. A glob path (``root/b*``) makes Spark look for a
+    ``_spark_metadata`` dir under the literal pattern, which fails and
+    logs a FileNotFoundException stack on every read; a path list
+    skips that probe."""
+    return sorted(
+        os.path.join(root, d) for d in os.listdir(root) if re.fullmatch(r"b\d+", d)
+    )
+
+
 def stamp_batch_mtimes(out: str, base_mtime: float, n_batches: int) -> None:
     """Batch order must NEVER depend on write latency: N small
     sequential writes can land in the same mtime tick, and
@@ -599,18 +611,15 @@ def _state_lock(state: str) -> Iterator[None]:
     by the kernel when the holder dies — SIGKILL included — so the
     kill drill's resume can take it again."""
     os.makedirs(os.path.dirname(state), exist_ok=True)
-    fd = os.open(f"{state}.lock", os.O_CREAT | os.O_RDWR)
-    try:
+    with ExitStack() as stack:
         try:
-            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            stack.enter_context(file_lock(f"{state}.lock", blocking=False))
         except BlockingIOError:
             raise RuntimeError(
                 f"another drain holds {state}.lock — one drain at a time "
                 "per fixture state root"
             ) from None
         yield
-    finally:
-        os.close(fd)
 
 
 def _screen(ids: DataFrame, hits: DataFrame, col: str) -> DataFrame:
@@ -721,7 +730,7 @@ def run_verdict_drain(
                     .awaitTermination()
                 )
             with _timed(phases, "result_s"):
-                v = spark.read.parquet(f"{verdict_dir}/b*")
+                v = spark.read.parquet(*batch_dirs(verdict_dir))
                 batch = F.expr(f"doc_id div {ARRIVAL_MOD}") % N_ADMIT_BATCHES
                 result = v.select(
                     "doc_id",

@@ -60,6 +60,7 @@ from sfdc_cdc_aws_spark.streaming.ingest_dedup import (
     _admitted_bands,
     _screen,
     admit_bkt_probe_plan,
+    batch_dirs,
     drain_bands,
     ensure_band_index,
     run_verdict_drain,
@@ -457,7 +458,7 @@ def _screen_inputs(
     arr_all = spread_batch(
         spark.read.schema(
             "doc_id long, text string, lang string, n_chars long"
-        ).parquet(landing + "/b*")
+        ).parquet(*batch_dirs(landing))
     ).localCheckpoint()
     model = F.broadcast(spark.read.parquet(model_path))
 

@@ -409,8 +409,8 @@ def run_available_now(
                             )
             # ALWAYS assign, even on a zero-progress drain: leaving the
             # previous drain's totals in place would let readers (e.g.
-            # stream_quality_gate's LAST_GATE_METRICS) report stale
-            # n_in/n_pass as the current run's numbers
+            # the quality gate's n_in/n_pass) report a stale drain's
+            # numbers as the current run's
             LAST_DRAIN_OBSERVED[name_prefix] = {
                 "n_batches": len(snapshot),
                 **totals,

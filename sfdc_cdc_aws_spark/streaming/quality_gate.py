@@ -29,12 +29,6 @@ from sfdc_cdc_aws_spark.registry import query
 GATE_MIN_TOKENS = 40
 GATE_MAX_CHARS = 450
 
-#: totals of the last drain's observed metrics, summed across
-#: micro-batches: {"n_in": int, "n_pass": int, "n_dropped": int,
-#: "n_batches": int}. A test hook AND the artifact surface — the
-#: number an operator dashboards.
-LAST_GATE_METRICS: dict[str, int] = {}
-
 
 def _gate_pass() -> F.Column:
     return (F.size(tokens_col()) >= GATE_MIN_TOKENS) & (
@@ -78,9 +72,10 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate the admitted slice per language. The gate's in/pass
     counts ride as ``observe()`` metrics evaluated inside each
     micro-batch; after the drain they are summed across batch
-    progresses into :data:`LAST_GATE_METRICS` — in production a
-    StreamingQueryListener ships the same numbers to the metrics
-    bus per batch.
+    progresses into ``job.LAST_DRAIN_OBSERVED["quality_gate"]``
+    (``quality_gate.n_in``, ``quality_gate.n_pass``, ``n_batches``) —
+    in production a StreamingQueryListener ships the same numbers to
+    the metrics bus per batch.
 
     Plan: the filter and the observation are stateless column
     expressions (whole-stage-codegen'd, evaluated once per row in
@@ -109,30 +104,14 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # drain via run_available_now, whose listener+recentProgress
     # union (keyed by batchId — complete under both the >100-batch
-    # progress-buffer eviction and the async-listener tail) now
-    # harvests EVERY observe() uniformly into LAST_DRAIN_OBSERVED;
-    # this module keeps its LAST_GATE_METRICS contract as a view
-    # over that harvest.
-    from sfdc_cdc_aws_spark.streaming.job import (
-        LAST_DRAIN_OBSERVED,
-        run_available_now,
-    )
+    # progress-buffer eviction and the async-listener tail) harvests
+    # every observe() into LAST_DRAIN_OBSERVED
+    from sfdc_cdc_aws_spark.streaming.job import run_available_now
 
     # complete mode: the last data batch already emitted the full state
-    result = run_available_now(
+    return run_available_now(
         gated,
         "quality_gate",
         output_mode="complete",
         no_data_batch=False,
     )
-    obs = LAST_DRAIN_OBSERVED.get("quality_gate", {})
-    n_in = int(obs.get("quality_gate.n_in", 0))
-    n_pass = int(obs.get("quality_gate.n_pass", 0))
-    LAST_GATE_METRICS.clear()
-    LAST_GATE_METRICS.update(
-        n_in=n_in,
-        n_pass=n_pass,
-        n_dropped=n_in - n_pass,
-        n_batches=int(obs.get("n_batches", 0)),
-    )
-    return result

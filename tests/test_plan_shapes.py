@@ -606,18 +606,13 @@ def test_aqe_skew_join_split_engages(spark):
     100 TB-relevant lesson, documented on ``skewed_fact``."""
     from sfdc_cdc_aws_spark.operators.relational2 import AQE_SKEW_CONFS
     from sfdc_cdc_aws_spark.plans.introspect import aqe_skew_join_applied
+    from sfdc_cdc_aws_spark.session import scoped_conf
 
-    saved = {k: spark.conf.get(k) for k in AQE_SKEW_CONFS}
-    try:
-        for k, v in AQE_SKEW_CONFS.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, AQE_SKEW_CONFS):
         df = _df(spark, "skew_aqe_join")
         assert aqe_skew_join_applied(df), (
             "OptimizeSkewedJoin did not split the hot partition"
         )
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
 
 
 def test_zscore_stats_broadcast_back(spark):

@@ -191,3 +191,27 @@ def test_sigkill_mid_drain_then_resume_quartet(spark):
     resumed = sorted(map(tuple, run_quartet_drain(spark, SF).collect()))
     assert resumed == baseline, "resumed verdicts != uninterrupted run"
     assert not os.path.exists(state)
+
+
+def test_drain_batch_reads_pass_explicit_batch_dirs(spark, monkeypatch):
+    """The drain's batch reads of its ``b<k>`` dirs — the landing's
+    band rows and screen inputs, the verdict read-back — pass explicit
+    paths. A glob (``.../b*``) makes Spark probe the literal pattern for
+    a ``_spark_metadata`` dir, and log a FileNotFoundException stack,
+    on every read."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from sfdc_cdc_aws_spark.streaming.ingest_quartet import run_quartet_drain
+
+    read, paths = DataFrameReader.parquet, []
+
+    def spy(self, *p, **kw):
+        paths.extend(p)
+        return read(self, *p, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    assert run_quartet_drain(spark, SF).count() > 0
+    assert [p for p in paths if "*" in p] == []
+    # landing twice (bands, screen inputs) and the verdicts once
+    assert sum(p.endswith("/b0") for p in paths) >= 3, paths
+

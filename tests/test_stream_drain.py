@@ -7,7 +7,7 @@ a remeasure-everything run."""
 
 from __future__ import annotations
 
-from tools.stream_drain_bench import run
+from tools.stream_scale_bench import run
 
 
 def test_warm_drain_resumes_and_matches_batch(spark, sf_dir):

@@ -48,7 +48,7 @@ def main() -> None:
         skewed_fact,
     )
     from sfdc_cdc_aws_spark.plans.introspect import executed_plan_string
-    from sfdc_cdc_aws_spark.session import get_session
+    from sfdc_cdc_aws_spark.session import get_session, scoped_conf
     from sfdc_cdc_aws_spark.sources import load_table
 
     spark = get_session("skew-bench")
@@ -115,10 +115,7 @@ def main() -> None:
 
     report = {"sf": args.sf, "best_of": args.best_of, "variants": {}}
     for name, (builder, confs) in variants.items():
-        saved = {k: spark.conf.get(k, None) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
+        with scoped_conf(spark, confs):
             builder().foreachPartition(lambda it: None)  # warm
             best = float("inf")
             for _ in range(args.best_of):
@@ -132,12 +129,6 @@ def main() -> None:
                 "skew_split": "skew=true" in plan,
                 "rows": builder().count(),
             }
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
         print(name, report["variants"][name])
 
     # all three strategies must agree with each other

@@ -19,19 +19,22 @@ memoryUsedBytes, captured by streaming.job.LAST_DRAIN_STATE):
   production tail-following posture.
 - `cdc_stream_outer_join`: two-sided join state, watermark-gated.
 
-Also re-runs the warm-drain split (tools/stream_drain_bench.run) at
-10×: the steady-state increment must stay trigger-bound, and a
-restart must not reprocess history.
+Also runs the warm-drain split (``run``) at sf0.1 and at 10×: the
+steady-state increment must stay trigger-bound, and a restart must not
+reprocess history.
 
 Usage:  python tools/stream_scale_bench.py        # writes STREAM_SCALE.json
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import sys
 import time
+import uuid
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -49,6 +52,118 @@ STREAM_KEYS = [
     "stream_minhash_ingest",
     "stream_dedup_within_watermark",
 ]
+TAIL_FILES = 2  # of the 16 range-partitioned wire files
+
+
+def _wire_files(landing: str) -> list[str]:
+    """The feed's data files in replayId-range (commit) order —
+    ensure_landing writes part files whose lexicographic order IS the
+    replay order (repartitionByRange + sortWithinPartitions)."""
+    return sorted(
+        f for f in glob.glob(os.path.join(landing, "part-*")) if not f.endswith(".crc")
+    )
+
+
+def run(spark, sf_dir: str, tail_files: int = TAIL_FILES) -> dict:
+    """Warm-drain split for the flagship incremental pipeline
+    ``cdc_incremental_merge`` (changes_stream -> foreachBatch MERGE via
+    IncrementalSnapshot). bench.py charges every streaming key its FULL
+    cost — fresh checkpoint, whole feed replayed; an operator lives on
+    the STEADY STATE: what does the NEXT increment cost?
+
+    - COLD: drain a PREFIX of the landing feed (all but the last
+      ``tail_files`` wire files) from a fresh checkpoint — the
+      full-history bootstrap a new deployment pays once.
+    - WARM: copy the tail files into the landing dir and re-attach with
+      the SAME checkpoint + persisted state. The file source resumes
+      from its checkpointed file log, so this drain processes ONLY the
+      delta — the steady-state increment.
+
+    After the warm drain the persisted state must equal the one-shot
+    batch flagship over the WHOLE feed (`cdc_latest_snapshot`); the
+    parity (exceptAll both ways == empty) is asserted before the
+    cold/warm walls, change counts and changes/s are returned.
+    Reference parity: the reference's steady state is the
+    Kinesis->Lambda tail (worker/template.yaml:59-60, <=50 records/s
+    provisioned)."""
+    from pyspark.sql import functions as F
+
+    from sfdc_cdc_aws_spark.operators.pipeline import cdc_latest_snapshot
+    from sfdc_cdc_aws_spark.streaming.job import (
+        WIRE_SCHEMA,
+        changes_stream,
+        ensure_landing,
+        parse_wire,
+    )
+    from sfdc_cdc_aws_spark.streaming.merge import IncrementalSnapshot
+
+    full_landing = ensure_landing(spark, sf_dir)
+    files = _wire_files(full_landing)
+    if len(files) <= tail_files:
+        raise ValueError(f"feed has {len(files)} files, need > {tail_files}")
+    prefix, tail = files[:-tail_files], files[-tail_files:]
+
+    scratch = f"/tmp/sfdc_drain_bench/{uuid.uuid4().hex[:8]}"
+    landing = os.path.join(scratch, "landing")
+    os.makedirs(landing)
+    for f in prefix:
+        shutil.copy(f, landing)
+
+    def _parsed_count(paths: list[str]) -> int:
+        return parse_wire(spark.read.schema(WIRE_SCHEMA).json(paths)).count()
+
+    prefix_changes = _parsed_count(prefix)
+    delta_changes = _parsed_count(tail)
+
+    snap = IncrementalSnapshot(spark, os.path.join(scratch, "state"))
+    ckpt = os.path.join(scratch, "ckpt")
+
+    def drain() -> float:
+        ch = changes_stream(spark, landing, max_files_per_trigger=8).select(
+            "entity_name", "uid", "record_id", "change_type", "commit_ts_ms", "replay_id"
+        )
+        t0 = time.perf_counter()
+        snap.attach(ch, ckpt).awaitTermination()
+        return time.perf_counter() - t0
+
+    cold_s = drain()
+    # published epochs, not retained ones: keep_epochs caps epochs()
+    epochs_cold = snap._read_manifest()["epoch"] + 1
+
+    for f in tail:
+        shutil.copy(f, landing)
+    warm_s = drain()
+
+    # Parity: warm-resumed state over the whole feed == batch flagship.
+    got = snap.current().select(
+        "entity_name", "record_id", F.col("change_type").alias("uind"), "commit_ts_ms"
+    )
+    want = cdc_latest_snapshot(spark, sf_dir)
+    missing = want.exceptAll(got).count()
+    extra = got.exceptAll(want).count()
+    parity = missing == 0 and extra == 0
+
+    result = {
+        "metric": "stream_drain_split",
+        "sf_dir": sf_dir,
+        "prefix_files": len(prefix),
+        "delta_files": len(tail),
+        "prefix_changes": prefix_changes,
+        "delta_changes": delta_changes,
+        "cold_s": round(cold_s, 3),
+        "warm_s": round(warm_s, 3),
+        "cold_changes_per_s": round(prefix_changes / cold_s, 1),
+        "warm_changes_per_s": round(delta_changes / warm_s, 1),
+        "epochs_cold": epochs_cold,
+        "state_rows": got.count(),
+        "parity_with_batch_flagship": parity,
+        "parity_missing": missing,
+        "parity_extra": extra,
+    }
+    shutil.rmtree(scratch, ignore_errors=True)
+    if not parity:
+        raise AssertionError(f"warm-resume parity failed: {result}")
+    return result
 
 
 def _tail_follow_bounded_state(spark, sf_dir: str) -> dict:
@@ -67,15 +182,13 @@ def _tail_follow_bounded_state(spark, sf_dir: str) -> dict:
     the ratio to feed size is the invariant to watch.)
     Every record is delivered twice (bus redelivery); the drain must
     emit each exactly once — asserted against the batch distinct."""
-    import uuid as _uuid
-
     import pyspark.sql.functions as F
 
     from sfdc_cdc_aws_spark.streaming import job as jm
 
     landing = jm.ensure_landing(spark, sf_dir)
     wire = spark.read.schema(jm.WIRE_SCHEMA).json(landing)
-    ordered_dir = f"/tmp/sfdc_tail_follow/{_uuid.uuid4().hex[:8]}"
+    ordered_dir = f"/tmp/sfdc_tail_follow/{uuid.uuid4().hex[:8]}"
     parsed = jm.parse_wire(wire).select("replay_id", "commit_ts").distinct()
     (
         wire.join(
@@ -92,12 +205,9 @@ def _tail_follow_bounded_state(spark, sf_dir: str) -> dict:
     # range-partitioned write stamps near-identical mtimes, which
     # would randomize arrival and make genuinely-ordered events look
     # late. Stamp ascending mtimes in name order (= commit_ts order).
-    import glob as _glob
-    import time as _time0
-
-    base_t = _time0.time() - 3600
+    base_t = time.time() - 3600
     for i, f in enumerate(
-        sorted(_glob.glob(os.path.join(ordered_dir, "part-*")))
+        sorted(glob.glob(os.path.join(ordered_dir, "part-*")))
     ):
         if not f.endswith(".crc"):
             os.utime(f, (base_t + i, base_t + i))
@@ -116,17 +226,13 @@ def _tail_follow_bounded_state(spark, sf_dir: str) -> dict:
         .dropDuplicatesWithinWatermark(["replay_id", "record_id"])
     )
     jm.LAST_DRAIN_STATE.clear()
-    import time as _time
-
-    t0 = _time.perf_counter()
+    t0 = time.perf_counter()
     got = jm.run_available_now(deduped, "tail_follow_dedup")
-    wall = round(_time.perf_counter() - t0, 3)
+    wall = round(time.perf_counter() - t0, 3)
     n = got.count()
     want = jm.parse_wire(wire).dropDuplicates(["replay_id", "record_id"]).count()
     state = jm.LAST_DRAIN_STATE.get("tail_follow_dedup", {})
-    import shutil as _shutil
-
-    _shutil.rmtree(ordered_dir, ignore_errors=True)
+    shutil.rmtree(ordered_dir, ignore_errors=True)
     return {
         "wall_s": wall,
         # wall grows faster than feed between x10 and x100 because the
@@ -203,7 +309,6 @@ def main() -> int:
     from sfdc_cdc_aws_spark.registry import load_all
     from sfdc_cdc_aws_spark.session import get_session
     from sfdc_cdc_aws_spark.streaming import job as jobmod
-    from tools.stream_drain_bench import run as drain_split
 
     if "--quartet" in sys.argv[1:]:
         # incremental mode: add/refresh ONLY the quartet drop-
@@ -294,8 +399,8 @@ def main() -> int:
         )
 
     print("warm-drain split at 10x ...", flush=True)
-    out["drain_split_sf1x"] = drain_split(spark, SF1X)
-    out["drain_split_sf01"] = drain_split(spark, SF01)
+    out["drain_split_sf1x"] = run(spark, SF1X)
+    out["drain_split_sf01"] = run(spark, SF01)
 
     with open(os.path.join(REPO, "STREAM_SCALE.json"), "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
