@@ -29,8 +29,6 @@ Scale design notes, since dedup is the classic 100 TB trap:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,6 +42,7 @@ from sfdc_cdc_aws_spark.operators.text import (
     word_ngrams,
 )
 from sfdc_cdc_aws_spark.sources import load_table
+from sfdc_cdc_aws_spark.sources.tables import data_files, read_parquet, scan_splits
 
 P31 = 2_147_483_647  # Mersenne prime 2^31-1: keeps a*x+b inside int64
 N_HASHES = 16
@@ -231,7 +230,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.parquet(out)
 
     out = materialize("minhash_sigs", sf_dir, ("documents",), build)
-    sigs = spark.read.parquet(out)
+    sigs = read_parquet(spark, out)
     # a small cache lands as one file, and file packing
     # (maxPartitionBytes/openCost) keeps even a multi-file cache in
     # one scan split — so every consumer's band explode ran as ONE
@@ -249,13 +248,9 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count — so a tiny relation stays narrow, a mid-size one spreads,
     # and a production-scale multi-file cache (already wide) adds no
     # shuffle at all.
-    n_files, total_bytes = 0, 0
-    for fname in os.listdir(out):
-        if fname.endswith(".parquet"):
-            n_files += 1
-            total_bytes += os.path.getsize(os.path.join(out, fname))
+    sizes = [size for name, size, _ in data_files(out) if name.endswith(".parquet")]
     width = _sig_spread_width(
-        total_bytes, n_files, spark.sparkContext.defaultParallelism
+        sum(sizes), len(sizes), spark.sparkContext.defaultParallelism
     )
     if width > 1:
         sigs = sigs.repartition(width, "doc_id")
@@ -266,16 +261,10 @@ def _sig_spread_width(total_bytes: int, n_files: int, par: int) -> int:
     """Partitions the signature-cache read should be spread to, or 1
     for "leave the scan alone". Byte-derived (one partition per
     _SIG_SPREAD_BYTES, capped at the session parallelism) and engaged
-    only when it exceeds the scan's own estimated split count — splits
-    ≈ ceil(packed bytes / maxPartitionBytes) with each file charged
-    openCostInBytes (4 MB), the same packing math the file source
-    uses, computed from the listing instead of a plan analysis."""
+    only when it exceeds the scan's own split count, estimated from
+    the listing (``scan_splits``) instead of a plan analysis."""
     width = min(par, max(1, total_bytes // _SIG_SPREAD_BYTES))
-    est_scan_parts = max(
-        1,
-        min(n_files, -(-(total_bytes + n_files * (4 << 20)) // (128 << 20))),
-    )
-    return width if width > est_scan_parts else 1
+    return width if width > scan_splits(total_bytes, n_files) else 1
 
 
 def sig_bands(sig_df: DataFrame) -> DataFrame:

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from sfdc_cdc_aws_spark.materialize import materialize
 from sfdc_cdc_aws_spark.registry import query
-from sfdc_cdc_aws_spark.sources import load_table
+from sfdc_cdc_aws_spark.sources import load_table, read_parquet
 
 Z_BITS = 8  # rank-bucket resolution per dimension (256 buckets)
 Z_FILES = 64
@@ -122,7 +122,7 @@ def zorder_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     original table); the pruning itself is asserted from the parquet
     footers in tests/test_layout.py."""
     path = ensure_zorder_layout(spark, sf_dir)
-    z = spark.read.parquet(path)
+    z = read_parquet(spark, path)
     return z.where(
         F.col("o_custkey").between(*BOX_CUST)
         & _day("o_orderdate").between(*BOX_DAYS)
@@ -187,7 +187,7 @@ def range_sorted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     original); the skipping itself is asserted from parquet footers in
     tests/test_layout.py."""
     path = ensure_range_sorted_layout(spark, sf_dir)
-    s = spark.read.parquet(path)
+    s = read_parquet(spark, path)
     return (
         s.where(
             (F.col("l_shipdate") >= SHIP_LO) & (F.col("l_shipdate") < SHIP_HI)

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sfdc_cdc_aws_spark.registry import query
-from sfdc_cdc_aws_spark.sources import load_table
+from sfdc_cdc_aws_spark.sources import load_table, read_parquet
 from sfdc_cdc_aws_spark.sources.cdc_feed import CHANGES_CTE, changes
 
 # Target rows per compacted output file. At sf0.1 lineitem has ~600k
@@ -476,7 +476,7 @@ def compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"compaction fanned out: {n_files} files for {n_bins} bins"
         )
-    back = spark.read.parquet(out)
+    back = read_parquet(spark, out, schema=assigned.schema)
     result = back.groupBy("bin_id").agg(
         F.count("*").alias("n_rows"),
         F.round(

@@ -30,7 +30,7 @@ from sfdc_cdc_aws_spark.materialize import materialize
 from sfdc_cdc_aws_spark.operators.text import BM25_ORACLE
 from sfdc_cdc_aws_spark.registry import QUERIES, query
 from sfdc_cdc_aws_spark.session import truncate_lineage
-from sfdc_cdc_aws_spark.sources import load_table
+from sfdc_cdc_aws_spark.sources import load_table, read_parquet
 
 N_QUERIES = 10  # bounded query set for brute force
 TOP_K = 10
@@ -139,7 +139,7 @@ def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_assignments(spark, sf_dir).write.parquet(out)
 
     out = materialize("ivf_index", sf_dir, ("embeddings",), build)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def ivf_assignments(
@@ -994,7 +994,7 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_assignments(spark, sf_dir).join(codes, "vec_id").write.parquet(out)
 
     out = materialize("ivfpq_index", sf_dir, ("embeddings",), build)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def _duck_qlut_entries() -> str:

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from sfdc_cdc_aws_spark.materialize import catalog_fixture, materialize
 from sfdc_cdc_aws_spark.registry import query
 from sfdc_cdc_aws_spark.session import scoped_conf
-from sfdc_cdc_aws_spark.sources import load_table
+from sfdc_cdc_aws_spark.sources import load_table, read_parquet
 from sfdc_cdc_aws_spark.sources.cdc_feed import CHANGES_CTE, changes
 
 
@@ -47,14 +47,16 @@ def partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes the same aggregate from the source feed, so
     the hash check proves the write→read cycle loses nothing."""
     out = f"/tmp/sfdc_cdc_lake/{uuid.uuid4().hex[:8]}"
+    feed = changes(spark, sf_dir)
     (
-        changes(spark, sf_dir)
-        .write.mode("overwrite")
+        feed.write.mode("overwrite")
         .partitionBy("change_type")
         .option("maxRecordsPerFile", 1_000_000)
         .parquet(out)
     )
-    back = spark.read.parquet(out).where(F.col("change_type") == "UPDATE")
+    back = read_parquet(spark, out, schema=feed.schema).where(
+        F.col("change_type") == "UPDATE"
+    )
     assert any(  # partition pruning sanity: only the UPDATE dir exists in the scan
         p.startswith("change_type=")
         for p in os.listdir(out)
@@ -497,7 +499,7 @@ def bayeux_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sfdc_cdc_aws_spark.sources.bayeux import register_cdc_bayeux
     from sfdc_cdc_aws_spark.sources.bayeux_testing import ScriptedBayeuxServer
     from sfdc_cdc_aws_spark.sources.cdc_feed import envelopes
-    from sfdc_cdc_aws_spark.streaming.job import parse_wire
+    from sfdc_cdc_aws_spark.streaming.job import WIRE_SCHEMA, parse_wire
 
     CUT = 500
     served = [
@@ -527,7 +529,7 @@ def bayeux_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-        wire = spark.read.parquet(f"{tmp}/out")
+        wire = read_parquet(spark, f"{tmp}/out", schema=WIRE_SCHEMA)
         return parse_wire(wire).select(
             "entity_name",
             "record_id",

@@ -88,7 +88,7 @@ from sfdc_cdc_aws_spark.operators.dedup import (
 from sfdc_cdc_aws_spark.operators.text import DUCK_HASH64, shared_hash64
 from sfdc_cdc_aws_spark.registry import query
 from sfdc_cdc_aws_spark.session import scoped_conf, truncate_lineage
-from sfdc_cdc_aws_spark.sources import load_table
+from sfdc_cdc_aws_spark.sources import load_table, read_parquet
 from sfdc_cdc_aws_spark.sources.tables import table_path
 from sfdc_cdc_aws_spark.streaming.job import LAST_DRAIN_PROFILE, run_available_now
 
@@ -136,7 +136,7 @@ def drain_bands(spark: SparkSession, landing: str) -> DataFrame:
     identical relation; recomputed fresh inside every invocation (no
     cross-run cache). localCheckpoint pins one execution for the
     N-batch fan-out."""
-    arr = spark.read.schema("doc_id long, text string").parquet(*batch_dirs(landing))
+    arr = read_parquet(spark, *batch_dirs(landing), schema="doc_id long, text string")
     return (
         sig_bands(minhash_sig_agg_df(spread_batch(arr.select("doc_id", "text"))))
         .select("doc_id", "band_id", "bucket")
@@ -223,7 +223,7 @@ def stream_minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sfdc_cdc_aws_spark.operators.text import tokens_col
 
     landing = ensure_doc_landing(spark, sf_dir)
-    corpus_bands = spark.read.parquet(ensure_band_index(spark, sf_dir))
+    corpus_bands = read_parquet(spark, ensure_band_index(spark, sf_dir))
     arrivals = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 2)
@@ -353,8 +353,8 @@ def minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     only thing that moves. Reference parity: the reference has no
     dedup; this is §2.9 extension surface on the S5 micro-batch
     arrival model (worker/template.yaml's batch loop analog)."""
-    corpus_rows = spark.read.parquet(ensure_band_index(spark, sf_dir))
-    delta_rows = spark.read.parquet(ensure_band_delta(spark, sf_dir))
+    corpus_rows = read_parquet(spark, ensure_band_index(spark, sf_dir))
+    delta_rows = read_parquet(spark, ensure_band_delta(spark, sf_dir))
     state = _bucket_partial(corpus_rows)
     delta = _bucket_partial(delta_rows)
     return (
@@ -730,7 +730,7 @@ def run_verdict_drain(
                     .awaitTermination()
                 )
             with _timed(phases, "result_s"):
-                v = spark.read.parquet(*batch_dirs(verdict_dir))
+                v = read_parquet(spark, *batch_dirs(verdict_dir))
                 batch = F.expr(f"doc_id div {ARRIVAL_MOD}") % N_ADMIT_BATCHES
                 result = v.select(
                     "doc_id",
@@ -778,7 +778,10 @@ def run_admit_drain(
             for d in (f"{delta}/b{i}" for i in range(batch_id))
             if os.path.exists(os.path.join(d, "_SUCCESS"))
         ]
-        idx = spark.read.parquet(*index_dirs).select("band_id", "bucket")
+        # corpus and deltas are both written from sig_bands rows
+        idx = read_parquet(
+            spark, *index_dirs, schema=bands_all.select("band_id", "bucket").schema
+        )
         bands_b = bands_all.join(F.broadcast(ids), "doc_id")
         hits = bands_b.join(idx, ["band_id", "bucket"]).select("doc_id").distinct()
         return _screen(ids, hits, "admitted")
@@ -854,8 +857,8 @@ def ensure_cc_state(spark: SparkSession, sf_dir: str) -> str:
     cc_label_merge, never recomputed from the full edge relation."""
 
     def build(out: str) -> None:
-        corpus_bands = spark.read.parquet(
-            ensure_band_index(spark, sf_dir)
+        corpus_bands = read_parquet(
+            spark, ensure_band_index(spark, sf_dir)
         ).select(F.col("corpus_doc").alias("doc_id"), "band_id", "bucket")
         pairs = (
             lsh_bucket_pairs(corpus_bands)
@@ -940,9 +943,9 @@ def _cc_merge_parts(
     the incremental survivor election (dedup_keep_best_merge) elects
     over. Split out so the election can reuse the remap instead of
     re-deriving which clusters changed."""
-    state = spark.read.parquet(ensure_cc_state(spark, sf_dir))
-    corpus_bands = spark.read.parquet(ensure_band_index(spark, sf_dir))
-    arrival_bands = spark.read.parquet(ensure_band_delta(spark, sf_dir))
+    state = read_parquet(spark, ensure_cc_state(spark, sf_dir))
+    corpus_bands = read_parquet(spark, ensure_band_index(spark, sf_dir))
+    arrival_bands = read_parquet(spark, ensure_band_delta(spark, sf_dir))
     all_bands = corpus_bands.unionByName(arrival_bands)
     probe = (
         arrival_bands.select(
@@ -1030,7 +1033,7 @@ def ensure_band_index_table(spark: SparkSession, sf_dir: str) -> str:
         tbl = f"band_idx_bkt_{tag}"
         if not spark.catalog.tableExists(tbl):
             (
-                spark.read.parquet(ensure_band_index(spark, sf_dir))
+                read_parquet(spark, ensure_band_index(spark, sf_dir))
                 # same murmur3 hash as the bucket assignment: one task
                 # per bucket, one sorted file per bucket
                 .repartition(INDEX_BUCKETS, "band_id", "bucket")
@@ -1090,7 +1093,7 @@ def minhash_index_merge_bucketed(
         )
     )
     delta = (
-        spark.read.parquet(ensure_band_delta(spark, sf_dir))
+        read_parquet(spark, ensure_band_delta(spark, sf_dir))
         .groupBy("band_id", "bucket")
         .agg(
             F.count("*").alias("d_n"),
@@ -1132,7 +1135,7 @@ def ensure_admit_bkt_table(spark: SparkSession, sf_dir: str) -> BatchIndex:
     ) as (tag, root):
         tbl = f"admit_bkt_{tag}"
         return BatchIndex(tbl, os.path.join(root, tbl), ("band_id", "bucket")).ensure_corpus(
-            spark, lambda: spark.read.parquet(ensure_band_index(spark, sf_dir))
+            spark, lambda: read_parquet(spark, ensure_band_index(spark, sf_dir))
         )
 
 
@@ -1233,7 +1236,7 @@ def ensure_keep_best_state(spark: SparkSession, sf_dir: str) -> str:
     batch touches."""
 
     def build(out: str) -> None:
-        labels = spark.read.parquet(ensure_cc_state(spark, sf_dir))
+        labels = read_parquet(spark, ensure_cc_state(spark, sf_dir))
         keep_best_election(spark, sf_dir, labels).write.parquet(out)
 
     return materialize("keepbest_state", sf_dir, ("documents",), build)
@@ -1271,7 +1274,7 @@ def dedup_keep_best_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (minhash_index_merge), and now the survivor manifest amends
     O(touched) rows instead of re-electing every cluster."""
     labels, remap = _cc_merge_parts(spark, sf_dir)
-    standing = spark.read.parquet(ensure_keep_best_state(spark, sf_dir))
+    standing = read_parquet(spark, ensure_keep_best_state(spark, sf_dir))
     # bounded by the arrival delta's contracted graph — broadcasts
     touched_old = F.broadcast(
         remap.select(F.col("old").alias("cluster_id")).distinct()

@@ -29,7 +29,7 @@ from sfdc_cdc_aws_spark.operators.curation2 import (
 )
 from sfdc_cdc_aws_spark.operators.text import _DUCK_TOKENS, DUCK_HASH64, shared_hash64
 from sfdc_cdc_aws_spark.registry import query
-from sfdc_cdc_aws_spark.sources import load_table
+from sfdc_cdc_aws_spark.sources import load_table, read_parquet
 from sfdc_cdc_aws_spark.streaming.ingest_dedup import (
     ARRIVAL_MOD,
     ensure_doc_landing,
@@ -148,7 +148,7 @@ def stream_dsir_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, one broadcast join."""
     landing = ensure_doc_landing(spark, sf_dir)
     model = F.broadcast(
-        spark.read.parquet(ensure_dsir_model(spark, sf_dir))
+        read_parquet(spark, ensure_dsir_model(spark, sf_dir))
     )
     arrivals = (
         spark.readStream.schema("doc_id long, text string")

@@ -50,7 +50,7 @@ from sfdc_cdc_aws_spark.operators.similarity import (
 )
 from sfdc_cdc_aws_spark.operators.text import _DUCK_TOKENS, shared_hash64
 from sfdc_cdc_aws_spark.registry import query
-from sfdc_cdc_aws_spark.sources import load_table
+from sfdc_cdc_aws_spark.sources import load_table, read_parquet
 from sfdc_cdc_aws_spark.sources.tables import table_path
 from sfdc_cdc_aws_spark.streaming.ingest_ann import _probe_cells_expr
 from sfdc_cdc_aws_spark.streaming.ingest_dedup import (
@@ -136,7 +136,7 @@ def ensure_quartet_bkt_tables(
         vecs = BatchIndex(vtbl, os.path.join(root, vtbl), ("cent_id",))
         return (
             bands.ensure_corpus(
-                spark, lambda: spark.read.parquet(ensure_band_index(spark, sf_dir))
+                spark, lambda: read_parquet(spark, ensure_band_index(spark, sf_dir))
             ),
             vecs.ensure_corpus(
                 spark,
@@ -456,11 +456,13 @@ def _screen_inputs(
         norm(F.col("embedding")).alias("nrm"),
     )
     arr_all = spread_batch(
-        spark.read.schema(
-            "doc_id long, text string, lang string, n_chars long"
-        ).parquet(*batch_dirs(landing))
+        read_parquet(
+            spark,
+            *batch_dirs(landing),
+            schema="doc_id long, text string, lang string, n_chars long",
+        )
     ).localCheckpoint()
-    model = F.broadcast(spark.read.parquet(model_path))
+    model = F.broadcast(read_parquet(spark, model_path))
 
     def _build_stateless() -> DataFrame:
         gate_all = arr_all.select("doc_id", _gate_pass().alias("gate_pass"))

@@ -8,6 +8,12 @@ publish. Tombstones stay IN the state (a later batch must not
 resurrect an older pre-delete row); readers filter
 ``change_type <> 'DELETE'`` (``current()`` below).
 
+One aggregate per upsert: the merge plan is
+``_latest_per_key(state ∪ batch)``. Its map-side partial aggregate
+already reduces the batch to one row per key, so the batch is not
+pre-reduced by an aggregate (and shuffle) of its own; the first epoch,
+which has no state, is ``_latest_per_key(batch)``.
+
 Commit protocol: WRITE-AUDIT-PUBLISH with OPTIMISTIC CONCURRENCY —
 the discipline Delta/Iceberg implement with their transaction logs
 (put-if-absent on the next log entry), reduced to its essentials for
@@ -21,9 +27,11 @@ a plain-parquet state dir:
   never clobber each other's stage.
 - AUDIT: before publishing, the staged epoch is read back and checked
   against the state invariants (Spark's ``_SUCCESS`` commit marker
-  present; key uniqueness — this IS a latest-per-key relation). A
-  failed audit raises and never publishes: bad data cannot become
-  current.
+  present; row count and key uniqueness over the files on disk — this
+  IS a latest-per-key relation). The read-back is pinned to the schema
+  of the relation just written, so it launches no schema-inference
+  job. A failed audit raises and never publishes: bad data cannot
+  become current.
 - COMMIT (validate-and-swap): the winner for epoch N is elected by
   ``os.rename(stage_dir, epoch_NNNNNN)`` — atomic put-if-absent on a
   POSIX directory entry (rename onto an existing non-empty dir fails
@@ -32,9 +40,10 @@ a plain-parquet state dir:
   RETRIES the whole merge against the new current epoch — the
   lost-update anomaly is structurally impossible, no writer lock
   held during the (long) write phase.
-- PUBLISH: the ``MANIFEST`` file (JSON: epoch number + audited row
-  count) is written to a temp name, fsync'd, and ``os.replace``d into
-  place under a short ``flock`` critical section with a MONOTONIC
+- PUBLISH: the ``MANIFEST`` file (JSON: epoch number, audited row
+  count and the epoch's schema) is written to a temp name, fsync'd,
+  and ``os.replace``d into place under a short ``flock`` critical
+  section with a MONOTONIC
   guard (never move the pointer backwards) — so two racing publishers
   cannot regress a reader's view. The directory fd is fsync'd after
   the rename so the publish survives power loss. A winner that
@@ -45,7 +54,13 @@ a plain-parquet state dir:
   crash recovery is just another conflict.
 
 Readers PIN the manifest: ``read()`` resolves MANIFEST once and scans
-exactly that epoch directory. There is no repair-on-read, no window
+exactly that epoch directory, with the schema the manifest carries, so
+no read of the state launches a Spark job (the next upsert's base
+scan included). A retained older epoch may be narrower than the
+manifest's schema (additive drift), and a MANIFEST written before the
+schema was recorded has none; both are read through the package's
+schema cache (``sources.tables.read_parquet``), which infers an
+epoch's immutable file set once. There is no repair-on-read, no window
 where the state path doesn't exist (the fault of the previous
 rename-dance protocol this replaces), and a reader concurrent with a
 crashed writer sees the old epoch or — after a successful publish —
@@ -97,9 +112,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sfdc_cdc_aws_spark.materialize import file_lock, fsync_path, fsync_tree
 from sfdc_cdc_aws_spark.session import scoped_conf
+from sfdc_cdc_aws_spark.sources.tables import read_parquet
 from sfdc_cdc_aws_spark.streaming.job import _NDB, drain_state_width, stream_landing
 
 _KEY = ("entity_name", "uid")
@@ -173,11 +190,22 @@ class IncrementalSnapshot:
                     out.append(n)
         return out
 
+    def _scan(self, n: int, manifest: dict) -> DataFrame:
+        """Scan epoch ``n`` with the manifest's schema when ``n`` is the
+        manifest's epoch and the manifest carries one; otherwise through
+        the schema cache (module docstring)."""
+        schema = manifest.get("schema") if n == manifest["epoch"] else None
+        return read_parquet(
+            self.spark,
+            self._epoch_dir(n),
+            schema=None if schema is None else T.StructType.fromJson(schema),
+        )
+
     def read(self) -> DataFrame:
         m = self._read_manifest()
         if m is None:
             raise FileNotFoundError(f"no published state at {self.state_dir}")
-        return self.spark.read.parquet(self._epoch_dir(m["epoch"]))
+        return self._scan(m["epoch"], m)
 
     def read_epoch(self, n: int) -> DataFrame:
         """Point-in-time read of a retained published epoch."""
@@ -185,7 +213,7 @@ class IncrementalSnapshot:
             raise FileNotFoundError(
                 f"epoch {n} not retained (have {self.epochs()})"
             )
-        return self.spark.read.parquet(self._epoch_dir(n))
+        return self._scan(n, self._read_manifest())
 
     def current(self) -> DataFrame:
         """Consumer view: latest non-deleted record per key."""
@@ -193,12 +221,15 @@ class IncrementalSnapshot:
 
     # -- write side --------------------------------------------------------
 
-    def _audit(self, staged: str) -> dict:
-        """Read the staged epoch back and enforce the state invariants.
-        Raises AuditError (nothing published) on violation."""
+    def _audit(self, staged: str, schema: T.StructType | None = None) -> dict:
+        """Read the staged epoch back, pinned to ``schema`` (the
+        relation its writer wrote; None for an orphan whose writer is
+        gone), and enforce the state invariants. Returns the manifest
+        fields: row count and the epoch's schema. Raises AuditError
+        (nothing published) on violation."""
         if not os.path.exists(os.path.join(staged, "_SUCCESS")):
             raise AuditError(f"staged epoch {staged} has no _SUCCESS marker")
-        df = self.spark.read.parquet(staged)
+        df = read_parquet(self.spark, staged, schema=schema)
         row = df.agg(
             F.count("*").alias("n"),
             F.count_distinct(*[F.col(c) for c in _KEY]).alias("k"),
@@ -209,7 +240,7 @@ class IncrementalSnapshot:
                 f"staged epoch {staged} breaks latest-per-key: "
                 f"{n} rows over {n_keys} distinct keys"
             )
-        return {"rows": n}
+        return {"rows": n, "schema": df.schema.jsonValue()}
 
     def _publish(self, epoch: int, audit: dict) -> None:
         """Atomically flip MANIFEST to the audited epoch (fsync'd temp
@@ -314,23 +345,20 @@ class IncrementalSnapshot:
         import random
         import time
 
-        # reduce the incoming batch before touching state: the merge
-        # input is (distinct keys in batch), not (rows in batch)
-        delta = _latest_per_key(batch_df)
         last_err: CommitConflict | None = None
         for attempt in range(self.MAX_COMMIT_ATTEMPTS):
             try:
-                return self._attempt(delta)
+                return self._attempt(batch_df)
             except CommitConflict as e:
                 last_err = e
                 self._recover_orphan_epoch()  # crash-between-commit-and-publish
                 time.sleep(random.uniform(0, 0.05) * min(attempt, 4))
         raise last_err  # contended beyond the retry budget
 
-    def _attempt(self, delta: DataFrame) -> None:
+    def _attempt(self, batch_df: DataFrame) -> None:
         manifest = self._read_manifest()  # the pinned BASE epoch
         if manifest is None:
-            merged, next_epoch, base_dir = delta, 0, None
+            merged, next_epoch, base_dir = _latest_per_key(batch_df), 0, None
         else:
             # ADDITIVE-ONLY schema evolution: a feed that grows a
             # column mid-stream (the CDC reality — new entity fields
@@ -344,17 +372,18 @@ class IncrementalSnapshot:
             # evolution. Retyping still fails in unionByName itself.
             # Scan the PINNED epoch dir directly (not read(), which
             # would re-resolve the manifest and could silently pin a
-            # newer epoch than next_epoch assumes).
+            # newer epoch than next_epoch assumes). One aggregate over
+            # state ∪ batch: its partial side reduces the batch.
             base_dir = self._epoch_dir(manifest["epoch"])
-            state = self.spark.read.parquet(base_dir)
-            dropped = set(state.columns) - set(delta.columns)
+            state = self._scan(manifest["epoch"], manifest)
+            dropped = set(state.columns) - set(batch_df.columns)
             if dropped:
                 raise AuditError(
                     f"delta drops state columns {sorted(dropped)}; "
                     "schema evolution is additive-only"
                 )
             merged = _latest_per_key(
-                state.unionByName(delta, allowMissingColumns=True)
+                state.unionByName(batch_df, allowMissingColumns=True)
             )
             next_epoch = manifest["epoch"] + 1
         os.makedirs(self.state_dir, exist_ok=True)
@@ -370,7 +399,9 @@ class IncrementalSnapshot:
         try:
             merged.coalesce(4).write.mode("overwrite").parquet(staged)
             fsync_tree(staged)  # data durable BEFORE commit
-            audit = self._audit(staged)  # AUDIT: raises → nothing published
+            # AUDIT, pinned to the schema just written: raises →
+            # nothing published
+            audit = self._audit(staged, merged.schema)
         except Exception as e:
             shutil.rmtree(staged, ignore_errors=True)
             # A laggard whose base epoch was GC'd by a faster writer
