@@ -379,7 +379,7 @@ def pyds_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sfdc_cdc_aws_spark.sources.cdc_feed import ENVELOPE_SCHEMA
     from sfdc_cdc_aws_spark.sources.live import register_cdc_wire
-    from sfdc_cdc_aws_spark.streaming.job import WIRE_SCHEMA, ensure_landing
+    from sfdc_cdc_aws_spark.streaming.job import WIRE_SCHEMA, drain, ensure_landing
 
     register_cdc_wire(spark)
     landing = ensure_landing(spark, sf_dir)
@@ -393,14 +393,7 @@ def pyds_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(landing)
         .selectExpr("partitionKey", "data")
     )
-    q = (
-        wire.writeStream.format("cdc_wire")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(wire, ckpt, lambda w: w.format("cdc_wire").option("path", out)).awaitTermination()
     back = spark.read.format("cdc_wire").option("path", out).load()
     parsed = F.from_json(
         F.expr("try_to_binary(data, 'base64')").cast("string"), ENVELOPE_SCHEMA
@@ -499,7 +492,7 @@ def bayeux_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sfdc_cdc_aws_spark.sources.bayeux import register_cdc_bayeux
     from sfdc_cdc_aws_spark.sources.bayeux_testing import ScriptedBayeuxServer
     from sfdc_cdc_aws_spark.sources.cdc_feed import envelopes
-    from sfdc_cdc_aws_spark.streaming.job import WIRE_SCHEMA, parse_wire
+    from sfdc_cdc_aws_spark.streaming.job import WIRE_SCHEMA, drain, parse_wire
 
     CUT = 500
     served = [
@@ -514,7 +507,7 @@ def bayeux_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     run = _uuid.uuid4().hex[:8]
     with tempfile.TemporaryDirectory(prefix="bayeux_srt_") as tmp:
         with ScriptedBayeuxServer(served, batch=200, token="t0") as srv:
-            q = (
+            feed = (
                 spark.readStream.format("cdc_bayeux")
                 .option("endpoint", srv.url)
                 .option("topic", "/data/ChangeEvents")
@@ -522,13 +515,12 @@ def bayeux_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .option("max_polls_per_batch", "5")
                 .load()
                 .select("partitionKey", "data")
-                .writeStream.format("parquet")
-                .option("path", f"{tmp}/out")
-                .option("checkpointLocation", f"{tmp}/ckpt_{run}")
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
+            drain(
+                feed,
+                f"{tmp}/ckpt_{run}",
+                lambda w: w.format("parquet").option("path", f"{tmp}/out"),
+            ).awaitTermination()
         wire = read_parquet(spark, f"{tmp}/out", schema=WIRE_SCHEMA)
         return parse_wire(wire).select(
             "entity_name",

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sfdc_cdc_aws_spark.sources.cdc_feed import ENVELOPE_SCHEMA
+from sfdc_cdc_aws_spark.streaming.job import drain
 
 #: columns every parsed change row carries regardless of payload drift
 BASE_COLS = (
@@ -106,5 +107,7 @@ def attach_with_drift(snap, change_stream: DataFrame, checkpoint: str):
         known.update(discovered_field_keys(batch_df))
         snap.upsert(widen_payload(batch_df, sorted(known)), epoch_id)
 
-    # the snapshot's own start site: same drain discipline as attach
-    return snap._start_drain(change_stream, checkpoint, write_batch)
+    # the same drain discipline as IncrementalSnapshot.attach
+    return drain(
+        change_stream, checkpoint, lambda w: w.foreachBatch(write_batch), no_data_batch=False
+    )

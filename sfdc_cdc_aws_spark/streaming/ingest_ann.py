@@ -185,8 +185,7 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(landing)
         # drop accounting (quality-gate discipline, uniform across the
         # screen quartet): arriving vectors counted per micro-batch;
-        # run_available_now unions listener+progress metrics into
-        # LAST_DRAIN_OBSERVED["ann_ingest"].
+        # run_available_now sums them into DRAINS["ann_ingest"].
         .observe("arrivals", F.count(F.lit(1)).alias("n_in"))
         .select(
             F.col("vec_id").alias("new_vec"),

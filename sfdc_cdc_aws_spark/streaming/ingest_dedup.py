@@ -50,11 +50,12 @@ then the checkpoint commit.
   torn window a real crash exposes. ``keep_state=True`` leaves the
   state root (and index partitions) for the resume to find; otherwise
   both are cleaned up on success and failure alike.
-- **Profile.** ``job.LAST_DRAIN_PROFILE[<registry key>]`` holds the
-  batch count, the skeleton's sequential ``phases`` (reset,
-  precompute, stream, result, cleanup; they sum to at most the drain's
-  wall) and the per-batch ``fold`` phases summed over batches (refresh,
-  verdict, and one ``write_<label>_s`` per overlapped write).
+- **Record.** ``job.DRAINS[<registry key>]`` is the drain's record
+  (``job.record_drain``): its batch count and progress totals, the
+  skeleton's sequential ``phases`` (reset, precompute, stream, result,
+  cleanup; they sum to at most the drain's wall) and the per-batch
+  ``fold`` phases summed over batches (refresh, verdict, and one
+  ``write_<label>_s`` per overlapped write).
 """
 
 from __future__ import annotations
@@ -90,7 +91,7 @@ from sfdc_cdc_aws_spark.registry import query
 from sfdc_cdc_aws_spark.session import scoped_conf, truncate_lineage
 from sfdc_cdc_aws_spark.sources import load_table, read_parquet
 from sfdc_cdc_aws_spark.sources.tables import table_path
-from sfdc_cdc_aws_spark.streaming.job import LAST_DRAIN_PROFILE, run_available_now
+from sfdc_cdc_aws_spark.streaming.job import drain, record_drain, run_available_now
 
 # deterministic corpus/arrival split: every 4th doc "arrives", the
 # rest are the standing corpus. Scale-independent and replayable.
@@ -232,8 +233,8 @@ def stream_minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # vs n_screenable (≥3 tokens — shorter docs produce no
         # shingles and BYPASS the dup screen entirely; a screen that
         # silently waves short docs through must say so). Evaluated
-        # inline per micro-batch; run_available_now unions the
-        # listener+progress metrics into LAST_DRAIN_OBSERVED.
+        # inline per micro-batch; run_available_now sums them into
+        # DRAINS["minhash_ingest"].
         .observe(
             "arrivals",
             F.count(F.lit(1)).alias("n_in"),
@@ -663,14 +664,12 @@ def run_verdict_drain(
     per-batch verdict dirs under ``state``."""
     verdict_dir, ckpt = f"{state}/verdicts", f"{state}/ckpt"
     phases: dict[str, float] = {}
-    fold_phases: dict[str, float] = {}
-    LAST_DRAIN_PROFILE[name] = profile = {
-        "batches": 0,
-        "phases": phases,
-        "fold": fold_phases,
-    }
+    # each batch's fold phases, one assignment per batch from the
+    # stream thread; summed into the drain record after it terminates
+    fold_by_batch: dict[int, dict[str, float]] = {}
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
+        fold_phases: dict[str, float] = {}
         with _timed(fold_phases, "refresh_s"):
             for idx in indexes:
                 idx.refresh(batch_df.sparkSession)
@@ -686,15 +685,16 @@ def run_verdict_drain(
             **commits(pre, v.where("admitted").select("doc_id"), batch_id),
         }
 
-        def write(label: str) -> None:
-            with _timed(fold_phases, f"write_{label}_s"):
-                writes[label]()
+        def write(label: str) -> tuple[str, float]:
+            t0 = time.monotonic()
+            writes[label]()
+            return f"write_{label}_s", time.monotonic() - t0
 
         # independent jobs over one checkpointed relation, each to its
         # own target: overlap them (guide §2.6)
         with ThreadPoolExecutor(len(writes)) as pool:
-            list(pool.map(write, writes))
-        profile["batches"] += 1
+            fold_phases.update(pool.map(write, writes))
+        fold_by_batch[batch_id] = fold_phases
         if kill_after_batch is not None and batch_id >= kill_after_batch:
             # die with the batch's outputs written but its checkpoint
             # NOT committed — no unwinding, the JVM goes with us
@@ -722,13 +722,8 @@ def run_verdict_drain(
             with _timed(phases, "stream_s"), scoped_conf(
                 spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
             ):
-                (
-                    arrivals.writeStream.foreachBatch(fold)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                    .awaitTermination()
-                )
+                q = drain(arrivals, ckpt, lambda w: w.foreachBatch(fold))
+                q.awaitTermination()
             with _timed(phases, "result_s"):
                 v = read_parquet(spark, *batch_dirs(verdict_dir))
                 batch = F.expr(f"doc_id div {ARRIVAL_MOD}") % N_ADMIT_BATCHES
@@ -746,6 +741,11 @@ def run_verdict_drain(
                     shutil.rmtree(state, ignore_errors=True)
                     for idx in indexes:
                         idx.reset(spark)
+    fold_totals: dict[str, float] = {}
+    for per_batch in fold_by_batch.values():
+        for key, secs in per_batch.items():
+            fold_totals[key] = fold_totals.get(key, 0.0) + secs
+    record_drain(spark, q, name, phases=phases, fold=fold_totals)
     return result
 
 

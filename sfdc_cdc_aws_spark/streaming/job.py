@@ -21,17 +21,26 @@ query —
 Batch and streaming share the same parse/transform functions, so the
 streaming answers are oracle-checked against the *batch* oracles —
 the strongest parity statement the harness can make.
+
+Every streaming query in the package starts in :func:`drain`: the
+availableNow trigger, the checkpoint, the byte-derived state width and
+the no-data-batch switch, scoped around ``start()``. A harvested drain
+(``run_available_now``, ``ingest_dedup.run_verdict_drain``) leaves one
+record of one shape, ``DRAINS[name]`` (:func:`record_drain`).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from sfdc_cdc_aws_spark.materialize import materialize
 from sfdc_cdc_aws_spark.registry import QUERIES, query
@@ -237,8 +246,11 @@ def drain_state_width(spark: SparkSession, landing: str) -> int:
 
 def stream_landing(stream: DataFrame) -> str | None:
     """The directory a file-source stream reads: the ``path`` option
-    of the first ``StreamingRelation`` leaf of its logical plan, or
-    None when no leaf is a file source with a path."""
+    of the first ``StreamingRelation`` leaf of its logical plan, when
+    that path is a directory. None for a stream with no file-source
+    leaf (a Bayeux source, or a bare ``readStream`` whose leaf is not
+    resolved yet) or whose path is a glob (the verdict drains'
+    ``landing/b*``): no width can be sized from any of these."""
     leaves = stream._jdf.queryExecution().logical().collectLeaves()
     for i in range(leaves.size()):
         leaf = leaves.apply(i)
@@ -246,63 +258,119 @@ def stream_landing(stream: DataFrame) -> str | None:
             continue
         path = leaf.dataSource().options().get("path")
         if path.isDefined():
-            return path.get()
+            return path.get() if os.path.isdir(path.get()) else None
     return None
 
 
-#: observability: stateOperators summary of the most recent drain per
-#: name_prefix (rows/bytes/batches) — what a production job exports as
-#: metrics, captured here from StreamingQuery.recentProgress so the
-#: scale harness (tools/stream_scale_bench.py) can assert state grows
-#: with keys-in-watermark, not history.
-LAST_DRAIN_STATE: dict[str, dict] = {}
+def drain(
+    stream: DataFrame,
+    checkpoint: str | None,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    no_data_batch: bool = True,
+) -> StreamingQuery:
+    """The package's one ``writeStream...start()``: start an
+    availableNow drain of ``stream`` into the writer ``sink``
+    configures (``lambda w: w.foreachBatch(fold)``, a memory sink, a
+    format plus a path) and return the started query, un-awaited.
+    ``checkpoint`` is its ``checkpointLocation`` (None: Spark's
+    temporary one).
+
+    - **State width.** Every stateful operator (dropDuplicates,
+      windowed agg, stream-stream join) keeps one state store per
+      shuffle partition per micro-batch, so the width is
+      ``drain_state_width`` over the landing the stream reads
+      (``stream_landing``), not the session's scan parallelism. It is
+      set only while ``checkpoint`` has no ``offsets`` dir: from then
+      on Spark restores it from the offset log on every restart
+      (state stores cannot be re-partitioned), so a resume does not
+      walk the landing. A stream without a directory landing keeps
+      the session width.
+    - **No-data batch.** After the last data batch a stateful
+      availableNow drain runs one extra zero-row micro-batch so
+      watermark-gated output (outer-join unmatched rows, append-mode
+      window closes) can emit — a full trigger (planning + state-store
+      commit across every partition; measured 0.7-1.8 s per drain at
+      sf0.1). ``no_data_batch=False`` turns it off
+      (``spark.sql.streaming.noDataMicroBatches``) for drains whose
+      rows all emit ON ARRIVAL (the dropDuplicates family, inner
+      stream-stream join), whose ``complete``-mode sink already
+      re-emits the full state each data batch, or whose sink merges
+      only the rows a batch delivers. Anything watermark-gated
+      (``cdc_stream_outer_join``) keeps the default True.
+
+    The confs are scoped around ``start()`` only: the query clones the
+    session when it is constructed, so both are pinned by the time
+    ``start()`` returns and the caller's session is restored at once,
+    on the failure path too."""
+    spark = stream.sparkSession
+    confs = {} if no_data_batch else {_NDB: "false"}
+    if checkpoint is None or not os.path.isdir(os.path.join(checkpoint, "offsets")):
+        landing = stream_landing(stream)
+        if landing is not None:
+            confs["spark.sql.shuffle.partitions"] = str(drain_state_width(spark, landing))
+    writer = sink(stream.writeStream.trigger(availableNow=True))
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    with scoped_conf(spark, confs):
+        return writer.start()
 
 
-def _capture_state_metrics(q, name_prefix: str) -> None:
-    import json as _json
-
-    per_batch = []
-    try:
-        for p in q.recentProgress:
-            d = p if isinstance(p, dict) else _json.loads(p.json)
-            ops = d.get("stateOperators") or []
-            if ops:
-                per_batch.append(
-                    (
-                        sum(o.get("numRowsTotal", 0) for o in ops),
-                        sum(o.get("memoryUsedBytes", 0) for o in ops),
-                        max(o.get("numShufflePartitions", 0) for o in ops),
-                    )
-                )
-    except Exception:  # metrics are best-effort observability
-        return
-    if per_batch:
-        LAST_DRAIN_STATE[name_prefix] = {
-            "batches": len(per_batch),
-            "max_state_rows": max(r for r, _, _ in per_batch),
-            "max_state_bytes": max(b for _, b, _ in per_batch),
-            "shuffle_partitions": max(w for _, _, w in per_batch),
-        }
+#: observability: one record per drain name, assigned whole by
+#: :func:`record_drain` when a harvested drain terminates
+#: (``run_available_now``, ``ingest_dedup.run_verdict_drain``), so a
+#: reader never sees an earlier drain's numbers under the name.
+DRAINS: dict[str, dict] = {}
 
 
-#: observability: totals of every ``observe()`` riding the most
-#: recent drain per name_prefix, summed across micro-batches and
-#: flattened to "<observation>.<metric>" keys (plus n_batches).
-#: Harvested from BOTH a StreamingQueryListener and recentProgress,
-#: unioned by batchId: recentProgress retains only the last ~100
-#: entries (a longer drain silently undercounts), while the listener
-#: sees every batch but is dispatched asynchronously (tail batches
-#: may be undelivered when awaitTermination returns). The union is
-#: complete under both failure modes — the quality-gate discipline
-#: (quality_gate.py), applied uniformly to every drained screen.
-LAST_DRAIN_OBSERVED: dict[str, dict] = {}
+def record_drain(spark: SparkSession, q: StreamingQuery, name: str, **extra) -> None:
+    """Harvest a terminated drain's ``recentProgress``, keyed by
+    batchId, into ``DRAINS[name]``:
 
-#: observability: phase timings of the most recent verdict drain per
-#: registry key (ingest_dedup.run_verdict_drain): ``batches``, the
-#: drain's sequential ``phases`` (they sum to at most its wall) and the
-#: per-batch ``fold`` phases summed over batches (the overlapped
-#: writes each keep their own key, so those may sum past stream_s).
-LAST_DRAIN_PROFILE: dict[str, dict] = {}
+    - ``batches``: the micro-batches the query ran;
+    - ``max_state_rows``, ``max_state_bytes``: the largest per-batch
+      sum over its state operators; ``shuffle_partitions``: their
+      widest store count (all 0 for a stateless drain);
+    - ``<observation>.<metric>``: every numeric ``observe()`` metric,
+      summed over batches (the quality-gate discipline);
+    - then ``extra`` (the verdict drains' ``phases`` and ``fold``).
+
+    ``recentProgress`` is complete once the query has terminated, but
+    its buffer is bounded by ``spark.sql.streaming.numRecentProgressUpdates``
+    (read live from the caller's session): Spark evicts once the buffer
+    reaches that limit, so it keeps at most limit - 1 entries. A full
+    buffer may have evicted batches, so this raises rather than
+    undercount."""
+    progress = [json.loads(p.json) for p in q.recentProgress]
+    retention = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates"))
+    if len(progress) >= retention - 1:
+        raise RuntimeError(
+            f"drain {name!r} filled its progress buffer "
+            f"(numRecentProgressUpdates={retention}): "
+            "earlier batches may be evicted, so its record would undercount"
+        )
+    by_batch = {d["batchId"]: d for d in progress}
+    state = [d.get("stateOperators") or [] for d in by_batch.values()]
+    totals: dict[str, float] = {}
+    for d in by_batch.values():
+        for oname, fields in (d.get("observedMetrics") or {}).items():
+            for fname, v in fields.items():
+                if isinstance(v, (int, float)):
+                    key = f"{oname}.{fname}"
+                    totals[key] = totals.get(key, 0) + v
+    DRAINS[name] = {
+        "batches": len(by_batch),
+        "max_state_rows": max(
+            (sum(o.get("numRowsTotal", 0) for o in ops) for ops in state), default=0
+        ),
+        "max_state_bytes": max(
+            (sum(o.get("memoryUsedBytes", 0) for o in ops) for ops in state), default=0
+        ),
+        "shuffle_partitions": max(
+            (o.get("numShufflePartitions", 0) for ops in state for o in ops), default=0
+        ),
+        **totals,
+        **extra,
+    }
 
 
 def run_available_now(
@@ -311,129 +379,39 @@ def run_available_now(
     output_mode: str = "append",
     no_data_batch: bool = True,
 ) -> DataFrame:
-    """Drain a streaming DataFrame to a memory sink with the
-    availableNow trigger (deterministic: processes everything, then
-    stops) and return the materialized result as a batch DataFrame.
-    ``output_mode="complete"`` for windowed aggregations whose final
-    windows would otherwise sit unemitted behind the watermark.
-
-    The stateful-shuffle width is ``drain_state_width`` over the
-    landing the stream reads (``stream_landing``): every stateful
-    operator (dropDuplicates, windowed agg, stream-stream join) keeps
-    one state store per shuffle partition per micro-batch, so the
-    width tracks state volume, not the session's scan parallelism.
-    The fresh checkpoint per call makes the width free to vary; a
-    stream without a file-source landing keeps the session setting.
-
-    ``no_data_batch`` scopes ``spark.sql.streaming.noDataMicroBatches``
-    for the drain. After the last data batch a stateful availableNow
-    drain runs one extra zero-row micro-batch so watermark-gated
-    output (outer-join unmatched rows, append-mode window closes) can
-    emit — a full trigger (planning + state-store commit across every
-    partition; measured 0.7-1.8 s per drain at sf0.1) that produces
-    nothing for drains whose rows all emit ON ARRIVAL (the
-    dropDuplicates family, inner stream-stream join) or whose
-    ``complete``-mode sink already re-emits the full state each data
-    batch. Callers whose output provably cannot depend on the
-    trailing batch pass False; anything watermark-gated
-    (``cdc_stream_outer_join``) keeps the default True."""
-    import json as _json
-
-    from pyspark.sql.streaming import StreamingQueryListener
-
+    """Drain a streaming DataFrame to a memory sink (:func:`drain`:
+    availableNow, processes everything, then stops), record it in
+    ``DRAINS[name_prefix]`` and return the materialized result as a
+    batch DataFrame. ``output_mode="complete"`` for windowed
+    aggregations whose final windows would otherwise sit unemitted
+    behind the watermark. The fresh checkpoint per call makes the
+    state width free to vary; ``no_data_batch`` is :func:`drain`'s."""
     spark = stream_df.sparkSession
     qname = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
     ckpt = f"/tmp/sfdc_cdc_ckpt/{qname}"
-    confs = {}
-    landing = stream_landing(stream_df)
-    if landing is not None:
-        confs["spark.sql.shuffle.partitions"] = str(drain_state_width(spark, landing))
-    if not no_data_batch:
-        confs[_NDB] = "false"
-
-    obs_by_batch: dict[int, dict] = {}
-
-    def _harvest(d: dict) -> None:
-        om = d.get("observedMetrics") or {}
-        if om and d.get("name") == qname:
-            obs_by_batch[d["batchId"]] = om
-
-    class _ObsListener(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            _harvest(_json.loads(event.progress.json))
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    with scoped_conf(spark, confs):
-        listener = _ObsListener()
-        spark.streams.addListener(listener)
+    try:
+        q = drain(
+            stream_df,
+            ckpt,
+            lambda w: w.format("memory").queryName(qname).outputMode(output_mode),
+            no_data_batch,
+        )
+        q.awaitTermination()
+        record_drain(spark, q, name_prefix)
+        # detach the result from the memory sink so repeated drains
+        # don't accumulate sink state/views in the session:
+        # materialize once (eager localCheckpoint) before the finally
+        # drops the sink's temp view and checkpoint dir
+        result = spark.table(qname).localCheckpoint()
+    finally:
+        # cleanup must run on the failure path too: a failed drain
+        # would otherwise leak the memory-sink temp view and the
+        # checkpoint directory
         try:
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            _capture_state_metrics(q, name_prefix)
-            for p in q.recentProgress:
-                _harvest(p if isinstance(p, dict) else _json.loads(p.json))
-            # detach the listener BEFORE iterating: its async delivery
-            # thread can still insert a late onQueryProgress event after
-            # awaitTermination returns, which would mutate obs_by_batch
-            # mid-iteration (the finally's removeListener stays as the
-            # failure-path guard; removing twice is a harmless no-op on
-            # the JVM listener bus)
-            spark.streams.removeListener(listener)
-            snapshot = list(obs_by_batch.values())
-            totals: dict[str, float] = {}
-            for om in snapshot:
-                for oname, fields in om.items():
-                    # recentProgress dicts carry Row values; the
-                    # listener's JSON path carries plain dicts
-                    if hasattr(fields, "asDict"):
-                        fields = fields.asDict()
-                    for fname, v in fields.items():
-                        if isinstance(v, (int, float)):
-                            totals[f"{oname}.{fname}"] = (
-                                totals.get(f"{oname}.{fname}", 0) + v
-                            )
-            # ALWAYS assign, even on a zero-progress drain: leaving the
-            # previous drain's totals in place would let readers (e.g.
-            # the quality gate's n_in/n_pass) report a stale drain's
-            # numbers as the current run's
-            LAST_DRAIN_OBSERVED[name_prefix] = {
-                "n_batches": len(snapshot),
-                **totals,
-            }
-            # detach the result from the memory sink so repeated drains
-            # don't accumulate sink state/views in the session:
-            # materialize once (eager localCheckpoint) before the finally
-            # drops the sink's temp view and checkpoint dir
-            result = spark.table(qname).localCheckpoint()
-        finally:
-            # cleanup must run on the failure path too: a failed drain
-            # would otherwise leak the memory-sink temp view and the
-            # checkpoint directory (round-9 advice, generalized here from
-            # quality_gate so every drained screen gets the guarantee)
-            try:
-                spark.streams.removeListener(listener)
-            except Exception:
-                pass
-            try:
-                spark.catalog.dropTempView(qname)
-            except Exception:
-                pass
-            shutil.rmtree(ckpt, ignore_errors=True)
+            spark.catalog.dropTempView(qname)
+        except Exception:
+            pass
+        shutil.rmtree(ckpt, ignore_errors=True)
     return result
 
 
@@ -449,15 +427,13 @@ def sink_to_console(
     renders every micro-batch on the driver. Debug-only by
     construction (rows are collected to the driver to print), which
     is why it's a thin wrapper and not part of any production path."""
-    w = (
-        stream_df.writeStream.format("console")
+    return drain(
+        stream_df,
+        checkpoint,
+        lambda w: w.format("console")
         .option("numRows", str(num_rows))
-        .option("truncate", str(truncate).lower())
-        .trigger(availableNow=True)
+        .option("truncate", str(truncate).lower()),
     )
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
 
 
 def sink_to_lake(ch: DataFrame, snapshot: DataFrame, out_dir: str, checkpoint: str):
@@ -474,12 +450,7 @@ def sink_to_lake(ch: DataFrame, snapshot: DataFrame, out_dir: str, checkpoint: s
             .parquet(out_dir)
         )
 
-    return (
-        ch.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(ch, checkpoint, lambda w: w.foreachBatch(write_batch))
 
 
 # ---------------------------------------------------------------------------

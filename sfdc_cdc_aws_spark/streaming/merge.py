@@ -75,27 +75,17 @@ leaves the manifest on the prior epoch and the batch replays —
 re-merging is idempotent (``_latest_per_key`` is a max, and replayed
 rows lose to themselves).
 
-Drain discipline (``attach``, and ``drift.attach_with_drift`` through
-the same start site): a drain pays only for batches that carry data.
-
-- No trailing zero-row micro-batch
-  (``spark.sql.streaming.noDataMicroBatches.enabled=false``). A
-  stateful availableNow drain otherwise runs one extra batch after the
-  last data batch so watermark-gated output can emit. ``upsert`` merges
-  only the rows a batch delivers, and the stream's ``dropDuplicates``
-  emits each row on first sight, never on state eviction, so that
-  batch can carry no output. It would still pay a whole
-  write-audit-publish epoch that rewrites the full state unchanged.
-  Eviction of expired dedup state just moves to the next data batch,
-  under the same watermark.
-- A byte-derived stateful width (``drain_state_width`` over the
-  landing). It is set only when the checkpoint is new, i.e. has no
-  ``offsets`` dir yet; from then on Spark restores the width from the
-  offset log on every restart (state stores cannot be re-partitioned),
-  so a resume does not walk the landing. The landing is the ``path``
-  option of the stream's own file-source leaf
-  (``StreamingRelation``); a stream without one keeps the session
-  width.
+Drain discipline: ``attach`` and ``drift.attach_with_drift`` start
+through ``job.drain``, the package's one start site, which also pins
+the byte-derived state width on a new checkpoint. A drain pays only
+for batches that carry data: it runs with ``no_data_batch=False``, so
+no trailing zero-row micro-batch follows the last data batch.
+``upsert`` merges only the rows a batch delivers, and the stream's
+``dropDuplicates`` emits each row on first sight, never on state
+eviction, so that batch can carry no output. It would still pay a
+whole write-audit-publish epoch that rewrites the full state
+unchanged. Eviction of expired dedup state just moves to the next
+data batch, under the same watermark.
 
 With Delta/Iceberg on the classpath this class collapses to
 ``MERGE INTO ... WHEN MATCHED UPDATE`` and file-level pruning
@@ -115,9 +105,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sfdc_cdc_aws_spark.materialize import file_lock, fsync_path, fsync_tree
-from sfdc_cdc_aws_spark.session import scoped_conf
 from sfdc_cdc_aws_spark.sources.tables import read_parquet
-from sfdc_cdc_aws_spark.streaming.job import _NDB, drain_state_width, stream_landing
+from sfdc_cdc_aws_spark.streaming.job import drain
 
 _KEY = ("entity_name", "uid")
 _ORDER = ("commit_ts_ms", "replay_id")
@@ -422,38 +411,13 @@ class IncrementalSnapshot:
 
     def attach(self, change_stream: DataFrame, checkpoint: str):
         """Maintain the snapshot from a streaming change feed: an
-        availableNow drain whose every micro-batch is one ``upsert``.
-
-        Drain discipline (module docstring): the trailing zero-row
-        micro-batch is skipped, because ``upsert`` only merges rows a
-        batch delivers and ``dropDuplicates`` emits on first sight, so
-        that batch could only republish an identical state. The
-        stateful width is ``drain_state_width`` over the landing named
-        by the stream's file-source leaf, set when ``checkpoint`` has
-        no offsets yet and restored from the offset log on restart."""
-        return self._start_drain(
-            change_stream, checkpoint, lambda df, epoch: self.upsert(df, epoch)
+        availableNow drain whose every micro-batch is one ``upsert``,
+        returned started and un-awaited. Drain discipline: module
+        docstring. ``upsert`` is looked up per batch, so a wrapper set
+        on the instance sees every batch."""
+        return drain(
+            change_stream,
+            checkpoint,
+            lambda w: w.foreachBatch(lambda df, epoch: self.upsert(df, epoch)),
+            no_data_batch=False,
         )
-
-    def _start_drain(self, change_stream: DataFrame, checkpoint: str, write_batch):
-        """The one ``writeStream...start()`` site for snapshot drains
-        (``attach`` and ``drift.attach_with_drift``). The confs are
-        scoped around ``start()`` only: the query clones the session
-        when it is constructed, so both are pinned by the time
-        ``start()`` returns and the caller's session is restored at
-        once, on the failure path too."""
-        spark = change_stream.sparkSession
-        confs = {_NDB: "false"}
-        if not os.path.isdir(os.path.join(checkpoint, "offsets")):
-            landing = stream_landing(change_stream)
-            if landing is not None:
-                confs["spark.sql.shuffle.partitions"] = str(
-                    drain_state_width(spark, landing)
-                )
-        with scoped_conf(spark, confs):
-            return (
-                change_stream.writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )

@@ -72,8 +72,8 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate the admitted slice per language. The gate's in/pass
     counts ride as ``observe()`` metrics evaluated inside each
     micro-batch; after the drain they are summed across batch
-    progresses into ``job.LAST_DRAIN_OBSERVED["quality_gate"]``
-    (``quality_gate.n_in``, ``quality_gate.n_pass``, ``n_batches``) —
+    progresses into the drain record ``job.DRAINS["quality_gate"]``
+    (``quality_gate.n_in``, ``quality_gate.n_pass``, ``batches``) —
     in production a StreamingQueryListener ships the same numbers to
     the metrics bus per batch.
 
@@ -102,10 +102,9 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.size(tokens_col())).cast("bigint").alias("n_tokens"),
         )
     )
-    # drain via run_available_now, whose listener+recentProgress
-    # union (keyed by batchId — complete under both the >100-batch
-    # progress-buffer eviction and the async-listener tail) harvests
-    # every observe() into LAST_DRAIN_OBSERVED
+    # drain via run_available_now, whose record harvests every
+    # observe() from the terminated query's progress, keyed by batchId,
+    # and raises rather than undercount a full progress buffer
     from sfdc_cdc_aws_spark.streaming.job import run_available_now
 
     # complete mode: the last data batch already emitted the full state

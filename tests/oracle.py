@@ -9,6 +9,9 @@ hash mismatch is caught here, not in the driver's round report.
 from __future__ import annotations
 
 import math
+import os
+import tempfile
+import uuid
 
 import duckdb
 import pandas as pd
@@ -16,8 +19,23 @@ import pandas as pd
 from sfdc_cdc_aws_spark.sources.tables import TABLES, table_path
 
 
+#: DuckDB's own default is 80% of RAM inside the calling process. A
+#: third of physical RAM (5 GB on a 15 GB host, what the sf0.1
+#: stream_screen_quartet oracle needed) bounds the memory DuckDB's
+#: buffer manager tracks; past it, operators spill to the temp dir. It
+#: does not bound allocations outside that manager: exact_substring_dedup's
+#: oracle at sf0.1 still peaks at 7.4 GB RSS with one thread under a
+#: 2.7 GiB limit (DuckDB 1.0).
+_DUCK_MEMORY_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 3 >> 20
+
+
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    # a spill dir per connection: DuckDB creates it on first spill and
+    # removes it on close, so connections must not share one
+    spill = os.path.join(tempfile.gettempdir(), f"sfdc_duck_spill_{uuid.uuid4().hex[:12]}")
+    con = duckdb.connect(
+        config={"memory_limit": f"{_DUCK_MEMORY_MB}MB", "temp_directory": spill}
+    )
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"

@@ -20,6 +20,7 @@ import shutil
 
 import pytest
 
+import sfdc_cdc_aws_spark.streaming.job as job_mod
 import sfdc_cdc_aws_spark.streaming.merge as merge_mod
 from sfdc_cdc_aws_spark.session import scoped_conf
 from sfdc_cdc_aws_spark.streaming.drift import attach_with_drift, parse_wire_fields
@@ -121,7 +122,7 @@ def test_width_pinned_at_creation_and_kept_on_resume(
     def no_walk(*_a, **_k):
         raise AssertionError("resume must not size the width again")
 
-    monkeypatch.setattr(merge_mod, "drain_state_width", no_walk)
+    monkeypatch.setattr(job_mod, "drain_state_width", no_walk)
     q = snap.attach(_stream(spark, landing), ckpt)
     q.awaitTermination()
     assert _input_rows(q) and all(n > 0 for n in _input_rows(q))

@@ -39,7 +39,7 @@ def test_stream_ann_ingest_stateless_and_deterministic(spark):
     from sfdc_cdc_aws_spark.streaming.ingest_ann import stream_ann_ingest
 
     r1 = sorted(map(tuple, stream_ann_ingest(spark, SF).collect()))
-    state = job.LAST_DRAIN_STATE.get("ann_ingest")
+    state = job.DRAINS.get("ann_ingest")
     assert state is None or state.get("max_state_rows", 0) == 0, state
     r2 = sorted(map(tuple, stream_ann_ingest(spark, SF).collect()))
     assert r1 == r2
@@ -86,8 +86,8 @@ def test_minhash_index_merge_equals_from_scratch(spark):
 
 def test_screen_drop_accounting_uniform(spark):
     """Round-10 verdict item 8: the screen quartet reports drops
-    uniformly. After a drain, LAST_DRAIN_OBSERVED carries per-screen
-    observed totals (listener+progress union): the minhash screen
+    uniformly. After a drain, its DRAINS record carries per-screen
+    observed totals: the minhash screen
     accounts every arrival and its short-doc bypass; the ANN screen
     accounts arrivals and flagged pairs exactly."""
     from pyspark.sql import functions as F
@@ -101,10 +101,10 @@ def test_screen_drop_accounting_uniform(spark):
         ARRIVAL_MOD,
         stream_minhash_ingest,
     )
-    from sfdc_cdc_aws_spark.streaming.job import LAST_DRAIN_OBSERVED
+    from sfdc_cdc_aws_spark.streaming.job import DRAINS
 
     mh = stream_minhash_ingest(spark, SF)
-    obs = LAST_DRAIN_OBSERVED["minhash_ingest"]
+    obs = DRAINS["minhash_ingest"]
     n_arrivals = (
         load_table(spark, SF, "documents")
         .where(F.col("doc_id") % ARRIVAL_MOD == 0)
@@ -115,10 +115,10 @@ def test_screen_drop_accounting_uniform(spark):
     # every (pair, shared-band) join row was observed pre-aggregation
     total_shared = mh.agg(F.sum("n_shared_bands")).collect()[0][0]
     assert obs["band_hits.n_hits"] == total_shared
-    assert obs["n_batches"] >= 2  # maxFilesPerTrigger chopped the drain
+    assert obs["batches"] >= 2  # maxFilesPerTrigger chopped the drain
 
     ann = stream_ann_ingest(spark, SF)
-    obs2 = LAST_DRAIN_OBSERVED["ann_ingest"]
+    obs2 = DRAINS["ann_ingest"]
     n_vecs = (
         load_table(spark, SF, "embeddings")
         .where(F.col("vec_id") % VEC_ARRIVAL_MOD == 0)
@@ -239,7 +239,7 @@ def test_drain_restores_partition_overwrite_mode(spark):
 
 
 def test_drain_profile_covers_every_batch_within_wall(spark):
-    """The verdict-drain skeleton records one LAST_DRAIN_PROFILE entry
+    """The verdict-drain skeleton records one DRAINS entry
     per registry key: every micro-batch is counted, and its
     sequential phases (reset, precompute, stream, result, cleanup) sum
     to no more than the drain's wall."""
@@ -249,13 +249,13 @@ def test_drain_profile_covers_every_batch_within_wall(spark):
         N_ADMIT_BATCHES,
         stream_dedup_admit_bucketed,
     )
-    from sfdc_cdc_aws_spark.streaming.job import LAST_DRAIN_PROFILE
+    from sfdc_cdc_aws_spark.streaming.job import DRAINS
 
-    LAST_DRAIN_PROFILE.pop("stream_dedup_admit_bucketed", None)
+    DRAINS.pop("stream_dedup_admit_bucketed", None)
     t0 = time.monotonic()
     stream_dedup_admit_bucketed(spark, SF)
     wall = time.monotonic() - t0
-    prof = LAST_DRAIN_PROFILE["stream_dedup_admit_bucketed"]
+    prof = DRAINS["stream_dedup_admit_bucketed"]
     assert prof["batches"] == N_ADMIT_BATCHES
     assert set(prof["phases"]) >= {"precompute_s", "stream_s", "result_s"}
     assert 0 < sum(prof["phases"].values()) <= wall

@@ -18,8 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sfdc_cdc_aws_spark.streaming.job import (
-    LAST_DRAIN_OBSERVED,
-    LAST_DRAIN_STATE,
+    DRAINS,
     changes_stream,
     drain_state_width,
     ensure_landing,
@@ -39,9 +38,9 @@ def _drain(spark, landing, prefix, **kw):
 def test_suppressed_drain_matches_and_skips_trailing_batch(spark, sf_dir):
     landing = ensure_landing(spark, sf_dir)
     base = _drain(spark, landing, "ndb_on", no_data_batch=True)
-    n_on = LAST_DRAIN_OBSERVED["ndb_on"]["n_batches"]
+    n_on = DRAINS["ndb_on"]["batches"]
     fast = _drain(spark, landing, "ndb_off", no_data_batch=False)
-    n_off = LAST_DRAIN_OBSERVED["ndb_off"]["n_batches"]
+    n_off = DRAINS["ndb_off"]["batches"]
     # one fewer micro-batch: the trailing zero-row batch is gone
     assert n_off == n_on - 1, (n_on, n_off)
     # identical drained rows (dedup emits on arrival, nothing gated)
@@ -80,5 +79,5 @@ def test_stateful_drain_runs_at_landing_derived_width(spark, sf_dir):
     session_width = spark.conf.get("spark.sql.shuffle.partitions")
     assert str(width) != session_width  # else the check proves nothing
     _drain(spark, landing, "ndb_width", no_data_batch=False)
-    assert LAST_DRAIN_STATE["ndb_width"]["shuffle_partitions"] == width
+    assert DRAINS["ndb_width"]["shuffle_partitions"] == width
     assert spark.conf.get("spark.sql.shuffle.partitions") == session_width

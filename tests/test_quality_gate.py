@@ -7,7 +7,7 @@ from __future__ import annotations
 import duckdb
 
 from sfdc_cdc_aws_spark.streaming import quality_gate as qg
-from sfdc_cdc_aws_spark.streaming.job import LAST_DRAIN_OBSERVED
+from sfdc_cdc_aws_spark.streaming.job import DRAINS
 
 SF = "/root/testdata/sf0.001"
 
@@ -23,7 +23,7 @@ def test_gate_metrics_account_for_every_row(spark):
     )
     n_total = con.sql("SELECT count(*) FROM documents").fetchone()[0]
 
-    m = LAST_DRAIN_OBSERVED["quality_gate"]
+    m = DRAINS["quality_gate"]
     n_in, n_pass = m["quality_gate.n_in"], m["quality_gate.n_pass"]
     assert n_in == n_total, m
     assert n_pass == n_pass_rows, m
@@ -31,7 +31,7 @@ def test_gate_metrics_account_for_every_row(spark):
     # the landing is 4 files at maxFilesPerTrigger=2 — the drain must
     # actually micro-batch (a single-batch drain would not exercise
     # the cross-batch metric summation)
-    assert m["n_batches"] >= 2, m
+    assert m["batches"] >= 2, m
 
 
 def test_shared_truncate_lineage_reliable_checkpoint(spark, tmp_path, monkeypatch):

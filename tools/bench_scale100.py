@@ -1067,9 +1067,9 @@ def main() -> int:
             # round-13 verdict item 7: the per-phase breakdown of the
             # x100 drain just timed (probe work vs per-batch
             # insertInto/refresh fixed cost), recorded in the artifact
-            from sfdc_cdc_aws_spark.streaming.job import LAST_DRAIN_PROFILE
+            from sfdc_cdc_aws_spark.streaming.job import DRAINS
 
-            row["x100_profile"] = LAST_DRAIN_PROFILE[key]
+            row["x100_profile"] = DRAINS[key]
         if key == "editdist_verify_neardup":
             # the budget-binding proof: pre-cut candidate counts per
             # scale from the companion relation (round-10 advice key)

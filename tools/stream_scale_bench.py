@@ -8,7 +8,7 @@ with keys-inside-the-watermark or with history?
 
 Per key × {sf0.1, sf1x}: drain wall seconds plus the state-operator
 metrics Spark publishes in query progress (numRowsTotal /
-memoryUsedBytes, captured by streaming.job.LAST_DRAIN_STATE):
+memoryUsedBytes, from the drain record streaming.job.DRAINS):
 
 - replay-horizon keys (`cdc_stream_dedup_tumbling`,
   `stream_minhash_ingest`): state tracks the replayed feed BY DESIGN
@@ -225,13 +225,13 @@ def _tail_follow_bounded_state(spark, sf_dir: str) -> dict:
         .withWatermark("commit_ts", jm.PROD_DEDUP_HORIZON)
         .dropDuplicatesWithinWatermark(["replay_id", "record_id"])
     )
-    jm.LAST_DRAIN_STATE.clear()
+    jm.DRAINS.clear()
     t0 = time.perf_counter()
     got = jm.run_available_now(deduped, "tail_follow_dedup")
     wall = round(time.perf_counter() - t0, 3)
     n = got.count()
     want = jm.parse_wire(wire).dropDuplicates(["replay_id", "record_id"]).count()
-    state = jm.LAST_DRAIN_STATE.get("tail_follow_dedup", {})
+    state = jm.DRAINS.get("tail_follow_dedup", {})
     shutil.rmtree(ordered_dir, ignore_errors=True)
     return {
         "wall_s": wall,
@@ -363,12 +363,12 @@ def main() -> int:
     for name in STREAM_KEYS:
         row: dict = {}
         for label, sf in (("sf01", SF01), ("sf1x", SF1X)):
-            jobmod.LAST_DRAIN_STATE.clear()
+            jobmod.DRAINS.clear()
             t0 = time.perf_counter()
             n = specs[name].fn(spark, sf).count()
             wall = round(time.perf_counter() - t0, 3)
             state = {}
-            for prefix, m in jobmod.LAST_DRAIN_STATE.items():
+            for prefix, m in jobmod.DRAINS.items():
                 # one drain per key invocation → take the one entry
                 state = m
             row[label] = {
