@@ -41,6 +41,7 @@ from sfdc_cdc_aws_spark.operators.text import (
     tokens_col,
     word_ngrams,
 )
+from sfdc_cdc_aws_spark.session import truncate_lineage
 from sfdc_cdc_aws_spark.sources import load_table
 from sfdc_cdc_aws_spark.sources.tables import data_files, read_parquet, scan_splits
 
@@ -612,8 +613,6 @@ def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     work stays spread over g(g+1)/2 shuffle keys per hot shingle; the
     number of over-cap lists rides along as the observed metric
     ``salted_posting_lists``, at zero extra jobs."""
-    from sfdc_cdc_aws_spark.session import truncate_lineage
-
     d = load_table(spark, sf_dir, "documents", widen=True)
     # ONE execution of the tokenize→shingle→md5 pipeline: the relation
     # feeds doc sizes, posting-list sizes AND both pair-expansion
@@ -828,7 +827,7 @@ def _connected_components(edges: DataFrame) -> tuple[DataFrame, int]:
     certifies the fixpoint just as well as one across a single round)
     — O(log D / CC_CHECK_EVERY) late-phase blocking collects,
     each moving one BIGINT to the driver, never row data."""
-    labels = _truncate_lineage(
+    labels = truncate_lineage(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
@@ -865,7 +864,7 @@ def _connected_components(edges: DataFrame) -> tuple[DataFrame, int]:
                     F.col("label"), F.coalesce("h_label", F.col("label"))
                 ).alias("label"),
             )
-        labels = _truncate_lineage(stepped)
+        labels = truncate_lineage(stepped)
         if _cc_check_round(it + 1) or it == MAX_CC_ITERS - 1:
             new_sum = labels.agg(F.sum("label")).collect()[0][0]
             if new_sum == prev_sum:
@@ -874,16 +873,6 @@ def _connected_components(edges: DataFrame) -> tuple[DataFrame, int]:
     raise RuntimeError(
         f"connected components did not converge in {MAX_CC_ITERS} iterations"
     )
-
-
-def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Cut the iterative loop's growing lineage — delegates to the
-    shared ``SPARK_GRAFT_CHECKPOINT_DIR``-aware helper
-    (session.truncate_lineage) so every lineage-truncation site in
-    the engine honors the same reliable-checkpoint escape hatch."""
-    from sfdc_cdc_aws_spark.session import truncate_lineage
-
-    return truncate_lineage(df)
 
 
 @query(
@@ -916,7 +905,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAX_CC_ITERS rather than silently stopping early. The oracle
     replays the same fixpoint as a recursive CTE."""
     pairs = minhash_lsh_dedup(spark, sf_dir).select("doc_a", "doc_b")
-    edges = _truncate_lineage(
+    edges = truncate_lineage(
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a"))).toDF("src", "dst")
     )
     labels, _rounds = _connected_components(edges)

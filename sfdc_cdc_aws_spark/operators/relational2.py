@@ -277,7 +277,7 @@ def skew_aqe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The skew SPLIT is an execution-time decision made from live map
     statistics, so it appears under the AQE_SKEW_CONFS window —
     tests/test_plan_shapes.py asserts ``SortMergeJoin(skew=true)`` in
-    the AQE final plan, and tools/skew_bench.py records naive vs AQE
+    the AQE final plan, and SKEW_BENCH.json keeps the naive vs AQE
     vs salted wall times (BASELINE.md). Without the window the query
     simply runs the statistics-chosen join — correctness never
     depends on the skew path taken. The load-bearing precondition is

@@ -747,7 +747,7 @@ def bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     df and the (avgdl, N) scalars broadcast; the dl join is gone —
     dl rides along inside the per-doc row. Per-term contributions
     round to 9 places and sum in DECIMAL(28,9); the final 6-dp
-    double is tolerance-laned in the x100 campaign (FLOAT_COLS —
+    double was compared with a tolerance at x100 (BENCH_SCALE100.json —
     bigram_lm_score went further and hashes an exact integer sum)."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(tokens_col()).alias("term"))

@@ -183,7 +183,7 @@ def quartet_ann_probe_plan(
     )
 
 
-def _quartet_oracle(ann_import: str | None = None) -> str:
+def _quartet_oracle() -> str:
     """Chained-CTE replay of the composed admission: per batch b, a
     doc is ADMITTED iff it passes the two stateless screens (gate,
     DSIR), has no near-vector in the ANN index as of batch b, and
@@ -193,17 +193,7 @@ def _quartet_oracle(ann_import: str | None = None) -> str:
     the vector index is corpus-split vectors ∪ vectors of prior
     admitted arrivals, each arrival vector entering at its top-1 IVF
     cell — so an arrival whose near-vector twin was admitted three
-    batches earlier is caught, exactly like the dup screen.
-
-    ``ann_import`` (round-13 verdict item 4): path to a parquet of
-    (doc_id, ann_pass) EXPORTED FROM SPARK. When set, the oracle's
-    chained ANN legs — the one part whose x100 DuckDB cost is the
-    intra-cell cosine pair space that filled the sandbox disk — are
-    replaced by the imported column, while gate, DSIR, the chained
-    dup admission, and the composed admitted verdict are all still
-    recomputed EXACTLY. This narrows the x100 exemption to the ANN
-    leg alone; the full oracle (ann_import=None) remains the
-    registered one and verifies end-to-end at x1/x10/sf0.1."""
+    batches earlier is caught, exactly like the dup screen."""
     batch = f"((doc_id // {ARRIVAL_MOD}) % {N_ADMIT_BATCHES})"
     dsir_alpha_cte = f"""
 arrivals AS (
@@ -320,17 +310,7 @@ gd AS (
   FROM sigs, unnest(generate_series(0, {N_BANDS - 1})) AS u(b)
 ),""",
         dsir_alpha_cte.strip() + ",",
-        (
-            f"""ann_imp AS (
-  SELECT doc_id, ann_pass FROM read_parquet('{ann_import}')
-),
-gd AS (
-  SELECT g.doc_id, (g.gate_pass AND d.dsir_pass) AS gd_pass
-  FROM gate g JOIN dsir d ON g.doc_id = d.doc_id
-),"""
-            if ann_import
-            else ann_cte.strip() + ","
-        ),
+        ann_cte.strip() + ",",
         f"""idx0 AS (
   SELECT band_id, bucket FROM bands WHERE doc_id % {ARRIVAL_MOD} <> 0
 ),""",
@@ -345,17 +325,8 @@ gd AS (
     AND ((a.doc_id // {ARRIVAL_MOD}) % {N_ADMIT_BATCHES}) = {b}
 ),"""
         )
-        if ann_import:
-            parts.append(
-                f"""annrej{b} AS (
-  SELECT doc_id FROM ann_imp
-  WHERE NOT ann_pass
-    AND ((doc_id // {ARRIVAL_MOD}) % {N_ADMIT_BATCHES}) = {b}
-),"""
-            )
-        else:
-            parts.append(
-                f"""annrej{b} AS (
+        parts.append(
+            f"""annrej{b} AS (
   SELECT DISTINCT p.query_id AS doc_id
   FROM vprobes p
   JOIN vidx{b} s ON s.cent_id = p.cent_id
@@ -364,7 +335,7 @@ gd AS (
         >= {NEARDUP_COS}
     AND ((p.query_id // {ARRIVAL_MOD}) % {N_ADMIT_BATCHES}) = {b}
 ),"""
-            )
+        )
         parts.append(
             f"""adm{b} AS (
   SELECT ar.doc_id FROM arrivals ar JOIN gd e ON ar.doc_id = e.doc_id
@@ -382,15 +353,14 @@ gd AS (
   WHERE doc_id IN (SELECT doc_id FROM adm{b})
 ),"""
             )
-            if not ann_import:
-                parts.append(
-                    f"""vidx{b + 1} AS (
+            parts.append(
+                f"""vidx{b + 1} AS (
   SELECT cent_id, embedding FROM vidx{b}
   UNION ALL
   SELECT cent_id, embedding FROM vassign
   WHERE vec_id IN (SELECT doc_id FROM adm{b})
 ),"""
-                )
+            )
     rej_union = " UNION ALL ".join(
         f"SELECT doc_id FROM rej{b}" for b in range(N_ADMIT_BATCHES)
     )

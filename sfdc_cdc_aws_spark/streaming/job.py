@@ -956,15 +956,15 @@ def _borrow_oracles() -> None:
 
     from sfdc_cdc_aws_spark.sources.cdc_feed import CHANGES_CTE
 
-    QUERIES["cdc_stream_tumbling"] = replace(
-        QUERIES["cdc_stream_tumbling"],
-        oracle=f"""
+    tumbling = f"""
 WITH {CHANGES_CTE}
 SELECT entity_name,
        commit_ts_ms - commit_ts_ms % 60000 AS window_start_ms,
        count(*) AS n_changes
 FROM changes GROUP BY 1, 2
-""",
+"""
+    QUERIES["cdc_stream_tumbling"] = replace(
+        QUERIES["cdc_stream_tumbling"], oracle=tumbling
     )
     QUERIES["cdc_stream_outer_join"] = replace(
         QUERIES["cdc_stream_outer_join"],
@@ -990,14 +990,7 @@ WHERE u_replay IS NOT NULL OR c_ms + 3600000 < wm.w
     # chained dedup+window over the DUPLICATED stream must equal the
     # plain tumbling counts (each change exactly once per window)
     QUERIES["cdc_stream_dedup_tumbling"] = replace(
-        QUERIES["cdc_stream_dedup_tumbling"],
-        oracle=f"""
-WITH {CHANGES_CTE}
-SELECT entity_name,
-       commit_ts_ms - commit_ts_ms % 60000 AS window_start_ms,
-       count(*) AS n_changes
-FROM changes GROUP BY 1, 2
-""",
+        QUERIES["cdc_stream_dedup_tumbling"], oracle=tumbling
     )
     QUERIES["cdc_stream_sliding"] = replace(
         QUERIES["cdc_stream_sliding"],

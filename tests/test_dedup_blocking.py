@@ -217,14 +217,14 @@ def test_connected_components_deep_chain_log_rounds(spark):
     from sfdc_cdc_aws_spark.operators.dedup import (
         MAX_CC_ITERS,
         _connected_components,
-        _truncate_lineage,
     )
+    from sfdc_cdc_aws_spark.session import truncate_lineage
 
     n = 256  # path 0-1-2-...-255, diameter 255
     fwd = spark.range(n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
-    edges = _truncate_lineage(
+    edges = truncate_lineage(
         fwd.union(fwd.select(F.col("dst"), F.col("src"))).toDF("src", "dst")
     )
     labels, rounds = _connected_components(edges)
@@ -241,11 +241,12 @@ def test_connected_components_blocking_collects_bounded(spark, monkeypatch):
     from pyspark.sql import functions as F
 
     from sfdc_cdc_aws_spark.operators import dedup as d
+    from sfdc_cdc_aws_spark.session import truncate_lineage
 
     fwd = spark.range(63).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
-    edges = d._truncate_lineage(
+    edges = truncate_lineage(
         fwd.union(fwd.select(F.col("dst"), F.col("src"))).toDF("src", "dst")
     )
     calls = {"n": 0}

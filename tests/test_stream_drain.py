@@ -1,7 +1,7 @@
-"""Mechanics of the warm-drain split (tools/stream_drain_bench.py):
+"""Mechanics of the warm-drain split (tools/stream_scale_bench.py::run):
 a checkpoint-resumed drain must process ONLY the newly-arrived files
 and the resumed state must equal the one-shot batch flagship. Timing
-is the tool's business (STREAM_DRAIN.json at sf0.1); these tests pin
+is the tool's business (STREAM_SCALE.json drain_split_*); these tests pin
 the semantics at sf0.001 so the measured split can't silently become
 a remeasure-everything run."""
 

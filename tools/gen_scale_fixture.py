@@ -164,43 +164,6 @@ def derive_tpch(base_dir: str, out: str, k: int) -> dict[str, int]:
     return rows
 
 
-def derive_tpch_stream(
-    base_dir: str, out: str, k: int, reps_per_batch: int = 10
-) -> dict[str, int]:
-    """derive_tpch for large k (the ×100 lane: 60M-row lineitem)
-    WITHOUT holding k replicas in memory at once: replicas stream
-    into a ParquetWriter reps_per_batch at a time, row-group size
-    pinned to the FULL table's write_scaled bound so scan
-    parallelism matches the one-shot writer's layout."""
-    rows = {}
-    os.makedirs(out, exist_ok=True)
-    for name, shifts in TPCH_KEY_SHIFTS.items():
-        t = pq.read_table(os.path.join(base_dir, f"{name}.parquet"))
-        src = t.to_pandas()
-        rg = max(4096, (len(src) * k) // 64)
-        path = os.path.join(out, f"{name}.parquet")
-        with pq.ParquetWriter(path, t.schema) as writer:
-            batch: list[pd.DataFrame] = []
-            for r in range(k):
-                rep = src if r == 0 else src.copy()
-                for col, stride in shifts.items():
-                    if r:
-                        rep[col] = rep[col] + r * stride
-                batch.append(rep)
-                if len(batch) == reps_per_batch or r == k - 1:
-                    writer.write_table(
-                        pa.Table.from_pandas(
-                            pd.concat(batch, ignore_index=True),
-                            schema=t.schema,
-                            preserve_index=False,
-                        ),
-                        row_group_size=rg,
-                    )
-                    batch = []
-        rows[name] = len(src) * k
-    return rows
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", default="/root/testdata/sf0.1")

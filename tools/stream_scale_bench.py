@@ -41,10 +41,6 @@ sys.path.insert(0, REPO)
 
 SF01 = "/root/testdata/sf0.1"
 SF1X = os.path.join(REPO, ".scale", "sf1x")
-# x100 events fixture (10M changes, built by tools/bench_scale100.py):
-# the tail-following bounded-state proof runs there too — state/feed
-# must stay flat across ALL THREE scales (round-9 verdict item 6)
-SF2 = os.path.join(REPO, ".scale", "sf2")
 
 STREAM_KEYS = [
     "cdc_stream_dedup_tumbling",
@@ -337,22 +333,6 @@ def main() -> int:
         print(f"missing 10x fixture {SF1X}; run tools/gen_scale_fixture.py first")
         return 2
 
-    if "--sf2-only" in sys.argv[1:]:
-        # incremental mode: add/refresh ONLY the x100 tail-follow block
-        # in the committed artifact (the sf01/sf1x suite is unchanged)
-        spark = get_session("stream_scale")
-        out_path = os.path.join(REPO, "STREAM_SCALE.json")
-        with open(out_path) as f:
-            out = json.load(f)
-        print("tail-following bounded-state proof at x100 ...", flush=True)
-        out["bounded_state_tail_follow"]["sf2"] = _tail_follow_bounded_state(
-            spark, SF2
-        )
-        with open(out_path, "w") as f:
-            json.dump(out, f, indent=1, sort_keys=True)
-        print("updated STREAM_SCALE.json (sf2 block)")
-        return 0
-
     spark = get_session("stream_scale")
     specs = load_all()
     # input prep outside timings: the wire landing for both SFs
@@ -390,13 +370,6 @@ def main() -> int:
         "sf01": _tail_follow_bounded_state(spark, SF01),
         "sf1x": _tail_follow_bounded_state(spark, SF1X),
     }
-    if os.path.exists(os.path.join(SF2, "events.parquet")) and not os.path.islink(
-        os.path.join(SF2, "events.parquet")
-    ):
-        print("tail-following bounded-state proof at x100 ...", flush=True)
-        out["bounded_state_tail_follow"]["sf2"] = _tail_follow_bounded_state(
-            spark, SF2
-        )
 
     print("warm-drain split at 10x ...", flush=True)
     out["drain_split_sf1x"] = run(spark, SF1X)
