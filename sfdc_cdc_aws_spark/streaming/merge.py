@@ -25,13 +25,16 @@ a plain-parquet state dir:
   it, no matter how many files have landed — so a crash at any point
   mid-write leaves only ignorable garbage; concurrent writers can
   never clobber each other's stage.
-- AUDIT: before publishing, the staged epoch is read back and checked
-  against the state invariants (Spark's ``_SUCCESS`` commit marker
-  present; row count and key uniqueness over the files on disk — this
-  IS a latest-per-key relation). The read-back is pinned to the schema
-  of the relation just written, so it launches no schema-inference
-  job. A failed audit raises and never publishes: bad data cannot
-  become current.
+- AUDIT: before publishing, the staged epoch's files are checked
+  against the state invariants on the driver, with pyarrow, launching
+  no Spark job: Spark's ``_SUCCESS`` commit marker is present, the row
+  count is the sum of the part files' footer ``num_rows``, and the
+  (entity_name, uid) key columns, the only columns read, are non-null
+  and unique — this IS a latest-per-key relation. The state's key
+  columns are held on the driver for the check; that costs a few ms at
+  15k rows, where a Spark job costs 60–150 ms whatever its bytes (see
+  ``_audit``). A failed audit raises and never publishes: bad data
+  cannot become current.
 - COMMIT (validate-and-swap): the winner for epoch N is elected by
   ``os.rename(stage_dir, epoch_NNNNNN)`` — atomic put-if-absent on a
   POSIX directory entry (rename onto an existing non-empty dir fails
@@ -97,6 +100,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 
@@ -112,6 +116,9 @@ _KEY = ("entity_name", "uid")
 _ORDER = ("commit_ts_ms", "replay_id")
 
 MANIFEST_NAME = "MANIFEST"
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+_EPOCH_NAME = re.compile(r"epoch_(\d{6,})")
 
 
 def _latest_per_key(df: DataFrame) -> DataFrame:
@@ -172,12 +179,13 @@ class IncrementalSnapshot:
         if m is None:
             return []
         out = []
-        for name in sorted(os.listdir(self.state_dir)):
-            if name.startswith("epoch_"):
-                n = int(name.split("_", 1)[1])
-                if n <= m["epoch"]:
-                    out.append(n)
-        return out
+        for name in os.listdir(self.state_dir):
+            # not a swept-aside ``epoch_NNNNNN.torn.<hex>`` slot, whose
+            # rmtree runs outside the lock and may be pending or failed
+            match = _EPOCH_NAME.fullmatch(name)
+            if match and int(match[1]) <= m["epoch"]:
+                out.append(int(match[1]))
+        return sorted(out)
 
     def _scan(self, n: int, manifest: dict) -> DataFrame:
         """Scan epoch ``n`` with the manifest's schema when ``n`` is the
@@ -211,25 +219,68 @@ class IncrementalSnapshot:
     # -- write side --------------------------------------------------------
 
     def _audit(self, staged: str, schema: T.StructType | None = None) -> dict:
-        """Read the staged epoch back, pinned to ``schema`` (the
-        relation its writer wrote; None for an orphan whose writer is
-        gone), and enforce the state invariants. Returns the manifest
-        fields: row count and the epoch's schema. Raises AuditError
-        (nothing published) on violation."""
+        """Check the staged epoch's files on disk against the state
+        invariants, on the driver, launching no Spark job: ``_SUCCESS``
+        is present; the row count is the sum of the part files' parquet
+        footer ``num_rows``; and the (entity_name, uid) pairs, read with
+        pyarrow from only those two columns, are unique and non-null
+        (as Spark's ``count_distinct`` skips a row with a null key
+        column, such a row fails here too). Part files are listed as
+        Spark lists them: ``_*`` and ``.*`` names are skipped. The key
+        columns of the whole state are held on the driver for the check.
+
+        This is not a Spark job because a job's fixed cost exceeds the
+        whole check at this size: the ``count(*)`` plus
+        ``count_distinct`` it replaces ran three jobs (two shuffles and
+        a result stage) and took 0.14–0.19 s of a 0.60–0.84 s upsert of
+        100 rows into a 15k-row state, against 0.004–0.005 s here; the
+        upsert went from 5 jobs to 2 (4-core VM, ``local[4]``). A
+        map-only stage could not prove the keys unique across part
+        files without bucketing.
+
+        Returns the manifest fields: the row count and the epoch's
+        schema, which is ``schema`` (the relation the writer wrote) or,
+        for an orphan whose writer is gone, the Spark schema the footer
+        carries. Raises AuditError (nothing published) on a violation or
+        a part file pyarrow cannot read."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         if not os.path.exists(os.path.join(staged, "_SUCCESS")):
             raise AuditError(f"staged epoch {staged} has no _SUCCESS marker")
-        df = read_parquet(self.spark, staged, schema=schema)
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.count_distinct(*[F.col(c) for c in _KEY]).alias("k"),
-        ).collect()[0]  # ONE audit job, not a count + a distinct-count
-        n, n_keys = row["n"], row["k"]
+        parts = sorted(
+            e.path
+            for e in os.scandir(staged)
+            if e.is_file() and not e.name.startswith(("_", "."))
+        )
+        if not parts:
+            raise AuditError(f"staged epoch {staged} has no part files")
+        footers, keys = [], []
+        try:
+            for path in parts:
+                with pq.ParquetFile(path) as f:
+                    footers.append(f.metadata)
+                    keys.append(f.read(columns=list(_KEY)))
+            if any(t.column_names != list(_KEY) for t in keys):
+                # pyarrow skips an absent column; Spark reads it as null
+                raise AuditError(f"staged epoch {staged} lacks a key column")
+            n_keys = (
+                pa.concat_tables(keys).drop_null().group_by(list(_KEY)).aggregate([]).num_rows
+            )
+        except (OSError, pa.ArrowException) as e:
+            raise AuditError(f"staged epoch {staged} is unreadable: {e}") from e
+        n = sum(m.num_rows for m in footers)
         if n != n_keys:
             raise AuditError(
                 f"staged epoch {staged} breaks latest-per-key: "
                 f"{n} rows over {n_keys} distinct keys"
             )
-        return {"rows": n, "schema": df.schema.jsonValue()}
+        if schema is not None:
+            return {"rows": n, "schema": schema.jsonValue()}
+        footer = (footers[0].metadata or {}).get(_SPARK_SCHEMA)
+        if footer is None:
+            raise AuditError(f"staged epoch {staged} carries no Spark schema")
+        return {"rows": n, "schema": json.loads(footer)}
 
     def _publish(self, epoch: int, audit: dict) -> None:
         """Atomically flip MANIFEST to the audited epoch (fsync'd temp

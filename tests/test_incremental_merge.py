@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -449,4 +450,119 @@ def test_sigkill_between_commit_and_publish_recovers(spark, tmp_path):
     # the dead writer's flock was kernel-released.
     snap.upsert(ch)
     assert json.load(open(snap._manifest_path))["epoch"] == 2
+    assert _state_rows(snap) == _flagship_rows(spark)
+
+
+def _stage_by_hand(snap, df, n_files=1):
+    """Write ``df`` at the next epoch's path the way a writer stages
+    it (complete Spark parquet write with ``_SUCCESS``)."""
+    staged = snap._epoch_dir(1)
+    df.repartition(n_files).write.mode("overwrite").parquet(staged)
+    return staged
+
+
+def _part_files(staged):
+    return sorted(
+        os.path.join(staged, f) for f in os.listdir(staged) if f.startswith("part-")
+    )
+
+
+def test_audit_rejects_unreadable_part_file(spark, tmp_path):
+    """A staged part file that is not parquet, or is truncated, fails
+    the audit; the manifest stays on the published epoch."""
+    from sfdc_cdc_aws_spark.streaming.merge import _latest_per_key
+
+    snap = IncrementalSnapshot(spark, str(tmp_path / "state"))
+    ch = changes(spark, SF)
+    snap.upsert(ch.limit(500))
+    manifest_before = json.load(open(snap._manifest_path))
+
+    staged = _stage_by_hand(snap, _latest_per_key(ch), n_files=2)
+    first, second = _part_files(staged)
+    with open(first, "wb") as f:
+        f.write(b"\x00not a parquet footer")
+    with pytest.raises(AuditError, match="unreadable"):
+        snap._audit(staged)
+
+    staged = _stage_by_hand(snap, _latest_per_key(ch))
+    (part,) = _part_files(staged)
+    data = open(part, "rb").read()
+    with open(part, "wb") as f:
+        f.write(data[: len(data) // 2])
+    with pytest.raises(AuditError, match="unreadable"):
+        snap._audit(staged)
+    assert json.load(open(snap._manifest_path)) == manifest_before
+
+
+def test_upsert_whose_stage_is_corrupted_publishes_nothing(spark, tmp_path, monkeypatch):
+    """A part file truncated between the staged write and the audit
+    makes the upsert raise AuditError: no epoch is committed, the
+    manifest is unchanged and the stage is discarded."""
+    import sfdc_cdc_aws_spark.streaming.merge as merge_mod
+
+    state = str(tmp_path / "state")
+    snap = IncrementalSnapshot(spark, state)
+    ch = changes(spark, SF)
+    snap.upsert(ch.limit(500))
+    manifest_before = json.load(open(snap._manifest_path))
+    before = _state_rows(snap)
+
+    real_fsync_tree = merge_mod.fsync_tree
+
+    def truncate_then_fsync(path):
+        for part in _part_files(path):
+            data = open(part, "rb").read()
+            with open(part, "wb") as f:
+                f.write(data[: len(data) // 2])
+        real_fsync_tree(path)
+
+    monkeypatch.setattr(merge_mod, "fsync_tree", truncate_then_fsync)
+    with pytest.raises(AuditError):
+        snap.upsert(ch)
+    monkeypatch.undo()
+
+    assert json.load(open(snap._manifest_path)) == manifest_before
+    assert not os.path.exists(snap._epoch_dir(1))
+    assert [d for d in os.listdir(state) if d.startswith("stage_")] == []
+    assert _state_rows(snap) == before
+
+
+def test_audit_rejects_null_key(spark, tmp_path):
+    """A row with a null ``uid`` fails the audit even when every key is
+    distinct, as Spark's ``count_distinct`` skips it; an upsert whose
+    delta carries one raises and publishes nothing."""
+    from pyspark.sql import functions as F
+
+    from sfdc_cdc_aws_spark.streaming.merge import _latest_per_key
+
+    snap = IncrementalSnapshot(spark, str(tmp_path / "state"))
+    ch = changes(spark, SF)
+    snap.upsert(ch.limit(500))
+    manifest_before = json.load(open(snap._manifest_path))
+
+    latest = _latest_per_key(ch)
+    one = latest.limit(1).withColumn("uid", F.lit(None).cast("long"))
+    staged = _stage_by_hand(snap, latest.unionByName(one))
+    with pytest.raises(AuditError, match="latest-per-key"):
+        snap._audit(staged)
+    shutil.rmtree(staged)
+
+    with pytest.raises(AuditError, match="latest-per-key"):
+        snap.upsert(ch.limit(10).withColumn("uid", F.lit(None).cast("long")))
+    assert json.load(open(snap._manifest_path)) == manifest_before
+
+
+def test_leftover_torn_dir_leaves_reads_and_upserts_working(spark, tmp_path):
+    """A swept-aside torn slot whose removal never ran
+    (``epoch_NNNNNN.torn.<hex>``) is not an epoch: ``epochs()``,
+    ``read_epoch`` and the next upsert (whose GC lists epochs) work."""
+    snap = IncrementalSnapshot(spark, str(tmp_path / "state"))
+    ch = changes(spark, SF)
+    snap.upsert(ch.limit(500))
+    os.makedirs(snap._epoch_dir(1) + ".torn.x")
+
+    assert snap.epochs() == [0]
+    assert snap.read_epoch(0).count() == snap.read().count()
+    snap.upsert(ch)
+    assert snap.epochs() == [0, 1]
     assert _state_rows(snap) == _flagship_rows(spark)

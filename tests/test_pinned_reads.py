@@ -145,6 +145,36 @@ def test_one_row_upsert_runs_at_most_five_jobs_none_inference(spark, tmp_path, m
     assert snap.read().where("uid = 7").select("commit_ts_ms").first()[0] == 2
 
 
+def test_one_row_upsert_runs_at_most_two_jobs(spark, tmp_path):
+    """A 1-row upsert into a 2,000-row state runs the merge aggregate
+    and its write; the audit reads the staged files on the driver."""
+    snap = IncrementalSnapshot(spark, str(tmp_path / "state"))
+    snap.upsert(_rows(spark, range(2_000), 1))
+    batch = _rows(spark, [7], 2)
+    _, n_jobs = _jobs(spark, "one_row_upsert_2", lambda: snap.upsert(batch))
+    assert n_jobs <= 2
+    assert snap._read_manifest()["rows"] == 2_000
+
+
+def test_orphan_audit_runs_no_job_and_reads_the_writers_schema(spark, tmp_path):
+    """Auditing an orphan epoch (no schema passed, as in crash
+    recovery) launches no Spark job and returns the schema of the
+    relation the writer wrote, from the parquet footer."""
+    from sfdc_cdc_aws_spark.streaming.merge import _latest_per_key
+
+    snap = IncrementalSnapshot(spark, str(tmp_path / "state"))
+    snap.upsert(_rows(spark, range(2_000), 1))
+    merged = _latest_per_key(
+        snap.read().unionByName(_rows(spark, range(1_990, 2_010), 2))
+    )
+    orphan = snap._epoch_dir(1)
+    merged.coalesce(4).write.parquet(orphan)
+
+    audit, n_jobs = _jobs(spark, "orphan_audit", lambda: snap._audit(orphan))
+    assert n_jobs == 0
+    assert audit == {"rows": 2_010, "schema": merged.schema.jsonValue()}
+
+
 def test_legacy_manifest_without_schema_is_read_by_inference(spark, tmp_path):
     """A MANIFEST written before the schema was recorded still reads,
     and the next upsert publishes one that carries it."""
